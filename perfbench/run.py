@@ -5,24 +5,31 @@
         --seconds 12 --trace 0
 
 Run from the repository root.  Each run starts one driver process with a
-``local[nproc]`` session (shuffle partitions = nproc), generates its
-inputs deterministically (``datagen.py``; the tables never depend on the
-seed), and measures:
+``local[nproc]`` session (shuffle partitions = nproc) over the test
+fixture tables committed under ``perfbench/fixtures/sf<sf>/`` (read-only
+copies; the seed never changes them), and measures:
 
 * ``batch``: every query of the workload once in a fresh cache scope
   (the cold pass), then checks each query's collected output against its
   ``oracle_sql()`` DuckDB twin (untimed), then repeats warm passes for
-  ``--seconds``.  Each timed call is ``queries()[name](spark, sf)`` plus
-  ``toPandas()``: the time until the complete result is in the driver.
+  at least ``--seconds`` and at least the workload's ``min_warm`` times.
+  Each timed call is ``queries()[name](spark, sf)`` plus ``toPandas()``:
+  the time until the complete result is in the driver.
   The seed permutes the query order of every pass.
 * ``stream_replay``: the events table, replicated with distinct ids into
-  per-replica time regions (the seed shifts them), written as an
-  event-time-ordered spool and replayed through ``file_stream`` with a
-  fixed ``max_files_per_trigger`` into each gate in turn.  Each drain is
+  per-replica time regions (the seed shifts them), with some ids
+  repeated, written as an event-time-ordered spool and replayed through
+  ``file_stream`` with a fixed ``max_files_per_trigger`` into each gate
+  in turn, in a fixed order, round after round.  Each drain is
   a fresh query that starts, runs ``processAllAvailable`` and stops
   (closed loop).  Each gate's output row count is checked against a
-  numpy reference over the spool, and its final state must fit in one
-  micro-batch.
+  reference over the spool (the dedup reference replays the spool file by
+  file through a within-watermark dedup), and its final state must fit in
+  one micro-batch.
+
+``setup_s`` is the median of ``SETUPS`` set-ups, each timed from the start
+of a fresh process: this run's own, and more in child processes
+(``--setup-only``) after the workload has stopped its JVM.
 
 With ``--trace 1`` the run also reads the per-layer numbers from Spark's
 status store and ``StreamingQuery.recentProgress`` and writes its spans
@@ -45,6 +52,7 @@ import random  # noqa: E402
 import shutil  # noqa: E402
 import signal  # noqa: E402
 import statistics  # noqa: E402
+import subprocess  # noqa: E402
 import sys  # noqa: E402
 import threading  # noqa: E402
 import traceback  # noqa: E402
@@ -56,27 +64,40 @@ sys.path.insert(0, HERE)
 
 from workloads import END_TO_END, LAYER_METRICS, WORKLOADS  # noqa: E402
 
-#: scale factor of the generated tables (60k lineitem rows, 10k events)
-DEFAULT_SF = 0.01
-#: driver heap: the inputs are small and the host's memory is shared
+FIXTURES = os.path.join(HERE, "fixtures")
+#: scale factor of the fixture tables (60k lineitem rows, 10k events)
+DEFAULT_SF = "0.01"
+#: driver heap.  Under the engine's 8g default, peak RSS followed the
+#: JVM's adaptive young generation more than the workload: 2,065-3,695 MB
+#: over ten batch runs and 1,550-3,117 MB over five stream runs, against
+#: 1,332-1,650 MB and 978-1,236 MB at 1g
 DRIVER_MEM = "1g"
-#: set-ups per run; ``setup_s`` is their median
-SETUPS = 3
-#: measured warm passes (rounds) at least; one more, untimed, precedes
-#: them because the first pass after the cold one is still warming up
-MIN_WARM = 2
-PASS_KINDS = ("cold", "warmup", "warm")
+#: set-ups per run, each from a fresh process start; ``setup_s`` is
+#: their median.  Each pays a JVM launch (about 11 s on 4 cores), so a
+#: third would add a fifth to a run's wall
+SETUPS = 2
+PASS_KINDS = ("cold", "warm")
 #: a run that is still going after this long kills its process tree
 DEADLINE_S = 170.0
 #: streaming spool: replicas of the events table, files, files per trigger
 REPLICAS = 2
-SPOOL_FILES = 2
+SPOOL_FILES = 4
 FILES_PER_TRIGGER = 1
 #: id offset between replicas, and the span of one replica's time region
+#: (the events fixture spans 30 days)
 REPLICA_ID_STRIDE = 100_000_000
 REPLICA_REGION_DAYS = 32
+DAY_US = 86_400 * 1_000_000
 #: event-time window of the window gate
-WINDOW, WINDOW_US = "1 day", 86_400 * 1_000_000
+WINDOW, WINDOW_US = "1 day", DAY_US
+#: the dedup gate's horizon, which is also its watermark delay
+DEDUP_WITHIN, DEDUP_WITHIN_US = "10 minutes", 600 * 1_000_000
+#: repeated event ids in the spool, as shares of the replicated events:
+#: near copies 1 s to 5 min after their original (inside the horizon, so
+#: the dedup drops them) and far copies a replica region and a day later
+#: (after the original's state was evicted, so the dedup emits them)
+NEAR_DUP_SHARE, NEAR_DUP_MAX_US = 0.05, 300 * 1_000_000
+FAR_DUP_SHARE, FAR_DUP_SHIFT_US = 0.05, (REPLICA_REGION_DAYS + 1) * DAY_US
 SENTINEL_USER = -1
 
 
@@ -107,20 +128,27 @@ def process_tree(root: int) -> dict[int, int]:
 
 
 def tree_rss_bytes(root: int) -> int:
-    """RSS summed over the process tree.  A child caught between a
-    ``vfork`` and its ``exec`` (the JVM spawning a helper) still shares
-    its parent's memory and reports the parent's size: it counts once."""
-    statm: dict[int, tuple[str, str]] = {}
+    """RSS summed over the process tree.  A child that still runs its
+    parent's executable and is not a Python worker (pyspark's daemon forks
+    those, and they then live on their own memory) is caught between the
+    clone and the ``exec`` of a helper the JVM starts (``chmod``,
+    ``readlink``, ...).  It shares the JVM's memory and reports the JVM's
+    size, so it counts for nothing."""
+    rss: dict[int, int] = {}
+    exe: dict[int, str] = {}
     tree = process_tree(root)
     for pid in tree:
         try:
+            exe[pid] = os.readlink(f"/proc/{pid}/exe")
             with open(f"/proc/{pid}/statm") as f:
-                statm[pid] = tuple(f.read().split()[:2])
+                rss[pid] = int(f.read().split()[1])
         except OSError:
             continue
     page = os.sysconf("SC_PAGE_SIZE")
-    return sum(int(m[1]) * page for pid, m in statm.items()
-               if statm.get(tree[pid]) != m)
+    return page * sum(
+        pages for pid, pages in rss.items()
+        if exe[pid] != exe.get(tree[pid])
+        or "python" in os.path.basename(exe[pid]))
 
 
 class RssSampler(threading.Thread):
@@ -194,14 +222,39 @@ def configure_env(run_dir: str, nproc: int) -> None:
         "pyspark-shell")
 
 
-def start_session(engine, entry):
-    """One set-up: session up (a first job ran), registry imported."""
-    spark = engine.get_spark("perfbench")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1).count()
-    entry = importlib.reload(entry) if entry else importlib.import_module(
-        "__spark_entry__")
-    return spark, entry, entry.queries()
+def set_up(ctx) -> float:
+    """One set-up in this process: the spool written (stream workloads),
+    the session up with a first job run, and the registry imported.
+    Returns the seconds since this process started."""
+    if ctx.workload.kind == "stream":
+        ctx.spool_dir = os.path.join(ctx.run_dir, "spool")
+        ctx.spool = write_spool(os.path.join(ctx.sf_dir, "events.parquet"),
+                                ctx.spool_dir, ctx.seed)
+    sys.path.insert(0, ROOT)
+    from apache_beam_spark import engine
+
+    ctx.spark = engine.get_spark("perfbench")
+    ctx.spark.sparkContext.setLogLevel("ERROR")
+    ctx.spark.range(1).count()
+    ctx.entry = importlib.import_module("__spark_entry__")
+    ctx.queries = ctx.entry.queries()
+    return time.time() - T_PROCESS
+
+
+def child_set_ups(args, n: int) -> list[float]:
+    """``n`` more set-ups, each in a fresh process that exits after it."""
+    out = []
+    for _ in range(n):
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--workload",
+             args.workload, "--seed", str(args.seed), "--seconds",
+             str(args.seconds), "--sf", args.sf, "--setup-only"],
+            cwd=ROOT, capture_output=True, text=True, timeout=90)
+        if proc.returncode != 0:
+            raise RuntimeError("set-up process failed:\n"
+                               + proc.stderr[-2000:])
+        out.append(json.loads(proc.stdout.strip().splitlines()[-1])["setup_s"])
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -299,32 +352,31 @@ def run_batch(ctx) -> dict:
 
         ok = [n for n in names if n in cold and n not in ctx.failures]
 
-        def warm_pass(kind: str) -> None:
-            span = ctx.begin_pass(kind)
+        def warm_pass() -> None:
+            span = ctx.begin_pass("warm")
             for name in rng.sample(ok, len(ok)):
                 try:
                     wall = timed(name, span)
                 except Exception:
-                    ctx.fail(name, f"raised in a {kind} pass:\n"
+                    ctx.fail(name, "raised in a warm pass:\n"
                              + traceback.format_exc())
                     ok.remove(name)
                     continue
                 if len(results[name]) != want_rows[name]:
-                    ctx.fail(name, f"{kind} pass returned "
+                    ctx.fail(name, f"warm pass returned "
                              f"{len(results[name])} rows, oracle "
                              f"{want_rows[name]}")
                     ok.remove(name)
-                elif kind == "warm":
+                else:
                     warm[name].append(wall)
             ctx.end_pass(span)
-            ctx.log(f"{kind} pass done")
+            ctx.log("warm pass done")
 
-        warm_pass("warmup")
         t_warm, last, passes = time.time(), 0.0, 0
-        while ok and (passes < MIN_WARM
+        while ok and (passes < ctx.workload.min_warm
                       or time.time() - t_warm + last <= ctx.seconds):
             t_pass = time.time()
-            warm_pass("warm")
+            warm_pass()
             passes += 1
             last = time.time() - t_pass
 
@@ -347,12 +399,13 @@ def run_batch(ctx) -> dict:
 # --------------------------------------------------------------------------
 
 def write_spool(events_path: str, spool_dir: str, seed: int) -> dict:
-    """Replicate the events table into per-replica time regions and write
-    it as ``SPOOL_FILES`` files, each a contiguous event-time range, with
-    increasing modification times so the file source replays them in
-    event-time order.  The last file ends with a sentinel event that
-    pushes the watermark past every real window.  Returns the spool's
-    facts."""
+    """Replicate the events table into per-replica time regions (the seed
+    shifts them), add near and far copies of some events under the same
+    event id, and write the lot as ``SPOOL_FILES`` files, each a
+    contiguous event-time range, with increasing modification times so
+    the file source replays them in event-time order.  The last file ends
+    with a sentinel event that pushes the watermark past every real
+    window.  Returns the spool's facts."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -362,35 +415,65 @@ def write_spool(events_path: str, spool_dir: str, seed: int) -> dict:
     # the fixture's ts is TIMESTAMP_NTZ, which watermarks reject; the spool
     # carries UTC timestamps, as a stream source would
     utc = pa.timestamp("us", tz="UTC")
-    rng = random.Random(seed)
-    day_us = 86_400 * 1_000_000
+    base_us = base["ts"].cast(pa.timestamp("us")).cast(pa.int64())
+    rng = np.random.default_rng(seed)
+    ts_at = base.schema.get_field_index("ts")
+
+    def with_ts(table, ts_us):
+        return table.set_column(ts_at, "ts", pa.array(ts_us, pa.int64())
+                                .cast(utc))
+
     parts = []
     for i in range(REPLICAS):
-        shift_us = (i * REPLICA_REGION_DAYS + rng.random()) * day_us
-        ts = pc.add(base["ts"].cast(pa.int64()), int(shift_us))
-        parts.append(base.set_column(
-            base.schema.get_field_index("ts"), "ts",
-            ts.cast(utc)).set_column(
+        shift_us = int((i * REPLICA_REGION_DAYS + rng.random()) * DAY_US)
+        parts.append(with_ts(base, pc.add(base_us, shift_us)).set_column(
             0, "event_id", pc.add(base["event_id"], i * REPLICA_ID_STRIDE)))
-    spool = pa.concat_tables(parts).sort_by("ts")
-    sentinel = pa.table({
+    rows = pa.concat_tables(parts).sort_by("ts")
+    ts = rows["ts"].cast(pa.int64()).to_numpy()
+    n = rows.num_rows
+    # file k holds the events from cuts[k - 1] up to cuts[k]: equal
+    # shares of the replicated events
+    cuts = ts[np.linspace(0, n, SPOOL_FILES + 1).astype(int)[1:-1]]
+    pick = rng.permutation(n)
+    n_near = int(n * NEAR_DUP_SHARE)
+    near = pick[:n_near]
+    near_ts = ts[near] + rng.integers(1_000_000, NEAR_DUP_MAX_US, n_near)
+    # far copies repeat events of the first file whose state the dedup
+    # evicts at the end of the second micro-batch, when the watermark
+    # stands at the first file's last event minus the horizon; an hour's
+    # margin keeps each eviction clear of the watermark
+    so_far = np.concatenate([ts, near_ts])
+    evict_wm = so_far[so_far < cuts[0]].max() - DEDUP_WITHIN_US
+    rest = pick[n_near:]
+    far = rest[ts[rest] + DEDUP_WITHIN_US < evict_wm - 3600 * 1_000_000]
+    far = far[:int(n * FAR_DUP_SHARE)]
+    spool = pa.concat_tables([
+        rows, with_ts(rows.take(near), near_ts),
+        with_ts(rows.take(far), ts[far] + FAR_DUP_SHIFT_US)]).sort_by(
+        [("ts", "ascending"), ("event_id", "ascending")])
+    last_us = spool["ts"].cast(pa.int64())[-1].as_py()
+    sentinel = with_ts(pa.table({
         "event_id": pa.array([-1], pa.int64()),
-        "ts": pa.array([spool["ts"][-1].value + 2 * day_us], utc),
+        "ts": pa.array([0], pa.int64()),
         "user_id": pa.array([SENTINEL_USER], pa.int64()),
-        "event_type": ["view"], "value": [0.0], "props": ['{"k": 0}']},
-        schema=spool.schema)
+        "event_type": ["view"], "value": [0.0], "props": ['{"k": 0}']}),
+        [last_us + 2 * DAY_US]).cast(spool.schema)
     spool = pa.concat_tables([spool, sentinel])
+    file_of = np.searchsorted(
+        cuts, spool["ts"].cast(pa.int64()).to_numpy(), side="right")
+    bounds = np.searchsorted(file_of, np.arange(SPOOL_FILES + 1))
+    files = [spool.slice(bounds[k], bounds[k + 1] - bounds[k])
+             for k in range(SPOOL_FILES)]
     os.makedirs(spool_dir)
-    bounds = np.linspace(0, spool.num_rows, SPOOL_FILES + 1).astype(int)
     mtime = time.time() - 3600
-    for k in range(SPOOL_FILES):
+    for k, part in enumerate(files):
         path = os.path.join(spool_dir, f"part-{k:05d}.parquet")
-        pq.write_table(spool.slice(bounds[k], bounds[k + 1] - bounds[k]),
-                       path)
+        pq.write_table(part, path)
         os.utime(path, (mtime + k, mtime + k))
     return {"events": spool.num_rows - 1,
-            "expected": expected_rows(spool),
-            "max_file_rows": int(max(np.diff(bounds)))}
+            "near_copies": len(near), "far_copies": len(far),
+            "expected": expected_rows(files),
+            "max_file_rows": max(f.num_rows for f in files)}
 
 
 def gate_builders(spark, spool_dir: str):
@@ -416,27 +499,56 @@ def gate_builders(spark, spool_dir: str):
 
     def dedup(src):
         return streaming_distinct(src, ["event_id"], "ts",
-                                  within="10 minutes")
+                                  within=DEDUP_WITHIN)
 
     return stream, {"window": window, "dedup": dedup}
 
 
-def expected_rows(spool) -> dict:
-    """Output rows each gate must emit, computed from the spool with numpy
-    as an independent reference.  The sentinel's own window never closes,
-    so the window gate leaves it out; dedup emits it."""
+def expected_rows(files) -> dict:
+    """Output rows each gate must emit, computed from the spool files
+    without Spark as an independent reference.  The sentinel's own window
+    never closes, so the window gate leaves it out; dedup emits it."""
     import numpy as np
+    import pyarrow as pa
 
+    spool = pa.concat_tables(files)
     ts = spool["ts"].cast("int64").to_numpy()
     kind = spool["event_type"].to_numpy(zero_copy_only=False)
-    user = spool["user_id"].to_numpy()
-    real = user != SENTINEL_USER
+    real = spool["user_id"].to_numpy() != SENTINEL_USER
     day = ts // WINDOW_US
     _, per_window = np.unique(
         np.stack([np.unique(kind, return_inverse=True)[1][real], day[real]]),
         axis=1, return_counts=True)
     return {"window": len(per_window),
-            "dedup": len(np.unique(spool["event_id"].to_numpy()))}
+            "dedup": dedup_survivors(
+                [(f["event_id"].to_numpy(), f["ts"].cast("int64").to_numpy())
+                 for f in files])}
+
+
+def dedup_survivors(batches) -> int:
+    """Rows a within-watermark dedup emits when fed ``batches`` of
+    ``(event ids, event-time us)`` one micro-batch each.  An id is
+    emitted unless it is held in state; an emitted id is held until the
+    watermark passes its event time plus the horizon, and expired ids
+    are evicted at the end of each micro-batch.  The watermark of a
+    micro-batch is the largest event time of the earlier ones minus the
+    horizon; rows at or below it are late and dropped."""
+    held: dict[int, int] = {}
+    watermark = None
+    emitted = 0
+    for ids, ts in batches:
+        for key, t in zip(ids.tolist(), ts.tolist()):
+            if watermark is not None and t <= watermark:
+                continue
+            if key not in held:
+                held[key] = t + DEDUP_WITHIN_US
+                emitted += 1
+        if watermark is not None:
+            held = {k: e for k, e in held.items() if e >= watermark}
+        if len(ts):
+            top = int(ts.max()) - DEDUP_WITHIN_US
+            watermark = top if watermark is None else max(watermark, top)
+    return emitted
 
 
 def drain_round(ctx, names: list[str], build, pass_span) -> dict:
@@ -536,15 +648,13 @@ def run_stream(ctx) -> dict:
     stream, gates = gate_builders(spark, ctx.spool_dir)
     want = facts["expected"]
     names = list(ctx.workload.items)
-    rng = random.Random(ctx.seed)
     warm: dict[str, list[float]] = {n: [] for n in names}
     warm_progress: dict[str, list[list[dict]]] = {n: [] for n in names}
 
     def round_(kind: str, names: list[str]) -> dict[str, float]:
         span = ctx.begin_pass(kind)
         walls = {}
-        done = drain_round(ctx, rng.sample(names, len(names)),
-                           lambda n: gates[n](stream()), span)
+        done = drain_round(ctx, names, lambda n: gates[n](stream()), span)
         ctx.end_pass(span)
         for name, res in done.items():
             if isinstance(res, str):
@@ -560,11 +670,9 @@ def run_stream(ctx) -> dict:
     cold = round_("cold", names)
     ctx.canary()
     ok = [n for n in names if n in cold and n not in ctx.failures]
-    round_("warmup", ok)
-    ok = [n for n in ok if n not in ctx.failures]
     t_warm, last, rounds = time.time(), 0.0, 0
-    while ok and (rounds < MIN_WARM or time.time() - t_warm + last
-                  <= ctx.seconds):
+    while ok and (rounds < ctx.workload.min_warm
+                  or time.time() - t_warm + last <= ctx.seconds):
         t_round = time.time()
         for name, wall in round_("warm", ok).items():
             warm[name].append(wall)
@@ -627,7 +735,7 @@ class Context:
         print(f"# FAIL {name}: {why}", file=sys.stderr)
 
     def begin_pass(self, kind: str):
-        """Open a pass span; ``kind`` is cold, warmup or warm."""
+        """Open a pass span; ``kind`` is cold or warm."""
         span = self.tracer.add(f"{kind}-pass", time.time(), 0.0, None,
                                kind="pass")
         self.passes[kind].append(span)
@@ -704,60 +812,53 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--sf", type=float, default=DEFAULT_SF,
-                    help="scale factor of the generated tables")
+    ap.add_argument("--sf", default=DEFAULT_SF,
+                    help="scale factor of the fixture tables, a directory "
+                    "sf<sf> under perfbench/fixtures")
+    ap.add_argument("--setup-only", action="store_true",
+                    help="time one set-up in this process, print it, exit")
     args = ap.parse_args(argv)
 
-    if not os.path.exists(os.path.join(ROOT, "__spark_entry__.py")):
-        print("perfbench: no __spark_entry__.py beside perfbench/; run it "
-              "from a checkout of the repository", file=sys.stderr)
-        return 2
+    sf_dir = os.path.join(FIXTURES, f"sf{args.sf}")
+    for need in (os.path.join(ROOT, "__spark_entry__.py"), sf_dir):
+        if not os.path.exists(need):
+            print(f"perfbench: {os.path.relpath(need, ROOT)} is missing; run "
+                  "it from a checkout of the repository", file=sys.stderr)
+            return 2
     watchdog = threading.Timer(DEADLINE_S, kill_tree_and_exit, (3,))
     watchdog.daemon = True
     watchdog.start()
 
-    import datagen
-
-    t_inputs = time.time()
     workload = WORKLOADS[args.workload]
     nproc = len(os.sched_getaffinity(0))
     work = os.path.join(ROOT, ".perfbench")
-    sf_dir = datagen.write_tables(args.sf,
-                                  os.path.join(work, "data", f"sf{args.sf}"))
     run_dir = os.path.join(work, "runs", uuid.uuid4().hex[:12])
     os.makedirs(run_dir)
     configure_env(run_dir, nproc)
     os.chdir(run_dir)
+    tables = sorted(p[:-len(".parquet")] for p in os.listdir(sf_dir)
+                    if p.endswith(".parquet"))
+    ctx = Context(args, workload, run_dir, sf_dir, tables)
+
+    if args.setup_only:
+        try:
+            setup_s = set_up(ctx)
+        finally:
+            if ctx.spark is not None:
+                ctx.spark.stop()
+                stop_jvm()
+            shutil.rmtree(run_dir, ignore_errors=True)
+        watchdog.cancel()
+        print(json.dumps({"setup_s": setup_s}))
+        return 0
+
     steal0, total0 = cpu_jiffies()
     sampler = RssSampler()
     sampler.start()
-    tables = [os.path.basename(p)[:-8] for p in os.listdir(sf_dir)
-              if p.endswith(".parquet")]
-    ctx = Context(args, workload, run_dir, sf_dir, tables)
-
     try:
-        if workload.kind == "stream":
-            ctx.spool_dir = os.path.join(run_dir, "spool")
-            ctx.spool = write_spool(os.path.join(sf_dir, "events.parquet"),
-                                    ctx.spool_dir, args.seed)
-        inputs_s = time.time() - t_inputs
-        sys.path.insert(0, ROOT)
-        from apache_beam_spark import engine
-
-        setups = []
-        entry = None
-        t0 = T_PROCESS
-        for _ in range(SETUPS):
-            if ctx.spark is not None:
-                ctx.spark.stop()
-                t0 = time.time()
-            ctx.spark, entry, ctx.queries = start_session(engine, entry)
-            setups.append(time.time() - t0)
-        # the first set-up ran from process start: leave out the
-        # benchmark's own input generation, which no program change moves
-        setups[0] -= inputs_s
-        ctx.entry = entry
-        ctx.log(f"set-ups {setups}, inputs {inputs_s:.2f}s")
+        setups = [set_up(ctx)]
+        if ctx.spool:
+            ctx.log("spool " + json.dumps(ctx.spool))
         if args.trace:
             from tracing import StatusStoreReader
 
@@ -775,6 +876,10 @@ def main(argv: list[str] | None = None) -> int:
             stop_jvm()
         peak = sampler.stop()
         shutil.rmtree(run_dir, ignore_errors=True)
+    # the other set-ups run once this run's JVM is gone, so they compete
+    # with nothing the benchmark started
+    setups += child_set_ups(args, SETUPS - 1)
+    ctx.log(f"set-ups {setups}")
     steal1, total1 = cpu_jiffies()
     watchdog.cancel()
     ctx.log("stopped")

@@ -42,6 +42,28 @@ def test_covered_merges_and_clips():
     assert covered([], 0, 1) == 0
 
 
+def test_dedup_reference():
+    import numpy as np
+
+    from run import DEDUP_WITHIN_US as H, dedup_survivors
+
+    def batch(*pairs):
+        keys, times = zip(*pairs)
+        return np.array(keys), np.array(times)
+
+    # ids 1 and 2 are held until the watermark passes H.  Batch 0 drops
+    # a near copy of 1, batch 1 a copy of 2 (watermark -H/2, nothing
+    # evicted); batch 2 emits 3 and, at watermark 9H, evicts 1 and 2;
+    # batch 3 emits the far copy of 1 again and drops a late row
+    batches = [batch((1, 0), (2, 0), (1, H // 2)),
+               batch((2, 10 * H)),
+               batch((3, 20 * H)),
+               batch((1, 30 * H), (4, 5 * H))]
+    assert dedup_survivors(batches) == 4
+    # with no second batch between them, the far copy is still held
+    assert dedup_survivors([batches[0], batch((1, 30 * H))]) == 2
+
+
 def test_parse_sql_metric():
     assert parse_sql_metric("total (min, med, max (stageId: taskId))\n"
                             "1.5 KiB (2 B, 3 B, 4 B (stage 1.0: task 2))"

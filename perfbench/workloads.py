@@ -19,6 +19,9 @@ class Workload:
     #: named groups of items (queries or gates), each with the reason it
     #: is there; a per-layer metric ``<group>.warm_s`` reports each group
     groups: dict[str, tuple[str, ...]]
+    #: warm passes (rounds) at least, so the median of each item's warm
+    #: walls rejects a slow pass
+    min_warm: int
     #: layer shares the traced run measured, one line each
     measured: tuple[str, ...] = field(default=())
 
@@ -47,14 +50,16 @@ WORKLOADS = {
             "exec_bound": ("q1_pricing_summary", "bpe_token_counts",
                            "bpe_rank_token_counts"),
         },
+        min_warm=3,
         measured=(
-            "traced run, seed 3, 4 cores, sf 0.01: warm pass 4.21 s",
-            "driver_bound 2.75 s, of it 2.06 s (75%) outside any Spark job",
-            "exec_bound 1.46 s, of it 0.84 s (58%) inside Spark jobs",
-            "plan construction 2.41 s (57% of the pass), 12 eager jobs",
-            "25 jobs, 34 tasks, 0.81 s task CPU per warm pass",
-            "cold pass 17.3 s; Python worker start 1.3 s in it; scoped "
-            "caches hold 0.70 MB after it; status-store reads 0.53 s a pass",
+            "traced run, seed 3, 4 cores, sf 0.01 fixtures, 1g driver "
+            "heap: warm pass 4.15 s (median of 3)",
+            "driver_bound 2.78 s, of it 2.12 s (76%) outside any Spark job",
+            "exec_bound 1.38 s, of it 0.78 s (57%) inside Spark jobs",
+            "plan construction 2.47 s (60% of the pass), 12 eager jobs",
+            "26 jobs, 35 tasks, 0.88 s task CPU per warm pass",
+            "cold pass 20.7 s; Python worker start 1.5 s in it; scoped "
+            "caches hold 0.71 MB after it; status-store reads 0.53 s a pass",
         ),
     ),
     "stream_replay": Workload(
@@ -65,17 +70,27 @@ WORKLOADS = {
              "workload that runs streaming/ and the RocksDB state store, "
              "using state two ways (window: a few rows read and updated; "
              "dedup: one row per event written then evicted), so a "
-             "state-store change that helps one and costs the other shows."),
+             "state-store change that helps one and costs the other shows.  "
+             "The spool repeats some event ids, near (inside the dedup "
+             "horizon: dropped) and far (after eviction: emitted again), so "
+             "the dedup's output count tests both its state and its "
+             "eviction."),
         groups={"gates": ("window", "dedup")},
+        # host steal comes in bursts of several seconds, which slowed
+        # one or two of a run's first rounds; four rounds keep a run
+        # near a minute
+        min_warm=4,
         measured=(
-            "traced run, seed 3, 4 cores: warm round 3.68 s over 20,000 "
-            "events per gate, 3 triggers per drain",
-            "window 10,300 events/s, dedup 11,507 events/s",
-            "per round: 1.74 s inside Spark jobs, 1.95 s outside them",
-            "per round: addBatch 2.33 s, offset and commit log 0.71 s, "
-            "state commit 4.00 s summed over 4 partitions x 2 operators",
+            "traced run, seed 3, 4 cores, sf 0.01 fixture, 1g driver heap: "
+            "warm round 4.94 s (median of 4) over 22,000 events per gate "
+            "(1,000 near and 1,000 far copies among them), 5 triggers per "
+            "drain",
+            "window 7,896 events/s, dedup 10,203 events/s",
+            "per round: 2.40 s inside Spark jobs, 2.62 s outside them",
+            "per round: addBatch 3.31 s, offset and commit log 1.06 s, "
+            "state commit 5.82 s summed over 4 partitions x 2 operators",
             "final state 2 rows after the sentinel trigger; 0 rows dropped "
-            "as late; status-store reads 0.41 s a round",
+            "as late; status-store reads 0.58 s a round",
         ),
     ),
 }
@@ -89,14 +104,16 @@ class EndToEnd(NamedTuple):
 #: what a user of the engine sees, printed for every workload (a batch
 #: "item" is a query, a stream item is a gate)
 END_TO_END = {
-    "setup_s": EndToEnd("s", "median of three set-ups per run: session up "
-                        "and a first job run, registry imported; the first "
-                        "counts from process start"),
+    "setup_s": EndToEnd("s", "median of the run's set-ups, each from the "
+                        "start of a fresh process until the spool is "
+                        "written (stream), the session is up with a first "
+                        "job run and the registry is imported: JVM launch "
+                        "and package imports included"),
     "cold_s": EndToEnd("s", "sum of each item's first wall in a fresh "
                        "process and cache scope (cache builds, codegen, "
                        "Python worker start, state-store init)"),
     "warm_s": EndToEnd("s", "sum of per-item median walls over the warm "
-                       "passes, which follow one untimed warm-up pass"),
+                       "passes that follow the cold one (at least three)"),
     "warm_geomean_s": EndToEnd("s", "geometric mean of per-item median warm "
                                "walls, so a short item's regression is not "
                                "hidden by the heavy ones"),
