@@ -391,7 +391,8 @@ def _wordpiece_token_counts(spark, sf_dir):
     THIRD tokenizer family, BERT-style greedy longest-match with ##
     continuation markers and HuggingFace all-or-nothing [UNK]
     semantics) under the pinned vocabulary: per-document token count +
-    [UNK]-word count, value-oracled via a DuckDB recursive CTE
+    [UNK]-word count from the one broadcast-set mapInPandas walk (run
+    once per distinct word), value-oracled via a DuckDB recursive CTE
     replaying the same greedy walk (longest admissible span per step,
     whole word -> one [UNK] on any miss)."""
     from apache_beam_spark.operators.wordpiece import (
@@ -402,16 +403,11 @@ def _wordpiece_token_counts(spark, sf_dir):
 
 
 def _wordpiece_token_counts_bc(spark, sf_dir):
-    """The production-vocabulary WordPiece path (broadcast set +
-    mapInPandas, plan size constant in vocab — BERT vocabs are 30k
-    pieces) under the SAME pinned vocabulary and the SAME oracle as
-    `wordpiece_token_counts` (equality pinned in
-    tests/test_wordpiece.py)."""
-    from apache_beam_spark.operators.wordpiece import (
-        wordpiece_token_counts)
-
-    return wordpiece_token_counts(load_table(spark, "documents", sf_dir),
-                                  _WP_VOCAB, max_literal_pieces=0)
+    """The production-vocabulary WordPiece query name, kept registered:
+    WordPiece has a single encode path (broadcast set + mapInPandas,
+    plan size constant in vocab — BERT vocabs are 30k pieces), so this
+    is the same plan and the SAME oracle as `wordpiece_token_counts`."""
+    return _wordpiece_token_counts(spark, sf_dir)
 
 
 def _dsir_scores(spark, sf_dir):
@@ -474,10 +470,11 @@ def _wordpiece_piece_counts(spark, sf_dir):
 def _unigram_piece_counts(spark, sf_dir):
     """Unigram piece USAGE counts (operators/unigram.py): corpus-
     weighted Viterbi-segmentation piece frequencies under the pinned
-    table — the E-step aggregate the hard-EM trainer repeats
-    (tests/test_unigram.py pins the trainer itself round-by-round).
-    The backtrack walk's tie-break (shortest admissible piece) is part
-    of the pinned contract; the oracle replays it in a second
+    table, from the broadcast-table mapInPandas DP + backtrack walk run
+    once per distinct word — the E-step aggregate the hard-EM trainer
+    repeats (tests/test_unigram.py pins the trainer itself
+    round-by-round).  The walk's tie-break (shortest admissible piece)
+    is part of the pinned contract; the oracle replays it in a second
     recursive CTE."""
     from apache_beam_spark.operators.unigram import unigram_piece_counts
 

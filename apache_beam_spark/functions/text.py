@@ -26,15 +26,6 @@ def tokens(col: Column) -> Column:
     return F.regexp_extract_all(col, F.lit(TOKEN_PATTERN), 0)
 
 
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
-def whitespace_token_count(col: Column) -> Column:
-    """Plain whitespace token count (cheapest possible)."""
-    return F.size(F.split(F.trim(col), r"\s+"))
-
-
 def word_tokens(col: Column) -> Column:
     """Lower-cased word tokens only (no punctuation)."""
     return F.regexp_extract_all(F.lower(col), F.lit(r"[\p{L}\p{N}_']+"), 0)
@@ -60,17 +51,6 @@ def stopword_ratio(col: Column) -> Column:
 def punct_ratio(col: Column) -> Column:
     n_punct = F.length(F.regexp_replace(col, r"[\p{L}\p{N}\s]", ""))
     return F.when(F.length(col) > 0, n_punct / F.length(col)).otherwise(F.lit(0.0))
-
-
-def upper_ratio(col: Column) -> Column:
-    n_upper = F.length(F.regexp_replace(col, r"[^A-Z]", ""))
-    return F.when(F.length(col) > 0, n_upper / F.length(col)).otherwise(F.lit(0.0))
-
-
-def mean_word_length(col: Column) -> Column:
-    w = word_tokens(col)
-    total = F.aggregate(w, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(w) > 0, total / F.size(w)).otherwise(F.lit(0.0))
 
 
 def quality_score(col: Column) -> Column:

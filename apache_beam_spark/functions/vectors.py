@@ -28,11 +28,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    d = F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2)
-    return F.sqrt(F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v))
-
-
 def normalize(a: Column) -> Column:
     """Unit-normalize; with pre-normalized vectors cosine = dot, halving
     the per-pair cost of a similarity join."""

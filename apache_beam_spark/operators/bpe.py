@@ -17,11 +17,19 @@ process, but the algorithm distributes naturally:
   vocabularies cost ~30k/merge_batch rounds, not 30k (with
   ``batch_policy="relaxed"`` sustaining ~merge_batch merges/round even
   on Zipfian heads — see SCALING.md r8);
-* the ENCODE side has two pinned-equal paths: the codegen
-  replace-chain (plan depth linear in vocab — demo/oracle grade) and
+* the ENCODE side has two pinned-equal paths, chosen by merge count:
+  the codegen replace-chain (plan depth linear in vocab; fastest on
+  small corpora) up to ``_MAX_CHAIN_MERGES`` merges, and
   ``bpe_encode_rank`` (broadcast merge-rank dict + vectorized
   mapInPandas, plan size constant in vocab — the 30k-merge production
-  regime, oracled as ``bpe_rank_token_counts``).
+  regime, and faster on larger corpora; oracled as
+  ``bpe_rank_token_counts``).
+
+This module also holds the spine the unigram and WordPiece tokenizers
+share: ``word_vocab`` (the distinct-word frequency frame every trainer
+and piece counter runs on) and ``_per_doc_sums`` (distinct words ->
+per-word score -> per-document sums, the shape of every per-document
+encode).
 
 ``bpe_pair_counts`` (the first iteration's counting step) is fully
 SQL-expressible and value-oracled against DuckDB; the iterative
@@ -36,6 +44,8 @@ operator; this is part of the training-data-pipeline surface
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -44,10 +54,32 @@ from apache_beam_spark.functions.text import word_tokens
 
 def word_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt): lower-cased word-token frequencies — the corpus
-    compression every BPE step runs on.  One explode + one shuffle agg
-    with map-side partial aggregation."""
+    compression every tokenizer step (BPE, unigram, WordPiece) runs
+    on.  One explode + one shuffle agg with map-side partial
+    aggregation."""
     return (df.select(F.explode(word_tokens(F.col(text_col))).alias("word"))
             .groupBy("word").agg(F.count(F.lit(1)).alias("cnt")))
+
+
+def _per_doc_sums(df: DataFrame, score: Callable[[DataFrame], DataFrame],
+                  text_col: str, id_col: str, **sums: Column) -> DataFrame:
+    """Per-document sums of a per-word score — the tokenizer-APPLICATION
+    shape shared by all three families.  ``score`` maps the (word)
+    frame of DISTINCT corpus words to a (word, ...) frame, so the
+    per-word encode runs once per distinct word, not once per
+    occurrence; the scored words join back to each document's word
+    list (strategy left to AQE — distinct-word cardinality is
+    corpus-vocabulary-sized) and each ``sums`` column is summed per
+    document.  Returns (id_col, *sums) as int64; documents with no
+    word tokens report 0 for every sum."""
+    wpd = df.select(F.col(id_col),
+                    F.explode_outer(word_tokens(F.col(text_col)))
+                    .alias("word"))
+    dw = wpd.select("word").where(F.col("word").isNotNull()).distinct()
+    return (wpd.join(score(dw), "word", "left")
+            .groupBy(id_col)
+            .agg(*[F.coalesce(F.sum(c), F.lit(0)).cast("long").alias(name)
+                   for name, c in sums.items()]))
 
 
 def _symbols(word: Column) -> Column:
@@ -139,9 +171,7 @@ def bpe_encode_rank(df: DataFrame, merges: list,
 
     The encode runs once per DISTINCT word (the word_vocab compression:
     per-word cost O(len(word) * merges-that-fire), not corpus-sized),
-    then joins back to the per-document word list — AQE picks the join
-    strategy since distinct-word cardinality is corpus-vocabulary-
-    bounded, not constant.
+    then joins back to the per-document word list (``_per_doc_sums``).
 
     Equivalence to the replace-chain encoder: identical whenever no
     later merge re-creates the STRING of an earlier merge's pair
@@ -151,11 +181,6 @@ def bpe_encode_rank(df: DataFrame, merges: list,
     merges_local = [(a, b) for a, b in merges]
     ranks = {p: i for i, p in enumerate(merges_local)}
     bc = df.sparkSession.sparkContext.broadcast((ranks, merges_local))
-
-    wpd = df.select(F.col(id_col),
-                    F.explode_outer(word_tokens(F.col(text_col)))
-                    .alias("word"))
-    dw = wpd.select("word").where(F.col("word").isNotNull()).distinct()
 
     def enc(batches):
         import pandas as pd
@@ -187,24 +212,21 @@ def bpe_encode_rank(df: DataFrame, merges: list,
                 counts.append(len(syms))
             yield pd.DataFrame({"word": pdf["word"], "wtok": counts})
 
-    per_word = dw.mapInPandas(enc, "word string, wtok long")
-    return (wpd.join(per_word, "word", "left")
-            .groupBy(id_col)
-            .agg(F.coalesce(F.sum("wtok"), F.lit(0)).cast("long")
-                 .alias("n_tokens")))
+    return _per_doc_sums(
+        df, lambda dw: dw.mapInPandas(enc, "word string, wtok long"),
+        text_col, id_col, n_tokens=F.col("wtok"))
 
 
 def bpe_encode_token_counts(df: DataFrame, merges: list,
                             text_col: str = "text",
-                            id_col: str = "doc_id",
-                            max_chain_merges: int = _MAX_CHAIN_MERGES
-                            ) -> DataFrame:
+                            id_col: str = "doc_id") -> DataFrame:
     """Per-document token count under a FIXED, already-learned merge
     list — the tokenizer-APPLICATION side of BPE (the
     ``kmeans_assign``-with-fixed-centroids pattern: pinning the learned
     artifact makes the whole path value-oracle-checkable).
 
-    Below ``max_chain_merges`` the encoding never touches Python: each
+    Up to ``_MAX_CHAIN_MERGES`` merges the encoding never touches
+    Python: each
     word's characters are joined with double \\x1f delimiters inside
     single-\\x1f anchors, and each merge (a, b) -> ab is ONE codegen
     ``replace`` of ``\\x1f a \\x1f\\x1f b \\x1f`` with
@@ -215,15 +237,17 @@ def bpe_encode_token_counts(df: DataFrame, merges: list,
     so merges never cross words.  Token count = words + remaining
     double-delimiter boundaries / 2.
 
-    ABOVE ``max_chain_merges`` the replace chain's plan depth (linear
-    in vocabulary) would hit JVM codegen ceilings, so the call
-    delegates to ``bpe_encode_rank`` — broadcast dict + vectorized
-    mapInPandas, plan size constant in vocabulary (the production
-    regime; equality on chain-eligible vocabularies is pinned by
-    tests/test_tokenizer_scale.py).
+    ABOVE it the replace chain's plan depth (linear in vocabulary)
+    would hit JVM codegen ceilings, so the call delegates to
+    ``bpe_encode_rank`` — broadcast dict + vectorized mapInPandas, plan
+    size constant in vocabulary (the production regime; equality on
+    chain-eligible vocabularies is pinned by
+    tests/test_tokenizer_scale.py).  Each path is the faster one at
+    some corpus size (the chain at small corpora, the rank encode at
+    larger ones), so both stay, chosen by merge count.
 
     Returns (id_col, n_tokens)."""
-    if len(merges) > max_chain_merges:
+    if len(merges) > _MAX_CHAIN_MERGES:
         return bpe_encode_rank(df, merges, text_col, id_col)
     toks = word_tokens(F.col(text_col))
 

@@ -173,14 +173,6 @@ class Combine:
         return _PKF()
 
 
-def _per_key(pcoll: PCollection, keys: Union[str, Sequence[str], None], *aggs: Column) -> PCollection:
-    keys_l = [] if keys is None else ([keys] if isinstance(keys, str) else list(keys))
-    gcols = [*pcoll.window_group_cols(), *[F.col(k) for k in keys_l]]
-    if gcols:
-        return pcoll._with_df(pcoll.df.groupBy(*gcols).agg(*aggs))
-    return pcoll._with_df(pcoll.df.agg(*aggs))
-
-
 class Count:
     """reference ``transforms/Count.java:65,73,102``"""
 

@@ -23,14 +23,10 @@ from __future__ import annotations
 
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apache_beam_spark.pipeline import PCollection, PTransform
-
-
-def _window_key_cols(pcoll: PCollection, keys: Sequence[str]) -> list[Column]:
-    return [*pcoll.window_group_cols(), *[F.col(k) for k in keys]]
 
 
 class GroupByKey(PTransform):

@@ -7,23 +7,30 @@ Together with ``operators/bpe.py`` this completes the two tokenizer
 families real LLM pipelines train: merge-based (BPE) and
 likelihood-based (unigram).
 
-Distribution strategy (same spine as BPE):
+Distribution strategy (the spine shared with BPE, ``operators/bpe.py``
+``word_vocab`` / ``_per_doc_sums``):
 
 * the corpus collapses to the DISTINCT-WORD frame in one shuffle agg —
   the Viterbi DP then runs once per distinct word, not once per
-  occurrence, and the piece table rides along as a broadcast literal
-  map;
-* the DP itself is a pure-Column ``aggregate`` fold over character
-  positions (no Python anywhere): ``best[j] = min over admissible
-  pieces ending at j of best[j - len] + obj(piece)``, all in int64;
+  occurrence;
 * INTEGER objective: ``obj(piece) = cost * _SCALE + 1`` — the ``+1``
   per token makes "fewest tokens" the tie-break inside one number, so
   min-cost is single-valued and the whole operator is bit-identical in
   DuckDB (a recursive CTE carrying the same bests array), i.e.
   VALUE-ORACLE-ABLE, unlike float log-prob Viterbi;
+* the DP (``best[j] = min over admissible pieces ending at j of
+  best[j - len] + obj(piece)``, all int64) has two pinned-equal
+  implementations for ``unigram_segment``: a pure-Column ``aggregate``
+  fold with the piece table as a ``create_map`` plan literal
+  (``_bests``; faster at demo vocabularies) and, above
+  ``_MAX_LITERAL_PIECES`` pieces, a broadcast dict + vectorized
+  mapInPandas (``_per_word_bc``; plan size constant in vocabulary —
+  SentencePiece vocabularies are 32k-1M pieces — oracled as
+  ``unigram_token_counts_bc``);
 * the segmentation WALK (needed for piece usage counts and training)
-  is a second Column fold backtracking the bests array with a pinned
-  tie-break (shortest admissible piece wins).
+  backtracks the bests array with a pinned tie-break (shortest
+  admissible piece wins); it runs only in the broadcast mapInPandas
+  stage, whatever the vocabulary size.
 
 ``unigram_train`` supports both EM flavors: ``em="hard"`` (Viterbi-EM:
 E-step = segment the distinct-word vocabulary under current integer
@@ -38,12 +45,6 @@ Exactness vs sequential references — and the full-EM lattice vs
 brute-force segmentation enumeration — is pinned in
 tests/test_unigram.py.
 
-Production vocabularies (32k-1M pieces): scoring switches from the
-``create_map`` plan literal to a broadcast dict + vectorized
-mapInPandas above ``_MAX_LITERAL_PIECES``, keeping plan size constant
-in vocabulary (equality pinned in tests/test_tokenizer_scale.py and
-oracled as ``unigram_token_counts_bc``).
-
 Reference anchor: the reference repo has no tokenizer-training
 operator; this is training-data-pipeline surface (SURVEY §8 extras)
 built on its Combine-per-key shapes (sdks/java/core/.../Combine.java).
@@ -55,8 +56,10 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, LongType, StringType, StructField,
+                               StructType)
 
-from apache_beam_spark.functions.text import word_tokens
+from apache_beam_spark.operators.bpe import _per_doc_sums, word_vocab
 
 #: objective scale: obj(piece) = cost * _SCALE + 1.  Token counts per
 #: word stay below _SCALE as long as words are shorter than _SCALE
@@ -71,12 +74,12 @@ _MAX_WORD_LEN = 4096
 #: sentinel for "no admissible piece ends here"
 _BIG = 1 << 40
 
-#: the ``create_map`` literal path replicates the piece table into
-#: every task's codegen — fine at demo vocab sizes, a megabyte-scale
-#: plan literal at SentencePiece's 32k-1M pieces.  Above this many
-#: pieces the scoring switches to an ``sc.broadcast`` dict + vectorized
-#: mapInPandas Viterbi with the IDENTICAL packed-int64 objective
-#: (equality below the threshold is pinned by
+#: the ``create_map`` literal DP replicates the piece table into
+#: every task's codegen — fine (and faster) at demo vocab sizes, a
+#: megabyte-scale plan literal at SentencePiece's 32k-1M pieces.  Above
+#: this many pieces ``unigram_segment`` switches to an ``sc.broadcast``
+#: dict + vectorized mapInPandas Viterbi with the IDENTICAL packed-int64
+#: objective (equality below the threshold is pinned by
 #: tests/test_tokenizer_scale.py).
 _MAX_LITERAL_PIECES = 512
 
@@ -104,8 +107,9 @@ def _viterbi_bests_py(word: str, pieces: dict, unk_cost: int,
 
 def _viterbi_walk_py(word: str, bests: list, pieces: dict,
                      unk_cost: int, max_len: int) -> list:
-    """Python twin of ``_walk``: backtrack with the pinned tie-break
-    (shortest admissible piece attaining the optimum wins)."""
+    """Viterbi segmentation of ``word`` (pieces in order), backtracked
+    from its bests array with the pinned tie-break: at each boundary
+    the SHORTEST admissible piece attaining the optimum wins."""
     unk_obj = unk_cost * _SCALE + 1
     j, ps = len(word), []
     while j > 0:
@@ -125,36 +129,31 @@ def _viterbi_walk_py(word: str, bests: list, pieces: dict,
     return ps
 
 
-def _per_word_bc(dw: DataFrame, pieces: dict, unk_cost: int,
+def _per_word_bc(words: DataFrame, pieces: dict, unk_cost: int,
                  with_pieces: bool) -> DataFrame:
-    """Broadcast-mode scoring of a distinct-word frame: the piece
-    table rides as ONE ``sc.broadcast`` (shipped per executor, not per
-    plan), the DP runs in a vectorized mapInPandas stage — plan size
-    constant in vocabulary, the production-vocabulary regime.  Returns
-    (word, best) or, with ``with_pieces``, (word, ps array<string>)."""
-    bc = dw.sparkSession.sparkContext.broadcast(dict(pieces))
+    """Broadcast-mode scoring of a frame with a ``word`` column: the
+    piece table rides as ONE ``sc.broadcast`` (shipped per executor, not
+    per plan), the DP runs in a vectorized mapInPandas stage — plan size
+    constant in vocabulary.  Returns the input columns plus ``best``
+    (long) or, with ``with_pieces``, ``ps`` (array<string>, the walk)."""
+    bc = words.sparkSession.sparkContext.broadcast(dict(pieces))
     max_len = max((len(p) for p in pieces), default=1)
 
     def score(batches):
-        import pandas as pd
-
         pc = bc.value
         for pdf in batches:
-            words = list(pdf["word"])
             bests = [_viterbi_bests_py(w, pc, unk_cost, max_len)
-                     for w in words]
+                     for w in pdf["word"]]
             if with_pieces:
-                yield pd.DataFrame({
-                    "word": words,
-                    "ps": [_viterbi_walk_py(w, b, pc, unk_cost, max_len)
-                           for w, b in zip(words, bests)]})
+                yield pdf.assign(ps=[
+                    _viterbi_walk_py(w, b, pc, unk_cost, max_len)
+                    for w, b in zip(pdf["word"], bests)])
             else:
-                yield pd.DataFrame({"word": words,
-                                    "best": [b[-1] for b in bests]})
+                yield pdf.assign(best=[b[-1] for b in bests])
 
-    schema = ("word string, ps array<string>" if with_pieces
-              else "word string, best long")
-    return dw.mapInPandas(score, schema)
+    out = (StructField("ps", ArrayType(StringType())) if with_pieces
+           else StructField("best", LongType()))
+    return words.mapInPandas(score, StructType(words.schema.fields + [out]))
 
 
 def _piece_map(pieces: dict) -> Column:
@@ -194,57 +193,6 @@ def _bests(word: Column, pieces: dict, unk_cost: int) -> Column:
                        F.array(F.lit(0).cast("long")), step)
 
 
-def _walk(word: Column, bests: Column, pieces: dict,
-          unk_cost: int) -> Column:
-    """array<string> of the Viterbi segmentation, backtracked from the
-    bests array.  Tie-break is pinned: at each boundary the SHORTEST
-    admissible piece that attains the optimum wins (smallest k).  The
-    fold runs length(word) steps (enough for the all-singles path) and
-    no-ops once the cursor reaches 0; pieces come out last-first and
-    are reversed at the end."""
-    mp = _piece_map(pieces)
-    max_len = max((len(p) for p in pieces), default=1)
-
-    def step(acc, _):
-        j = acc["j"]
-
-        def obj(k):
-            piece = word.substr(j - k + F.lit(1), k)
-            known = F.element_at(mp, piece).cast("long") * _SCALE + 1
-            return (F.element_at(bests, j - k + 1)
-                    + F.when(k == 1,
-                             F.least(known,
-                                     F.lit(unk_cost * _SCALE + 1)
-                                     .cast("long")))
-                    .otherwise(known))
-
-        ks = F.sequence(F.lit(1), F.least(F.lit(max_len), F.greatest(j, F.lit(1))))
-        hit = F.filter(F.transform(ks, lambda k: F.when(
-            obj(k) == F.element_at(bests, j + 1), k)),
-            lambda x: x.isNotNull())
-        k_star = F.array_min(hit)
-        return F.when(j <= 0, acc).otherwise(F.struct(
-            (j - k_star).alias("j"),
-            F.concat(acc["ps"],
-                     F.array(word.substr(j - k_star + F.lit(1), k_star)))
-            .alias("ps")))
-
-    init = F.struct(F.length(word).cast("int").alias("j"),
-                    F.array().cast("array<string>").alias("ps"))
-    out = F.aggregate(F.sequence(F.lit(1),
-                                 F.greatest(F.length(word), F.lit(1))),
-                      init, step)
-    return F.reverse(out["ps"])
-
-
-def _word_vocab(df: DataFrame, text_col: str) -> DataFrame:
-    """(word, cnt) distinct-word frame — the corpus compression every
-    unigram step runs on (shared shape with bpe.word_vocab)."""
-    return (df.select(F.explode(word_tokens(F.col(text_col)))
-                      .alias("word"))
-            .groupBy("word").agg(F.count(F.lit(1)).alias("cnt")))
-
-
 def unigram_segment(df: DataFrame, pieces: dict, *, unk_cost: int = 14,
                     text_col: str = "text",
                     id_col: str = "doc_id",
@@ -260,62 +208,44 @@ def unigram_segment(df: DataFrame, pieces: dict, *, unk_cost: int = 14,
     fold with the piece table as a plan literal; above it (the
     production regime — SentencePiece vocabs are 32k-1M pieces) the
     identical packed objective runs in a broadcast-dict mapInPandas
-    stage, keeping plan size constant in vocabulary.  Either way the
-    per-word score joins back to the word list with the strategy left
-    to AQE — distinct-word cardinality is corpus-vocabulary-sized, so
-    no forced broadcast.
+    stage, keeping plan size constant in vocabulary.  The literal fold
+    is the faster path at demo vocabularies, so both stay; the
+    parameter lets the oracled ``unigram_token_counts_bc`` query run
+    the broadcast path on the demo table.
 
     Returns (id_col, n_tokens, total_cost); documents with no word
     tokens report (0, 0)."""
-    wpd = df.select(F.col(id_col),
-                    F.explode_outer(word_tokens(F.col(text_col)))
-                    .alias("word"))
-    dw = wpd.select("word").where(F.col("word").isNotNull()).distinct()
-    if len(pieces) > max_literal_pieces:
-        dw = _per_word_bc(dw, pieces, unk_cost, with_pieces=False)
-    else:
-        dw = dw.withColumn("best", F.element_at(
+    def score(dw: DataFrame) -> DataFrame:
+        if len(pieces) > max_literal_pieces:
+            return _per_word_bc(dw, pieces, unk_cost, with_pieces=False)
+        return dw.withColumn("best", F.element_at(
             _bests(F.col("word"), pieces, unk_cost),
             F.length("word") + 1))
-    return (wpd.join(dw, "word", "left")
-            .groupBy(id_col)
-            .agg(F.coalesce(F.sum(F.col("best") % _SCALE), F.lit(0))
-                 .cast("long").alias("n_tokens"),
-                 F.coalesce(F.sum((F.col("best") / _SCALE).cast("long")),
-                            F.lit(0)).cast("long").alias("total_cost")))
+
+    return _per_doc_sums(
+        df, score, text_col, id_col,
+        n_tokens=F.col("best") % _SCALE,
+        total_cost=(F.col("best") / _SCALE).cast("long"))
+
+
+def _piece_usage(wv: DataFrame, pieces: dict, unk_cost: int) -> DataFrame:
+    """(piece, cnt): corpus-weighted Viterbi piece usage over a
+    (word, cnt) frame — the walk runs once per distinct word."""
+    return (_per_word_bc(wv, pieces, unk_cost, with_pieces=True)
+            .select(F.explode("ps").alias("piece"), "cnt")
+            .groupBy("piece").agg(F.sum("cnt").alias("cnt")))
 
 
 def unigram_piece_counts(df: DataFrame, pieces: dict, *,
                          unk_cost: int = 14,
-                         text_col: str = "text",
-                         max_literal_pieces: int = _MAX_LITERAL_PIECES
-                         ) -> DataFrame:
+                         text_col: str = "text") -> DataFrame:
     """Corpus-weighted piece usage counts under a FIXED piece table:
     how often each vocabulary piece (or an <unk> single char, reported
     as the literal character) appears in the Viterbi segmentation of
-    the corpus.  The walk runs once per DISTINCT word; counts are
-    exact int64 (occurrences * word frequency).  Above
-    ``max_literal_pieces`` the DP+walk run broadcast-dict mapInPandas
-    (see ``unigram_segment``).  Returns (piece, cnt)."""
-    wv = _word_vocab(df, text_col)
-    if len(pieces) > max_literal_pieces:
-        segs = wv.join(
-            _per_word_bc(wv.select("word"), pieces, unk_cost,
-                         with_pieces=True), "word")
-    else:
-        segs = wv.select(
-            "cnt",
-            _walk(F.col("word"), _bests(F.col("word"), pieces, unk_cost),
-                  pieces, unk_cost).alias("ps"))
-    # explode_OUTER, not explode: for a plain explode Catalyst infers
-    # a `size(ps) > 0` filter and — because ps is a function of the
-    # grouping key — pushes it BELOW the word aggregation, evaluating
-    # the whole Viterbi walk once per corpus TOKEN instead of once per
-    # distinct word (~100x wall at sf0.1).  Words are non-empty so ps
-    # never is; the null guard below is for the optimizer, not data.
-    return (segs.select(F.explode_outer("ps").alias("piece"), "cnt")
-            .where(F.col("piece").isNotNull())
-            .groupBy("piece").agg(F.sum("cnt").alias("cnt")))
+    the corpus.  The DP + walk run once per DISTINCT word in the
+    broadcast-dict mapInPandas stage; counts are exact int64
+    (occurrences * word frequency).  Returns (piece, cnt)."""
+    return _piece_usage(word_vocab(df, text_col), pieces, unk_cost)
 
 
 #: full-EM expected counts are fractional; they are quantized to int64
@@ -455,8 +385,8 @@ def unigram_train(df: DataFrame, *, vocab_size: int = 48,
     ``em="full"``, the rounded expected usage).
 
     ``em="hard"`` (Viterbi-EM): E-step segments the distinct-word
-    frame under current integer costs via the pure-Column Viterbi walk
-    and accumulates exact int64 piece counts.  ``em="full"``
+    frame under current integer costs via the broadcast-table Viterbi
+    walk and accumulates exact int64 piece counts.  ``em="full"``
     (SentencePiece's actual E-step, Kudo ACL'18): forward-backward
     EXPECTED counts over every word's segmentation lattice — no
     hard-assignment local optimum — computed per word in a broadcast-
@@ -484,7 +414,7 @@ def unigram_train(df: DataFrame, *, vocab_size: int = 48,
     if em not in ("hard", "full"):
         raise ValueError(f"em must be 'hard' or 'full', got {em!r}")
     spark = df.sparkSession
-    wv = _word_vocab(df, text_col).localCheckpoint()
+    wv = word_vocab(df, text_col).localCheckpoint()
     seed_counts = _seed_pieces(wv, max_piece_len=max_piece_len,
                                seed_multi=seed_multi)
     singles = {p for p in seed_counts if len(p) == 1}
@@ -496,18 +426,11 @@ def unigram_train(df: DataFrame, *, vocab_size: int = 48,
     unit = 1 if em == "hard" else _EM_SCALE
     # the <unk> fallback never fires during training: every single
     # char of the corpus is in the seed table and never pruned.  Keep
-    # it admissible-but-dominated so _bests/_walk stay one code path.
+    # it admissible-but-dominated so the DP and walk stay one code path.
     unk = max(costs.values()) + 1
     for _ in range(max(1, rounds)):
         if em == "hard":
-            segs = wv.select(
-                "cnt", _walk(F.col("word"),
-                             _bests(F.col("word"), costs, unk),
-                             costs, unk).alias("ps"))
-            rows = (segs.select(F.explode_outer("ps").alias("piece"), "cnt")
-                    .where(F.col("piece").isNotNull())  # see unigram_piece_counts
-                    .groupBy("piece").agg(F.sum("cnt").alias("cnt"))
-                    .collect())
+            rows = _piece_usage(wv, costs, unk).collect()
             counts = {r["piece"]: int(r["cnt"]) for r in rows}
         else:
             rows = _em_counts(wv, costs).collect()

@@ -13,14 +13,15 @@ is merge-based like BPE but scores candidate pairs by LIKELIHOOD GAIN
 (merging frequent-but-independent pairs is worthless; merging pairs
 that co-occur beyond chance is what raises corpus likelihood).
 
-Distribution strategy (the shared tokenizer spine):
+Distribution strategy (the tokenizer spine shared with BPE,
+``operators/bpe.py`` ``word_vocab`` / ``_per_doc_sums``):
 
 * the corpus collapses to the DISTINCT-WORD frame in one shuffle agg;
   per-word encode/train work runs once per distinct word;
-* the greedy encode is a pure-Column fold (no Python) against a
-  ``create_map`` literal — and, above ``_MAX_LITERAL_PIECES`` pieces,
-  a broadcast-dict vectorized mapInPandas twin (the production-
-  vocabulary regime, plan size constant in vocab), pinned equal;
+* the greedy encode is ONE Python walk (``_greedy_pieces_py``) against
+  a broadcast vocabulary set in a vectorized mapInPandas stage — plan
+  size constant in vocabulary (BERT vocabularies are 30k pieces).
+  Token counts and the [UNK] flag both derive from its piece list;
 * each training ROUND is one symbol-count + one pair-count partial
   agg over the vocabulary frame plus a bounded driver admission — the
   BPE loop with a ratio score.  ``batch_policy="exact"`` admits one
@@ -31,8 +32,9 @@ Distribution strategy (the shared tokenizer spine):
   sequential order of the batch — making production 30k-piece
   vocabularies ~n_merges/merge_batch rounds, mirror-pinned.
 
-``wordpiece_token_counts`` is value-oracled via a DuckDB recursive
-CTE replaying the same greedy walk; the trainer is pinned
+``wordpiece_token_counts`` and ``wordpiece_piece_counts`` are
+value-oracled via DuckDB recursive CTEs replaying the same greedy
+walk; the trainer is pinned
 round-by-round against a sequential reference in
 tests/test_wordpiece.py.
 
@@ -45,204 +47,22 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from apache_beam_spark.functions.text import word_tokens
+from apache_beam_spark.operators.bpe import _per_doc_sums, word_vocab
 
 #: continuation marker for word-internal pieces (the BERT convention)
 _CONT = "##"
-#: same plan-literal ceiling as the unigram scorer: above this many
-#: pieces the encode switches to the broadcast-dict mapInPandas twin
-_MAX_LITERAL_PIECES = 512
+#: the reported token for all-or-nothing failures
+_UNK = "[UNK]"
 #: hard word-length cap, mirroring operators/unigram.py
 _MAX_WORD_LEN = 4096
 
 
-def _vocab_map(vocab) -> Column:
-    """create_map literal piece -> 1 (membership; values unused)."""
-    return F.create_map(*[F.lit(x) for p in sorted(vocab)
-                          for x in (p, 1)])
-
-
-def _greedy_counts_col(word: Column, vocab) -> Column:
-    """Pure-Column greedy longest-match token count for one word:
-    struct fold over at most length(word) steps; returns
-    struct(n_tokens int, is_unk int).  A word with any unmatched
-    position is ONE [UNK] token (is_unk = 1)."""
-    mp = _vocab_map(vocab)
-    # longest RAW span any piece can match (continuation pieces spell
-    # '##' + span)
-    max_span = max((len(p[2:]) if p.startswith(_CONT) else len(p)
-                    for p in vocab), default=1)
-    n = F.when(F.length(word) <= _MAX_WORD_LEN, F.length(word)) \
-        .otherwise(F.raise_error(F.concat(
-            F.lit(f"wordpiece: word longer than {_MAX_WORD_LEN} chars: "),
-            F.substring(word, 1, 64), F.lit("..."))))
-
-    def step(acc, _):
-        pos, cnt, failed = acc["pos"], acc["n"], acc["failed"]
-
-        def hit(k):
-            raw = word.substr(pos + 1, k)
-            piece = F.when(pos == 0, raw).otherwise(
-                F.concat(F.lit(_CONT), raw))
-            return F.when(F.element_at(mp, piece).isNotNull(), k)
-
-        ks = F.sequence(F.lit(1), F.least(F.lit(max_span),
-                                          F.greatest(F.length(word) - pos,
-                                                     F.lit(1))))
-        k_star = F.array_max(F.filter(F.transform(ks, hit),
-                                      lambda x: x.isNotNull()))
-        active = (~failed) & (pos < F.length(word))
-        return F.when(~active, acc).otherwise(
-            F.when(k_star.isNull(),
-                   F.struct(pos.alias("pos"), cnt.alias("n"),
-                            F.lit(True).alias("failed")))
-            .otherwise(F.struct((pos + k_star).alias("pos"),
-                                (cnt + 1).alias("n"),
-                                F.lit(False).alias("failed"))))
-
-    init = F.struct(F.lit(0).alias("pos"), F.lit(0).alias("n"),
-                    F.lit(False).alias("failed"))
-    out = F.aggregate(F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-                      init, step)
-    return F.struct(
-        F.when(out["failed"], F.lit(1)).otherwise(out["n"])
-        .cast("int").alias("n_tokens"),
-        F.when(out["failed"], F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("is_unk"))
-
-
-def _greedy_word_py(word: str, vocab: set, max_span: int) -> tuple:
-    """Python twin of the greedy fold: (n_tokens, is_unk)."""
-    if len(word) > _MAX_WORD_LEN:
-        raise ValueError(f"wordpiece: word longer than {_MAX_WORD_LEN} "
-                         f"chars: {word[:64]}...")
-    pos, n = 0, 0
-    while pos < len(word):
-        k = None
-        for span in range(min(max_span, len(word) - pos), 0, -1):
-            piece = word[pos:pos + span] if pos == 0 \
-                else _CONT + word[pos:pos + span]
-            if piece in vocab:
-                k = span
-                break
-        if k is None:
-            return 1, 1          # whole word -> [UNK]
-        pos += k
-        n += 1
-    return n, 0
-
-
-def _per_word_bc(dw: DataFrame, vocab) -> DataFrame:
-    """Broadcast-mode greedy scoring: (word, n_tokens, is_unk)."""
-    vset = set(vocab)
-    bc = dw.sparkSession.sparkContext.broadcast(vset)
-    max_span = max((len(p[2:]) if p.startswith(_CONT) else len(p)
-                    for p in vset), default=1)
-
-    def score(batches):
-        import pandas as pd
-
-        vs = bc.value
-        for pdf in batches:
-            res = [_greedy_word_py(w, vs, max_span) for w in pdf["word"]]
-            yield pd.DataFrame({"word": pdf["word"],
-                                "n_tokens": [r[0] for r in res],
-                                "is_unk": [r[1] for r in res]})
-
-    return dw.mapInPandas(score, "word string, n_tokens int, is_unk int")
-
-
-def wordpiece_token_counts(df: DataFrame, vocab, *,
-                           text_col: str = "text",
-                           id_col: str = "doc_id",
-                           max_literal_pieces: int = _MAX_LITERAL_PIECES
-                           ) -> DataFrame:
-    """Per-document WordPiece token count and [UNK]-word count under a
-    FIXED vocabulary (iterable of pieces; word-internal pieces spelled
-    with the ``##`` prefix) — the tokenizer-APPLICATION side, value-
-    oracled via a DuckDB recursive CTE replaying the same greedy
-    longest-match walk (``wordpiece_token_counts`` in __spark_entry__).
-
-    At or below ``max_literal_pieces`` the walk is a pure-Column fold
-    with the vocabulary as a plan literal; above it, a broadcast-set
-    mapInPandas twin (plan size constant in vocabulary — BERT vocabs
-    are 30k pieces), pinned equal in tests/test_wordpiece.py.
-
-    Returns (id_col, n_tokens, n_unk_words); empty docs report (0, 0).
-    """
-    vocab = set(vocab)   # materialize: generators must not exhaust
-    wpd = df.select(F.col(id_col),
-                    F.explode_outer(word_tokens(F.col(text_col)))
-                    .alias("word"))
-    dw = wpd.select("word").where(F.col("word").isNotNull()).distinct()
-    if len(vocab) > max_literal_pieces:
-        dw = _per_word_bc(dw, vocab)
-    else:
-        dw = (dw.withColumn("r", _greedy_counts_col(F.col("word"),
-                                                    vocab))
-              .select("word", F.col("r.n_tokens").alias("n_tokens"),
-                      F.col("r.is_unk").alias("is_unk")))
-    return (wpd.join(dw, "word", "left")
-            .groupBy(id_col)
-            .agg(F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long")
-                 .alias("n_tokens"),
-                 F.coalesce(F.sum("is_unk"), F.lit(0)).cast("long")
-                 .alias("n_unk_words")))
-
-
-#: the reported token for all-or-nothing failures
-_UNK = "[UNK]"
-
-
-def _greedy_pieces_col(word: Column, vocab) -> Column:
-    """array<string> of the greedy segmentation's pieces (## markers
-    included); a failed word yields ['[UNK]'] — the walk twin of
-    ``_greedy_counts_col``."""
-    mp = _vocab_map(vocab)
-    max_span = max((len(p[2:]) if p.startswith(_CONT) else len(p)
-                    for p in vocab), default=1)
-    n = F.when(F.length(word) <= _MAX_WORD_LEN, F.length(word)) \
-        .otherwise(F.raise_error(F.concat(
-            F.lit(f"wordpiece: word longer than {_MAX_WORD_LEN} chars: "),
-            F.substring(word, 1, 64), F.lit("..."))))
-
-    def step(acc, _):
-        pos, ps, failed = acc["pos"], acc["ps"], acc["failed"]
-
-        def hit(k):
-            raw = word.substr(pos + 1, k)
-            piece = F.when(pos == 0, raw).otherwise(
-                F.concat(F.lit(_CONT), raw))
-            return F.when(F.element_at(mp, piece).isNotNull(), k)
-
-        ks = F.sequence(F.lit(1), F.least(F.lit(max_span),
-                                          F.greatest(F.length(word) - pos,
-                                                     F.lit(1))))
-        k_star = F.array_max(F.filter(F.transform(ks, hit),
-                                      lambda x: x.isNotNull()))
-        raw = word.substr(pos + 1, k_star)
-        piece = F.when(pos == 0, raw).otherwise(
-            F.concat(F.lit(_CONT), raw))
-        active = (~failed) & (pos < F.length(word))
-        return F.when(~active, acc).otherwise(
-            F.when(k_star.isNull(),
-                   F.struct(pos.alias("pos"), ps.alias("ps"),
-                            F.lit(True).alias("failed")))
-            .otherwise(F.struct((pos + k_star).alias("pos"),
-                                F.concat(ps, F.array(piece)).alias("ps"),
-                                F.lit(False).alias("failed"))))
-
-    init = F.struct(F.lit(0).alias("pos"),
-                    F.array().cast("array<string>").alias("ps"),
-                    F.lit(False).alias("failed"))
-    out = F.aggregate(F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-                      init, step)
-    return F.when(out["failed"], F.array(F.lit(_UNK))).otherwise(out["ps"])
-
-
 def _greedy_pieces_py(word: str, vocab: set, max_span: int) -> list:
-    """Python twin of ``_greedy_pieces_col`` (broadcast mode)."""
+    """Greedy longest-match-first segmentation of one word (``##``
+    markers included); a word with any unmatched position is the one
+    piece ``[UNK]`` (HuggingFace all-or-nothing)."""
     if len(word) > _MAX_WORD_LEN:
         raise ValueError(f"wordpiece: word longer than {_MAX_WORD_LEN} "
                          f"chars: {word[:64]}...")
@@ -263,10 +83,57 @@ def _greedy_pieces_py(word: str, vocab: set, max_span: int) -> list:
     return ps
 
 
-def wordpiece_piece_counts(df: DataFrame, vocab, *,
+def _per_word_bc(words: DataFrame, vocab: set) -> DataFrame:
+    """Greedy segmentation of a frame with a ``word`` column: the
+    vocabulary rides as ONE ``sc.broadcast`` set into a vectorized
+    mapInPandas stage.  Returns the input columns plus ``ps``
+    (array<string>)."""
+    bc = words.sparkSession.sparkContext.broadcast(vocab)
+    # longest RAW span any piece can match (continuation pieces spell
+    # '##' + span)
+    max_span = max((len(p[2:]) if p.startswith(_CONT) else len(p)
+                    for p in vocab), default=1)
+
+    def walk(batches):
+        vs = bc.value
+        for pdf in batches:
+            yield pdf.assign(ps=[_greedy_pieces_py(w, vs, max_span)
+                                 for w in pdf["word"]])
+
+    return words.mapInPandas(walk, StructType(
+        words.schema.fields + [StructField("ps", ArrayType(StringType()))]))
+
+
+def wordpiece_token_counts(df: DataFrame, vocab, *,
                            text_col: str = "text",
-                           max_literal_pieces: int = _MAX_LITERAL_PIECES
-                           ) -> DataFrame:
+                           id_col: str = "doc_id") -> DataFrame:
+    """Per-document WordPiece token count and [UNK]-word count under a
+    FIXED vocabulary (iterable of pieces; word-internal pieces spelled
+    with the ``##`` prefix) — the tokenizer-APPLICATION side, value-
+    oracled via a DuckDB recursive CTE replaying the same greedy
+    longest-match walk (``wordpiece_token_counts`` in __spark_entry__).
+
+    Each distinct word is segmented once by the broadcast walk; its
+    token count is the number of pieces and it is an [UNK] word when
+    the pieces are exactly ``[UNK]``.
+
+    Returns (id_col, n_tokens, n_unk_words); empty docs report (0, 0).
+    """
+    vocab = set(vocab)   # materialize: generators must not exhaust
+
+    def score(dw: DataFrame) -> DataFrame:
+        ps = F.col("ps")
+        return _per_word_bc(dw, vocab).select(
+            "word", F.size(ps).alias("n_tokens"),
+            (ps == F.array(F.lit(_UNK))).cast("int").alias("is_unk"))
+
+    return _per_doc_sums(df, score, text_col, id_col,
+                         n_tokens=F.col("n_tokens"),
+                         n_unk_words=F.col("is_unk"))
+
+
+def wordpiece_piece_counts(df: DataFrame, vocab, *,
+                           text_col: str = "text") -> DataFrame:
     """Corpus-weighted piece USAGE counts under a FIXED vocabulary:
     how often each piece (or '[UNK]', once per unmatched word) appears
     in the greedy segmentation — the unigram_piece_counts analog, and
@@ -275,33 +142,8 @@ def wordpiece_piece_counts(df: DataFrame, vocab, *,
     Value-oracled (`wordpiece_piece_counts` in __spark_entry__) by
     extending the greedy recursive CTE with the piece list.  Returns
     (piece, cnt)."""
-    vocab = set(vocab)
-    wv = (df.select(F.explode(word_tokens(F.col(text_col))).alias("word"))
-          .groupBy("word").agg(F.count(F.lit(1)).alias("cnt")))
-    if len(vocab) > max_literal_pieces:
-        bc = df.sparkSession.sparkContext.broadcast(vocab)
-        max_span = max((len(p[2:]) if p.startswith(_CONT) else len(p)
-                        for p in vocab), default=1)
-
-        def walk(batches):
-            import pandas as pd
-
-            vs = bc.value
-            for pdf in batches:
-                yield pd.DataFrame({
-                    "word": pdf["word"],
-                    "ps": [_greedy_pieces_py(w, vs, max_span)
-                           for w in pdf["word"]]})
-
-        segs = wv.join(wv.select("word").mapInPandas(
-            walk, "word string, ps array<string>"), "word")
-    else:
-        segs = wv.select(
-            "cnt", _greedy_pieces_col(F.col("word"), vocab).alias("ps"))
-    # explode_outer + null guard: see unigram_piece_counts — a plain
-    # explode invites a size() filter below the word agg
-    return (segs.select(F.explode_outer("ps").alias("piece"), "cnt")
-            .where(F.col("piece").isNotNull())
+    return (_per_word_bc(word_vocab(df, text_col), set(vocab))
+            .select(F.explode("ps").alias("piece"), "cnt")
             .groupBy("piece").agg(F.sum("cnt").alias("cnt")))
 
 
@@ -442,8 +284,7 @@ def wordpiece_train(df: DataFrame, *, n_merges: int = 10,
     from apache_beam_spark.plans.caching import release_local_checkpoint
 
     spark = df.sparkSession
-    wv = (df.select(F.explode(word_tokens(F.col(text_col))).alias("word"))
-          .groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+    wv = (word_vocab(df, text_col)
           .select("cnt", _symbolize(F.col("word")).alias("syms"))
           .localCheckpoint())
     merges = []

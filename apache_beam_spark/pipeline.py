@@ -19,7 +19,7 @@ plans; Spark's optimizer is our stages 3-5 (SURVEY.md §3.3).
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterable, Optional, Sequence, Union
+from typing import Any, Iterable, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -256,12 +256,3 @@ class PCollection:
 
     def explain(self, mode: str = "formatted") -> None:
         self.df.explain(mode)
-
-
-def as_column(fn_or_col: Union[Column, str, Callable[[DataFrame], Column]], df: DataFrame) -> Column:
-    """Accept a Column, SQL-expression string, or df->Column callable."""
-    if isinstance(fn_or_col, Column):
-        return fn_or_col
-    if isinstance(fn_or_col, str):
-        return F.expr(fn_or_col)
-    return fn_or_col(df)

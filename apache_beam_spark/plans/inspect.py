@@ -56,10 +56,6 @@ def broadcast_join_count(df: DataFrame) -> int:
     return plan_string(df).count("BroadcastHashJoin")
 
 
-def sortmerge_join_count(df: DataFrame) -> int:
-    return plan_string(df).count("SortMergeJoin")
-
-
 def wholestage_codegen_ids(df: DataFrame) -> set[int]:
     """Distinct whole-stage-codegen span ids; wider/fewer spans = more
     of the query fused into generated JVM code.

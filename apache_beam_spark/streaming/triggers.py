@@ -27,6 +27,7 @@ from typing import Optional
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 from apache_beam_spark.streaming.timers import stateful_do_fn
 
@@ -378,10 +379,16 @@ def triggered_windowed_sum(
         # for closed windows so their residual state is reclaimed
         ctx.set_timer("__wgc__", wend + lateness_ms)
 
-    win = F.window(F.col(event_time), window_size)
+    wend = F.window(F.col(event_time), window_size)["end"]
+    if isinstance(df.schema[event_time].dataType, TimestampNTZType):
+        # TIMESTAMP_NTZ cannot cast to a number; read its wall clock as
+        # UTC, as the pandas side above reads the element timestamps
+        wend_ms = F.timestamp_diff(
+            "MILLISECOND", F.lit("1970-01-01").cast("timestamp_ntz"), wend)
+    else:
+        wend_ms = F.unix_millis(wend)
     tagged = (df
-              .withColumn("__wend_ms__",
-                          (win["end"].cast("double") * 1000).cast("long"))
+              .withColumn("__wend_ms__", wend_ms)
               .select(F.col(key).alias("__k__"), value_col, event_time,
                       "__wend_ms__"))
     return stateful_do_fn(

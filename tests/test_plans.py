@@ -362,14 +362,22 @@ def test_dsir_select_no_global_window_funnel(spark):
 
 
 def test_wordpiece_literal_path_stays_jvm(spark):
-    """The demo-vocab WordPiece walk is a pure-Column fold: no python
-    stages; the doc aggregation + distinct-word join keep the shuffle
-    count small."""
+    """The demo-vocab WordPiece query keeps everything but the walk in
+    the JVM: no row-level python UDF, the one python stage (the walk)
+    reads the distinct-word aggregation's output rather than the
+    per-token explode, and the doc aggregation + distinct-word join
+    keep the shuffle count small."""
     from apache_beam_spark.plans import plan_string
+    from apache_beam_spark.plans.inspect import _subtrees
 
     df = Q["wordpiece_token_counts"](spark, SF)
     p = plan_string(df)
-    assert "MapInPandas" not in p and "ArrowEvalPython" not in p
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    walks = [n for n in _subtrees(df._jdf.queryExecution().optimizedPlan())
+             if n.nodeName() == "MapInPandas"]
+    assert len(walks) == 1
+    assert any(n.nodeName() == "Aggregate"
+               for n in _subtrees(walks[0].child()))
     assert shuffle_count(df) <= 4
 
 
@@ -379,13 +387,15 @@ def test_production_tokenizer_paths_are_single_python_stage(spark):
     prints the node in the tree and the detail section, hence the
     node-id count) and never a replace chain — plan-size constancy in
     vocabulary is asserted separately in tests/test_tokenizer_scale.py.
+    WordPiece has only this path, so its demo-vocabulary query is held
+    to it too.
     """
     import re
 
     from apache_beam_spark.plans import plan_string
 
     for name in ("bpe_rank_token_counts", "unigram_token_counts_bc",
-                 "wordpiece_token_counts_bc"):
+                 "wordpiece_token_counts", "wordpiece_token_counts_bc"):
         df = Q[name](spark, SF)
         p = plan_string(df)
         ids = set(re.findall(r"\(\d+\) MapInPandas", p))

@@ -21,10 +21,7 @@ from apache_beam_spark.operators.bpe import (
     bpe_encode_rank,
     bpe_encode_token_counts,
 )
-from apache_beam_spark.operators.unigram import (
-    unigram_piece_counts,
-    unigram_segment,
-)
+from apache_beam_spark.operators.unigram import unigram_segment
 from apache_beam_spark.plans import plan_string
 from apache_beam_spark.sources.tables import load_table
 
@@ -144,16 +141,6 @@ def test_unigram_broadcast_equals_literal_segment(spark):
     lit = unigram_segment(docs, DEMO_PIECES, unk_cost=14)
     bc = unigram_segment(docs, DEMO_PIECES, unk_cost=14,
                          max_literal_pieces=0)
-    assert _rows(lit) == _rows(bc)
-
-
-def test_unigram_broadcast_equals_literal_piece_counts(spark):
-    """Same pin for the walk path (piece usage counts) — the Python
-    backtrack implements the identical shortest-piece tie-break."""
-    docs = load_table(spark, "documents", SF)
-    lit = unigram_piece_counts(docs, DEMO_PIECES, unk_cost=14)
-    bc = unigram_piece_counts(docs, DEMO_PIECES, unk_cost=14,
-                              max_literal_pieces=0)
     assert _rows(lit) == _rows(bc)
 
 

@@ -181,6 +181,33 @@ def test_triggered_windowed_sum_end_to_end(spark, tmp_path):
     assert a.on_time_index.tolist() == [-1, 0]
 
 
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_triggered_windowed_sum_event_time_types(spark, tmp_path, ts_type):
+    """Both event-time types give the same panes: a TIMESTAMP_NTZ
+    column (the documents/events fixtures' type) is read as UTC wall
+    clock, like the engine's UTC session reads TIMESTAMP."""
+    from apache_beam_spark.streaming import TestStream, run_to_memory
+    from apache_beam_spark.streaming.triggers import triggered_windowed_sum
+
+    ts = TestStream(str(tmp_path / f"spool_{ts_type}"))
+    ts.add_elements([{"user": "a", "ts": f"2024-01-01 00:00:{s:02d}",
+                      "amount": float(s)} for s in (10, 20, 30)])
+    ts.add_elements([{"user": "b", "ts": "2024-01-01 01:00:00",
+                      "amount": 9.0}])
+    out = triggered_windowed_sum(
+        ts.stream(spark, f"user string, ts {ts_type}, amount double"),
+        key="user", value_col="amount", window_size="1 minute",
+        trigger=Repeatedly(AfterPane(2)).or_finally(AfterWatermark()),
+        order_by=["ts", "amount"])
+    got = run_to_memory(out, "append").toPandas()
+    a = got[got.key == "a"].sort_values("pane_index")
+    base = 1704067200000  # 2024-01-01 00:00:00 UTC in ms
+    assert a.window_end_ms.tolist() == [base + 60_000] * 2
+    assert a.pane_ts_ms.tolist() == [base + 60_000] * 2
+    assert a.timing.tolist() == ["EARLY", "ON_TIME"]
+    assert a.total.tolist() == [30.0, 60.0]
+
+
 def test_window_expiry_fires_pending_pane(spark, tmp_path):
     """ReduceFnRunner.onGarbageCollection (ReduceFnRunner.java:775-783):
     at window expiry an UNFINISHED trigger emits its pending pane iff

@@ -232,17 +232,20 @@ def test_train_single_round_and_tight_vocab(spark):
 
 
 def test_piece_counts_walk_stays_above_word_agg(spark):
-    """Plan pin for the explode_outer fix: with a plain explode,
-    Catalyst infers `size(ps) > 0` from the Generate and — ps being a
-    function of the grouping key — pushes the whole Viterbi walk BELOW
-    the word aggregation, evaluating it once per corpus token instead
-    of once per distinct word (~100x wall at sf0.1).  No Filter node
-    may contain a higher-order aggregate() expression."""
+    """The Viterbi walk must run once per DISTINCT word: its python
+    stage reads the word aggregation's output, never the per-token
+    explode below it (a walk evaluated once per corpus token — what a
+    Catalyst-inferred filter pushed below the word agg once did — was
+    ~100x wall at sf0.1)."""
+    from apache_beam_spark.plans.inspect import _subtrees
+
     plan = unigram_piece_counts(
         _docs(spark, CORPUS), PIECES,
-        unk_cost=UNK)._jdf.queryExecution().executedPlan().toString()
-    assert not [ln for ln in plan.splitlines()
-                if "Filter" in ln and "aggregate(" in ln]
+        unk_cost=UNK)._jdf.queryExecution().optimizedPlan()
+    walks = [n for n in _subtrees(plan) if n.nodeName() == "MapInPandas"]
+    assert len(walks) == 1
+    assert any(n.nodeName() == "Aggregate"
+               for n in _subtrees(walks[0].child()))
 
 
 def test_train_learns_frequent_whole_words(spark):

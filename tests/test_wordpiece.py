@@ -1,7 +1,7 @@
 """Distributed WordPiece tokenizer (operators/wordpiece.py) vs
 sequential references: the greedy longest-match encode (HuggingFace
-all-or-nothing [UNK] semantics), the literal-vs-broadcast path pin,
-and the likelihood-gain trainer round by round."""
+all-or-nothing [UNK] semantics), piece usage counts, and the
+likelihood-gain trainer round by round."""
 
 from __future__ import annotations
 
@@ -94,24 +94,11 @@ def test_encode_empty_doc_reports_zero(spark):
     assert got[0] == (0, 0) and got[1] == (1, 0)
 
 
-def test_broadcast_equals_literal(spark):
-    """Forcing the broadcast-set mapInPandas path (max_literal_pieces=0)
-    reproduces the Column fold row-for-row — the production-vocabulary
-    pin, same as the BPE/unigram twins."""
-    df = _docs(spark, CORPUS)
-    lit = sorted(tuple(r) for r in
-                 wordpiece_token_counts(df, VOCAB).collect())
-    bc = sorted(tuple(r) for r in
-                wordpiece_token_counts(df, VOCAB,
-                                       max_literal_pieces=0).collect())
-    assert lit == bc
-
-
 def test_broadcast_word_length_guard():
-    from apache_beam_spark.operators.wordpiece import _greedy_word_py
+    from apache_beam_spark.operators.wordpiece import _greedy_pieces_py
 
     with pytest.raises(ValueError, match="longer than"):
-        _greedy_word_py("x" * 5000, {"x"}, 1)
+        _greedy_pieces_py("x" * 5000, {"x"}, 1)
 
 
 def test_large_vocab_plan_constant(spark):
@@ -410,18 +397,6 @@ def test_piece_counts_match_reference(spark):
            wordpiece_piece_counts(_docs(spark, CORPUS), VOCAB).collect()}
     assert got == _ref_piece_counts(CORPUS, VOCAB)
     assert "[UNK]" in got          # the unmatched words actually count
-
-
-def test_piece_counts_broadcast_equals_literal(spark):
-    from apache_beam_spark.operators.wordpiece import wordpiece_piece_counts
-
-    df = _docs(spark, CORPUS)
-    lit = sorted(tuple(r) for r in
-                 wordpiece_piece_counts(df, VOCAB).collect())
-    bc = sorted(tuple(r) for r in
-                wordpiece_piece_counts(df, VOCAB,
-                                       max_literal_pieces=0).collect())
-    assert lit == bc
 
 
 def test_piece_counts_sum_matches_token_counts(spark):
