@@ -2386,10 +2386,14 @@ def _llm_corpus_prep(spark, sf_dir):
 
 def _corpus_prep_stages(spark, sf_dir):
     """Shared stage graph for the corpus-prep pipeline (consumed by
-    `_llm_corpus_prep` and `_corpus_prep_stats`)."""
+    `_llm_corpus_prep` and `_corpus_prep_stats`).  The near-dup edges
+    are driver-sized at every fixture scale, so the CC stage is one
+    bounded edge collect plus a driver union-find (dedup/components.py
+    ``_DRIVER_MAX_EDGES``), not per-round Spark jobs."""
     from apache_beam_spark.dedup.components import dup_clusters
     from apache_beam_spark.dedup.exact import exact_dedup
     from apache_beam_spark.operators.packing import pack_greedy
+    from apache_beam_spark.plans.caching import cache_scoped
 
     # fixture trim (VERDICT r10 item 3): EVEN doc ids only — every
     # stage (quality gate, lang filter, exact dedup, jaccard pairs,
@@ -2402,9 +2406,9 @@ def _corpus_prep_stages(spark, sf_dir):
             .filter(F.col("lang").isin("en", "de", "fr", "es")))
     # the survivor set is consumed by four downstream stages (pair
     # generation, CC node universe, representative semi-join, packing)
-    # and the CC loop runs actions during construction — materialize
-    # the quality+dedup subtree exactly once
-    uniq = exact_dedup(kept).cache()
+    # and the CC edge probe runs an action during construction —
+    # materialize the quality+dedup subtree exactly once
+    uniq = cache_scoped(exact_dedup(kept))
     # expand="star": the CC consumer needs connectivity, not the full
     # pair list — clone groups emit linear spanning edges, identical
     # components (dedup/ngram.py module docstring)
@@ -2538,10 +2542,13 @@ def _ngram_containment(spark, sf_dir):
 
 def _dup_clusters(spark, sf_dir):
     """Near-dup pairs -> clusters: n-gram Jaccard >= 0.5 pairs as the
-    edge set, distributed hash-min connected components (one shuffle
-    join + one shuffle agg per round, O(diameter) rounds) to label
-    every document with its cluster's min doc_id.  Singletons keep
-    their own id.  Edge mining runs ``expand="star"`` — clone groups
+    edge set, connected components to label every document with its
+    cluster's min doc_id.  The pair list is driver-sized here, so CC is
+    one bounded edge collect and a driver union-find whose labels are
+    broadcast-joined onto the doc ids; pair lists above
+    ``_DRIVER_MAX_EDGES`` take the distributed hash-min + large-star/
+    small-star path (dedup/components.py).  Singletons keep their
+    own id.  Edge mining runs ``expand="star"`` — clone groups
     contribute linear spanning edges with identical components (the
     r4-verdict superlinear fix).  Oracle: transitive closure via
     recursive CTE over the full pair list — same components either
@@ -2669,8 +2676,10 @@ def _planted_embeddings(spark, sf_dir):
     # AFTER planting so the pair construction itself is unchanged.
     # The (id, vec) corpus feeds several plan branches; cache the
     # narrow projection so the planted join isn't recomputed per branch
-    return (emb.unionByName(planted)
-            .filter(F.col("vec_id") % 2 == 0).cache())
+    from apache_beam_spark.plans.caching import cache_scoped
+
+    return cache_scoped(emb.unionByName(planted)
+                        .filter(F.col("vec_id") % 2 == 0))
 
 
 def _embed_near_dup(spark, sf_dir):
@@ -2690,7 +2699,8 @@ def _semantic_dedup(spark, sf_dir):
     nearest fixed centroid (the first 8 base embeddings — value-
     checkable, same strategy as embed_kmeans_fixed), mine exact-cosine
     >= 0.95 pairs WITHIN each cell only, resolve clusters by
-    connected components, keep the min-id representative.
+    connected components (a driver union-find while the pair list is
+    driver-sized, dedup/components.py), keep the min-id representative.
 
     Scale shape (VERDICT r2 item 1): in-cell candidate mining is NOT
     an all-pairs join on the cell id (O((N/k)^2) at fixed k) — it is

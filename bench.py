@@ -373,6 +373,7 @@ def main() -> None:
         "headline_cold_pass_seconds": cold_total,
         "contaminated": contaminated,
         "waited_for_quiet_sec": waited,
+        "canary_med": canary_med,
         **steal,
         **host,
         **host_min,

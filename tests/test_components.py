@@ -90,3 +90,126 @@ def test_containment_finds_subsumed_doc(spark):
     got = {(r["id_a"], r["id_b"]): r["containment"]
            for r in ngram_containment_pairs(df, threshold=0.8).collect()}
     assert got == {(2, 1): 1.0}
+
+
+# ---------------------------------------------------------------------------
+# null endpoints, both branches of the auto CC, adversarial edge lists
+# ---------------------------------------------------------------------------
+
+import pytest  # noqa: E402
+
+from apache_beam_spark.dedup import components as C  # noqa: E402
+from tests.test_property_based import _union_find_components  # noqa: E402
+
+_PATHS = ("hash_min", "two_phase", "auto_driver", "auto_distributed")
+
+
+def _run_path(path, monkeypatch, e, nodes=None):
+    if path == "hash_min":
+        return C.connected_components(e, nodes=nodes)
+    if path == "two_phase":
+        return C.connected_components_two_phase(e, nodes=nodes)
+    if path == "auto_distributed":
+        monkeypatch.setattr(C, "_DRIVER_MAX_EDGES", 0)
+    return C.connected_components_auto(e, nodes=nodes)
+
+
+@pytest.mark.parametrize("path", _PATHS)
+def test_null_endpoint_adds_only_its_other_endpoint(spark, monkeypatch, path):
+    """An edge with one null endpoint adds only its non-null endpoint as
+    a node, an all-null edge adds nothing, and null is never a node —
+    also when the node universe itself holds a null id."""
+    e = spark.createDataFrame([(1, None), (2, 3), (None, None)],
+                              "src long, dst long")
+    n = spark.createDataFrame([(x,) for x in (1, 2, 3, 4, None)], "id long")
+    with_universe = {r["node"]: r["comp"]
+                     for r in _run_path(path, monkeypatch, e, n).collect()}
+    assert with_universe == {1: 1, 2: 2, 3: 2, 4: 4}
+    edges_only = {r["node"]: r["comp"]
+                  for r in _run_path(path, monkeypatch, e).collect()}
+    assert edges_only == {1: 1, 2: 2, 3: 2}
+
+
+#: (edges, edge schema, node ids, node schema, output schema at the
+#: parent of the driver branch — both branches must keep it)
+_ADVERSARIAL = {
+    "self_loops": ([(1, 1), (2, 2), (2, 3)], "src long, dst long",
+                   [1, 2, 3, 4], "id long", "struct<node:bigint,comp:bigint>"),
+    "duplicate_and_reversed": ([(5, 9), (9, 5), (5, 9), (9, 7), (7, 9)],
+                               "src long, dst long", [1, 5, 7, 9], "id long",
+                               "struct<node:bigint,comp:bigint>"),
+    "duplicate_universe_ids": ([(2, 3)], "src long, dst long",
+                               [1, 1, 2, 3, 3, 4], "id long",
+                               "struct<node:bigint,comp:bigint>"),
+    "empty_edges": ([], "src long, dst long", [3, 1, 2], "id long",
+                    "struct<node:bigint,comp:bigint>"),
+    "int_universe_bigint_edges": ([(1, 2), (4, 3), (3, 2)],
+                                  "src long, dst long", [1, 2, 3, 4, 5],
+                                  "id int", "struct<node:bigint,comp:int>"),
+}
+
+
+@pytest.mark.parametrize("branch", ["driver", "distributed"])
+@pytest.mark.parametrize("case", sorted(_ADVERSARIAL))
+def test_auto_cc_adversarial_edge_lists(spark, monkeypatch, branch, case):
+    edges, eschema, ids, nschema, out_schema = _ADVERSARIAL[case]
+    if branch == "distributed":
+        monkeypatch.setattr(C, "_DRIVER_MAX_EDGES", 0)
+    e = spark.createDataFrame(edges, eschema)
+    n = spark.createDataFrame([(x,) for x in ids], nschema)
+    out = C.connected_components_auto(e, nodes=n)
+    assert out.schema.simpleString() == out_schema
+    rows = out.collect()
+    assert len(rows) == len({r["node"] for r in rows})  # one row per node
+    assert {r["node"]: r["comp"] for r in rows} == \
+        _union_find_components(edges, ids)
+
+
+def test_dup_clusters_build_submits_at_most_two_jobs(spark):
+    """Building dup_clusters on a driver-sized graph runs only the edge
+    probe (the hash-min build ran 33 jobs of checkpoint stages and
+    convergence collects on this graph)."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([(5, 9), (9, 7), (11, 12)],
+                                  "id_a long, id_b long")
+    ids = spark.createDataFrame([(x,) for x in (1, 5, 7, 9, 11, 12)],
+                                "doc_id long")
+    group = "dup-clusters-build-jobs"
+    sc.setJobGroup(group, "dup_clusters build")
+    try:
+        out = dup_clusters(pairs, ids)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert {r["doc_id"]: r["component"] for r in out.collect()} == {
+        1: 1, 5: 5, 7: 5, 9: 5, 11: 11, 12: 11}
+
+
+def _leaf_classes(plan):
+    kids = plan.children()
+    if kids.size() == 0:
+        return [plan.getClass().getSimpleName()]
+    return [c for i in range(kids.size())
+            for c in _leaf_classes(kids.apply(i))]
+
+
+def test_distributed_branch_reads_cached_edge_frame(spark, monkeypatch):
+    """On the distributed branch every leaf of the symmetric edge frame
+    is the cached (u, v) projection the probe read, so the upstream
+    edge DAG is not computed again by the propagation rounds."""
+    seen = []
+    loop = C._hashmin_loop
+
+    def spy(sym, labels, max_rounds):
+        seen.append(sym)
+        return loop(sym, labels, max_rounds)
+
+    monkeypatch.setattr(C, "_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(C, "_hashmin_loop", spy)
+    e = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
+    got = {r["node"]: r["comp"]
+           for r in C.connected_components_auto(e).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    (sym,) = seen
+    leaves = _leaf_classes(sym._jdf.queryExecution().optimizedPlan())
+    assert leaves and set(leaves) == {"InMemoryRelation"}

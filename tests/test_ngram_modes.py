@@ -160,6 +160,25 @@ def test_scoped_caches_released_after_action(spark):
     assert not (persistent_rdd_ids(sc) & scope_ids)  # released on exit
 
 
+def test_llm_corpus_prep_leaves_no_persistent_rdd(spark):
+    """Every cache the corpus-prep pipeline takes (the exact-dedup
+    survivor set, the CC edge frame) is scoped: building and collecting
+    it inside scoped_caches() leaves no new persistent RDD behind."""
+    import __spark_entry__ as entry
+    from apache_beam_spark.plans.caching import (
+        persistent_rdd_ids, release_caches, scoped_caches)
+
+    from tests.conftest import SF_DIR
+
+    release_caches()
+    sc = spark.sparkContext
+    base_ids = persistent_rdd_ids(sc)
+    with scoped_caches():
+        entry.queries()["llm_corpus_prep"](spark, SF_DIR).collect()
+        assert persistent_rdd_ids(sc) - base_ids  # caches in use
+    assert not (persistent_rdd_ids(sc) - base_ids)
+
+
 def test_release_caches_drains_global_registry(spark):
     from apache_beam_spark.dedup.ngram import ngram_jaccard_pairs
     from apache_beam_spark.plans.caching import (

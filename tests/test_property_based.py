@@ -248,16 +248,29 @@ def test_two_phase_cc_matches_union_find(spark, edges):
     assert got == _union_find_components(edges, nodes)
 
 
+def _set_driver_max_edges(monkeypatch, branch):
+    """``driver`` keeps the module's bound (these graphs fit it: the
+    driver union-find runs); ``distributed`` sets it to 0, so every
+    non-empty edge list takes the hash-min + contraction path."""
+    from apache_beam_spark.dedup import components
+
+    if branch == "distributed":
+        monkeypatch.setattr(components, "_DRIVER_MAX_EDGES", 0)
+
+
+@pytest.mark.parametrize("branch", ["driver", "distributed"])
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(edges=st.lists(st.tuples(st.integers(0, 25), st.integers(0, 25)),
                       max_size=30))
-def test_auto_cc_matches_union_find(spark, edges):
-    """The hybrid must be result-identical to union-find whichever
-    phase finishes the graph; hashmin_rounds=1 forces the contraction
-    + two-phase handoff on almost every non-trivial input."""
+def test_auto_cc_matches_union_find(spark, monkeypatch, branch, edges):
+    """The auto CC must be result-identical to union-find whichever
+    branch and phase finishes the graph; on the distributed branch
+    hashmin_rounds=1 forces the contraction + two-phase handoff on
+    almost every non-trivial input."""
     from apache_beam_spark.dedup.components import connected_components_auto
 
+    _set_driver_max_edges(monkeypatch, branch)
     edges = [(a, b) for a, b in edges if a != b]
     nodes = sorted({n for e in edges for n in e} | {0, 25})
     e = spark.createDataFrame(edges or [(0, 0)], "src long, dst long") \
@@ -269,12 +282,15 @@ def test_auto_cc_matches_union_find(spark, edges):
     assert got == _union_find_components(edges, nodes)
 
 
-def test_auto_cc_high_diameter_chain(spark):
+@pytest.mark.parametrize("branch", ["driver", "distributed"])
+def test_auto_cc_high_diameter_chain(spark, monkeypatch, branch):
     """A 60-node path graph (diameter 59): pure hash-min would need ~60
-    rounds; the hybrid must finish exactly — and the switch must kick
-    in after hashmin_rounds — with every node labeled 0."""
+    rounds; the auto CC must finish exactly — on the distributed branch
+    the switch must kick in after hashmin_rounds — with every node
+    labeled 0."""
     from apache_beam_spark.dedup.components import connected_components_auto
 
+    _set_driver_max_edges(monkeypatch, branch)
     e = spark.createDataFrame([(i, i + 1) for i in range(59)],
                               "src long, dst long")
     got = connected_components_auto(e, hashmin_rounds=3)
