@@ -134,3 +134,40 @@ def bucket_pairs(members: DataFrame, bucket_keys: Sequence[str],
         .filter(F.col("id_a") < F.col("id_b"))
     )
     return small.unionByName(big_pairs).distinct()
+
+
+def expand_rep_pairs(rep_pairs: DataFrame, rep_map: DataFrame,
+                     expand: str = "full", max_bucket: int = 10000,
+                     observation: Optional["Observation"] = None) -> DataFrame:
+    """Re-expand ``(id_a < id_b, *sims)`` pairs mined at clone-group
+    representative granularity back to member granularity — the
+    collapse plan's last step, shared by every miner whose pairs are
+    symmetric.  ``rep_map``: one ``(id, rep)`` row per member, ``rep``
+    the group's min id (a rep maps to itself).
+
+    * ``"full"``: every member pair.  Cross-group pairs inherit their
+      rep pair's sims (groups are disjoint, so no pair repeats);
+      within-group pairs come from ``bucket_pairs`` over the rep key
+      (no-drop chunked triangles; ``observation`` attaches there).
+    * ``"star"``: the rep pairs plus one ``(rep, member)`` spanning
+      edge per non-rep member — linear output, identical connected
+      components.
+
+    Any sim column rides through the rep pairs unchanged and is 1.0 on
+    within-group and star edges (clones are identical)."""
+    sims = [c for c in rep_pairs.columns if c not in ("id_a", "id_b")]
+    ones = [F.lit(1.0).alias(c) for c in sims]
+    if expand == "star":
+        star = (rep_map.filter(F.col("id") != F.col("rep"))
+                .select(F.col("rep").alias("id_a"), F.col("id").alias("id_b"),
+                        *ones))
+        return rep_pairs.unionByName(star)
+    ga = rep_map.select(F.col("rep").alias("id_a"), F.col("id").alias("__ma__"))
+    gb = rep_map.select(F.col("rep").alias("id_b"), F.col("id").alias("__mb__"))
+    cross = (rep_pairs.join(ga, on="id_a").join(gb, on="id_b")
+             .select(F.least("__ma__", "__mb__").alias("id_a"),
+                     F.greatest("__ma__", "__mb__").alias("id_b"), *sims))
+    within = bucket_pairs(rep_map.select(F.col("rep").alias("bk"), "id"),
+                          ["bk"], id_col="id", max_bucket=max_bucket,
+                          observation=observation).select("id_a", "id_b", *ones)
+    return cross.unionByName(within)

@@ -13,10 +13,11 @@ Scale notes (100 TB):
   * signatures are k*8 bytes/doc — the heavy text column never shuffles;
   * band explode is k/r rows/doc of (band_hash, id) — tiny;
   * bucket-min dedup avoids materializing candidate pairs entirely;
-  * pair generation collapses identical signatures to one
-    representative and triangle-splits over-cap buckets
-    (``dedup/buckets.bucket_pairs``) — degenerate buckets from
-    boilerplate-heavy docs are bounded per task, never dropped.
+  * on a clone flood (``dedup/probe.py``) pair generation collapses
+    identical signatures to one representative; over-cap buckets are
+    triangle-split (``dedup/buckets.bucket_pairs``) — degenerate
+    buckets from boilerplate-heavy docs are bounded per task, never
+    dropped.
 """
 
 from __future__ import annotations
@@ -213,33 +214,30 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
                       num_hashes: int = 64, num_bands: int = 16, shingle_k: int = 3,
                       threshold: float = 0.5, seed: int = 42,
                       max_bucket: int = 1000,
-                      observation=None, has_dups=None,
-                      max_clone_width: int = 32,
-                      clone_fraction: float = 0.05) -> DataFrame:
+                      observation=None) -> DataFrame:
     """Candidate near-dup pairs with estimated jaccard (signature
     agreement rate), verified against ``threshold``.
 
-    Bucket discipline (VERDICT r3 item 1): ids with IDENTICAL
-    signatures collapse to their min-id representative before
-    bucketing, and over-cap buckets are chunked + triangle-split by
-    ``dedup/buckets.bucket_pairs`` — never silently dropped, so a
-    boilerplate-heavy corpus's most-duplicated content (est_jaccard
-    1.0, the exact pairs dedup exists for) always surfaces.  Pass an
-    ``Observation`` for overcap counters.
+    Bucket discipline (VERDICT r3 item 1): over-cap buckets are
+    chunked + triangle-split by ``dedup/buckets.bucket_pairs`` — never
+    silently dropped, so a boilerplate-heavy corpus's most-duplicated
+    content (est_jaccard 1.0, the exact pairs dedup exists for) always
+    surfaces.  Pass an ``Observation`` for overcap counters.
 
-    ``has_dups``: ``None`` consults the MEMOIZED corpus-level clone
-    probe (``dedup/probe.py`` — token-stream-identical docs have
-    identical signatures, and the one probe job is shared across the
-    whole miner family per process); the collapse engages when a
-    clone group exceeds ``max_clone_width`` OR clones exceed
-    ``clone_fraction`` of the corpus — sparse narrow dup groups cost
-    less inside the buckets than the expansion joins save; either
-    flood shape pays them.  Pass ``True``/``False`` to skip the probe
-    and pin the plan.  Output identical either way.
+    Plan: when the memoized corpus clone probe
+    (``dedup/probe.should_collapse`` — token-stream-identical docs have
+    identical signatures) finds a flood, ids with IDENTICAL signatures
+    collapse to their min-id representative before bucketing and the
+    rep pairs re-expand through ``dedup/buckets.expand_rep_pairs``;
+    otherwise narrow dup groups ride the buckets directly.  Output
+    identical either way.
 
     Returns (id_a, id_b, est_jaccard) with id_a < id_b.
     """
-    from apache_beam_spark.dedup.buckets import bucket_pairs
+    from pyspark.sql.window import Window as W
+
+    from apache_beam_spark.dedup.buckets import bucket_pairs, expand_rep_pairs
+    from apache_beam_spark.dedup.probe import should_collapse
 
     r = num_hashes // num_bands
     # NO cache here: minhash_signature_table is already cache_scoped,
@@ -250,17 +248,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     sigs = (minhash_signature_table(df, text_col, id_col, num_hashes,
                                     shingle_k, seed)
             .select("id", F.col("__sig__").alias("sig")))
-    from pyspark.sql.window import Window as W
-
-    if has_dups is None:
-        from apache_beam_spark.dedup.probe import should_collapse
-
-        has_dups = should_collapse(df, text_col, max_clone_width,
-                                   clone_fraction)
     bands = sigs.select(
         "id", F.explode(_band_rows("sig", num_bands, r)).alias("b")
     ).select("id", "b.band", "b.bh")
-    if not has_dups:
+    if not should_collapse(df, text_col):
         # bounded-width path: narrow dup groups ride the buckets
         # directly — no rep window, no expansion joins
         pairs = bucket_pairs(bands, ["band", "bh"], id_col="id",
@@ -275,14 +266,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
                    .select("band", "bh", F.col("rep").alias("id")))
         rep_pairs = bucket_pairs(members, ["band", "bh"], id_col="id",
                                  max_bucket=max_bucket, observation=observation)
-        ga = rep_map.select(F.col("rep").alias("id_a"), F.col("id").alias("__ma__"))
-        gb = rep_map.select(F.col("rep").alias("id_b"), F.col("id").alias("__mb__"))
-        cross = (rep_pairs.join(ga, on="id_a").join(gb, on="id_b")
-                 .select(F.least("__ma__", "__mb__").alias("id_a"),
-                         F.greatest("__ma__", "__mb__").alias("id_b")))
-        within = bucket_pairs(rep_map.select(F.col("rep").alias("bk"), "id"),
-                              ["bk"], id_col="id", max_bucket=max_bucket)
-        pairs = cross.unionByName(within).distinct()
+        pairs = expand_rep_pairs(rep_pairs, rep_map,
+                                 max_bucket=max_bucket).distinct()
     est = F.aggregate(
         F.zip_with("__sa__", "__sb__", lambda x, y: (x == y).cast("int")),
         F.lit(0), lambda acc, v: acc + v,

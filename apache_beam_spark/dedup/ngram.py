@@ -14,20 +14,22 @@ ordering makes those postings the shortest ones.  At 100 TB the
 shuffles carry (shingle, id) prefix pairs and the verify joins full
 shingle arrays only for candidate pairs.
 
-Clone-group discipline (VERDICT r4 item 1, the ``minhash.py``/
-``knn.py`` rep-collapse pattern): documents with IDENTICAL
-(max_df-pruned) shingle sets collapse to their min-id representative
-BEFORE candidate generation, so a w-wide group of boilerplate clones
-contributes ONE posting per prefix shingle instead of w — the prefix
-self-join and the verify both run at representative granularity.
-Grouping is by the actual sorted shingle array (not a hash), so the
-collapse is exact: members share every Jaccard value their rep has,
-and within-group pairs are exactly 1.0.  ``expand="full"`` (the pair
-CONTRACT) re-expands groups into every member pair — inherently
-quadratic because the true answer is; ``expand="star"`` emits one
-spanning (rep, member) edge per clone instead — linear output with
-identical connected components, the right mode when the consumer is
-cluster resolution (``dup_clusters``), not the pair list itself.
+Clone-group discipline (the ``minhash.py``/``knn.py`` rep-collapse
+pattern): when the memoized corpus clone probe (``dedup/probe.py``)
+finds a flood, documents with IDENTICAL (max_df-pruned) shingle sets
+collapse to their min-id representative BEFORE candidate generation,
+so a w-wide group of boilerplate clones contributes ONE posting per
+prefix shingle instead of w — the prefix self-join and the verify both
+run at representative granularity.  Grouping is by the actual sorted
+shingle array (not a hash), so the collapse is exact: members share
+every Jaccard value their rep has, and within-group pairs are exactly
+1.0.  On a clean corpus the direct plan runs; both plans emit the same
+pairs.  ``expand="full"`` (the pair CONTRACT) re-expands groups into
+every member pair — inherently quadratic because the true answer is;
+``expand="star"`` emits one spanning (rep, member) edge per clone
+instead — linear output with identical connected components, the
+right mode when the consumer is cluster resolution (``dup_clusters``),
+not the pair list itself.
 
 Scale controls: ``max_df`` removes ultra-frequent boilerplate shingles
 from the universe entirely (consistently — they count in neither the
@@ -42,6 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from apache_beam_spark.dedup.buckets import (
+    bucket_pairs, expand_rep_pairs, zero_bucket_stats)
 from apache_beam_spark.functions.text import shingles
 from apache_beam_spark.plans.caching import cache_scoped
 
@@ -94,51 +98,35 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
                         shingle_k: int = 3, threshold: float = 0.3,
                         max_df: int = 10000, expand: str = "full",
                         max_bucket: int = 10000,
-                        observation=None, collapse: str = "auto",
-                        max_clone_width: int = 32,
-                        clone_fraction: float = 0.05) -> DataFrame:
+                        observation=None) -> DataFrame:
     """Exact n-gram Jaccard >= threshold pairs: (id_a, id_b, jaccard).
 
     ``expand``: ``"full"`` (default) emits every member pair of every
     clone group; ``"star"`` emits spanning edges per clone group —
     linear clone output, identical connected components (see module
     docstring).  Pass an ``Observation`` for the clone-group
-    re-expansion's overcap counters (full mode only).
+    re-expansion's overcap counters (collapse plan, full mode; zeroed
+    otherwise).
 
-    ``collapse``: ``"auto"`` (default) consults the MEMOIZED
-    corpus-level clone probe (``dedup/probe.py`` — one token-stream
-    hash agg per corpus per process, shared across the whole miner
-    family) and engages rep-collapse only when some clone group is
-    wider than ``max_clone_width`` OR clones exceed ``clone_fraction``
-    of the corpus — sparse narrow clone groups cost less in the direct
-    plan than the collapse machinery's extra stages; either flood
-    shape (one degenerate group, or pervasive duplication — the 100 TB
-    hazards the collapse exists for) trips the probe and pays them.
-    ``"always"`` / ``"never"`` pin the plan (lazy build, no probe
-    job).  All three settings produce identical FULL-mode output;
-    star mode without collapse degrades to the full pair list (a
+    The plan comes from the memoized corpus clone probe
+    (``dedup/probe.should_collapse``): the collapse plan on a clone
+    flood, the direct plan otherwise.  Both produce identical FULL-mode
+    output; star mode on the direct plan is the full pair list (a
     superset with the same components — still a valid spanning set
     for CC consumers).
     """
-    from apache_beam_spark.dedup.buckets import bucket_pairs
     from apache_beam_spark.dedup.probe import should_collapse
 
     if expand not in ("full", "star"):
         raise ValueError(f"expand must be 'full' or 'star', got {expand!r}")
-    if collapse not in ("auto", "always", "never"):
-        raise ValueError(
-            f"collapse must be 'auto'|'always'|'never', got {collapse!r}")
 
-    if collapse == "auto":
-        collapse = ("always" if should_collapse(df, text_col, max_clone_width,
-                                                clone_fraction)
-                    else "never")
+    collapse = should_collapse(df, text_col)
     ranked = _ranked_postings(df, text_col, id_col, shingle_k, max_df)
     # direct plan recomputes the per-doc arrays from the cached
     # postings per verify side (cheap agg); the collapse path builds
     # them once, SORTED (the window key must be canonical), and caches
     pruned = (cache_scoped(_pruned_sets(ranked, sort=True))
-              if collapse == "always" else _pruned_sets(ranked))
+              if collapse else _pruned_sets(ranked))
 
     prefix_all = ranked.filter(
         F.col("rn") <= F.col("n") - F.ceil(F.col("n") * F.lit(threshold)) + 1
@@ -176,7 +164,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
             .select("id_a", "id_b", "jaccard")
         )
 
-    if collapse == "never":
+    if not collapse:
         # direct plan: no rep window / semi-join / expansion stages
         cand = (
             prefix_all.alias("x").join(prefix_all.alias("y"), on="g")
@@ -202,8 +190,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
             # counters so the telemetry readout stays total (ADVICE r5)
             # — constants, so attaching above the cached verify is
             # equivalent to the old below-verify placement
-            from apache_beam_spark.dedup.buckets import zero_bucket_stats
-
             out = out.observe(observation, *zero_bucket_stats())
         return out.select("id_a", "id_b",
                           F.round("jaccard", 6).alias("jaccard"))
@@ -233,43 +219,19 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     if observation is not None and expand == "star":
         # star never re-expands through bucket_pairs — zeroed counters
         # (constants: placement above the cached verify is equivalent)
-        from apache_beam_spark.dedup.buckets import zero_bucket_stats
-
         rep_out = rep_out.observe(observation, *zero_bucket_stats())
 
-    if expand == "star":
-        # spanning edges only: identical sets -> J = exactly 1.0, no
-        # verify needed; linear output, same components as full
-        star = (rep_map.filter(F.col("id") != F.col("rep"))
-                .select(F.col("rep").alias("id_a"), F.col("id").alias("id_b"),
-                        F.lit(1.0).alias("jaccard")))
-        out = rep_out.unionByName(star)
-    else:
-        # re-expand rep pairs through their clone groups (disjoint
-        # groups -> no duplicates, members inherit the rep's exact
-        # jaccard), plus every within-group pair at J = 1.0 (identical
-        # sets) via the no-drop chunked discipline
-        ga = rep_map.select(F.col("rep").alias("id_a"), F.col("id").alias("__ma__"))
-        gb = rep_map.select(F.col("rep").alias("id_b"), F.col("id").alias("__mb__"))
-        cross = (rep_out.join(ga, on="id_a").join(gb, on="id_b")
-                 .select(F.least("__ma__", "__mb__").alias("id_a"),
-                         F.greatest("__ma__", "__mb__").alias("id_b"),
-                         "jaccard"))
-        within = bucket_pairs(
-            rep_map.select(F.col("rep").alias("bk"), "id"),
-            ["bk"], id_col="id", max_bucket=max_bucket,
-            observation=observation,
-        ).withColumn("jaccard", F.lit(1.0))
-        out = cross.unionByName(within)
+    # members inherit their rep pair's exact jaccard; within-group
+    # and star edges are J = 1.0 (identical sets, no verify needed)
+    out = expand_rep_pairs(rep_out, rep_map, expand, max_bucket,
+                           observation if expand == "full" else None)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", shingle_k: int = 3,
                             threshold: float = 0.8,
-                            max_df: int = 10000, collapse: str = "auto",
-                            max_clone_width: int = 32,
-                            clone_fraction: float = 0.05) -> DataFrame:
+                            max_df: int = 10000) -> DataFrame:
     """Asymmetric containment C(a in b) = |a∩b| / |a| >= threshold:
     detects documents SUBSUMED by larger ones (quote inclusion,
     boilerplate wrapping), which symmetric Jaccard misses whenever the
@@ -279,27 +241,21 @@ def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
     |a∩b| >= t|a|, one of a's first ``|a| - ceil(t|a|) + 1`` canonical
     shingles is in b), so candidates join a's prefix postings against
     b's full postings — ``max_df`` caps the hot-posting blowup the
-    full side would otherwise drive.  ``collapse`` (same contract as
-    ``ngram_jaccard_pairs``): when the clone-flood probe finds a group
-    wider than ``max_clone_width``, both sides run at clone-group
-    representative granularity (identical pruned sets share every
-    containment value) and re-expand; otherwise the direct plan runs —
-    identical output either way.  Output: (id_a, id_b, containment)
-    with a contained in b; both directions emitted when both hold
-    (within a clone group, both always hold at 1.0).
+    full side would otherwise drive.  When the memoized clone probe
+    (``dedup/probe.should_collapse``) finds a flood, both sides run at
+    clone-group representative granularity (identical pruned sets
+    share every containment value) and re-expand in both directions;
+    otherwise the direct plan runs — identical output either way.
+    Output: (id_a, id_b, containment) with a contained in b; both
+    directions emitted when both hold (within a clone group, both
+    always hold at 1.0).
     """
     from apache_beam_spark.dedup.probe import should_collapse
 
-    if collapse not in ("auto", "always", "never"):
-        raise ValueError(
-            f"collapse must be 'auto'|'always'|'never', got {collapse!r}")
-    if collapse == "auto":
-        collapse = ("always" if should_collapse(df, text_col, max_clone_width,
-                                                clone_fraction)
-                    else "never")
+    collapse = should_collapse(df, text_col)
     ranked = _ranked_postings(df, text_col, id_col, shingle_k, max_df)
     pruned = (cache_scoped(_pruned_sets(ranked, sort=True))
-              if collapse == "always" else _pruned_sets(ranked))
+              if collapse else _pruned_sets(ranked))
 
     def mine(postings):
         """Candidate generation + exact verify over one granularity.
@@ -334,7 +290,7 @@ def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
             .select("id_a", "id_b", "containment")
         )
 
-    if collapse == "never":
+    if not collapse:
         return mine(ranked).select(
             "id_a", "id_b", F.round("containment", 6).alias("containment"))
 
@@ -351,8 +307,6 @@ def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
     cross = (rep_out.join(ga, on="id_a").join(gb, on="id_b")
              .select(F.col("__ma__").alias("id_a"),
                      F.col("__mb__").alias("id_b"), "containment"))
-    from apache_beam_spark.dedup.buckets import bucket_pairs
-
     half = bucket_pairs(rep_map.select(F.col("rep").alias("bk"), "id"),
                         ["bk"], id_col="id")
     within = (half.unionByName(half.select(F.col("id_b").alias("id_a"),

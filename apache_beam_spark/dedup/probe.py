@@ -1,11 +1,25 @@
-"""Corpus-level clone-flood probe, shared by every near-dup miner.
+"""Corpus-level clone-flood probe: the one input that chooses every
+near-dup miner's plan.
 
-Round-5 gave each miner its own ``collapse='auto'`` probe — an eager
-aggregation over that miner's cached internal frame (ranked postings,
-minhash signatures, simhash table) at plan-BUILD time.  Correct, but
-the cost did not amortize: in an end-to-end suite every family member
-paid its own probe job (+15-35% wall on clean corpora, VERDICT r5
-finding 1).  The observation that fixes it: every miner's clone
+Each miner has two plans with identical output:
+
+* **direct** — mine the corpus as it is;
+* **collapse** — map every exact-clone group to its min-id
+  representative, mine at representative granularity, then re-expand
+  (``dedup/buckets.expand_rep_pairs``).  It is the only plan that
+  scales on exact-copy floods (SCALING.md round 6, 10x copies: direct
+  19.6 s, collapse 6.9 s), while on clean corpora its extra window,
+  semi-join and expansion stages cost more than they save.
+
+No caller picks between them.  The text miners (``ngram_jaccard_pairs``,
+``ngram_containment_pairs``, ``minhash_lsh_pairs``, ``simhash_dedup``)
+call ``should_collapse``, which trips on either flood shape: a clone
+group wider than ``MAX_CLONE_WIDTH``, or clones making up more than
+``CLONE_FRACTION`` of the corpus.  ``embedding_near_dup_pairs``
+collapses when its memoized ``(rows, distinct vectors)`` probe finds
+any exact duplicate.
+
+Why one text probe serves four miners: every miner's clone
 equivalence is a COARSENING of token-stream identity —
 
     identical token stream  =>  identical shingle multiset
@@ -14,19 +28,18 @@ equivalence is a COARSENING of token-stream identity —
                             =>  identical SimHash
 
 so ONE probe over ``xxhash64(concat_ws(' ', word_tokens(text)))``
-answers the flood question for the n-gram, containment, MinHash and
-SimHash miners at once, straight off the source table (one scan, one
-narrow hash agg — no shingling, no windows, no miner-internal cache
-materialization), and the result is MEMOIZED per logical plan
-(``DataFrame.semanticHash()``), so the first family member pays ~one
-small job and the rest of the suite reads a dict.
+answers the flood question for all of them, straight off the source
+table (one scan, one narrow hash agg — no shingling, no windows, no
+miner-internal cache materialization), and the result is MEMOIZED per
+logical plan (``DataFrame.semanticHash()``), so the first family
+member pays ~one small job and the rest of the suite reads a dict.
 
 Bias and safety: token-stream grouping REFINES each miner's own clone
 grouping, so the probe can only under-count clones that arise from the
 miner's extra normalization (e.g. two docs identical only after max_df
 pruning).  Under-counting errs toward the DIRECT plan, which is always
-correct — ``collapse``/``has_dups`` choose a physical strategy, never
-the answer (all modes produce identical output, asserted in
+correct — the probe chooses a physical strategy, never the answer
+(both plans' outputs are asserted equal on a clone flood in
 tests/test_ngram_modes.py) — and the over-cap bucket discipline
 (``dedup/buckets.bucket_pairs``: chunk + triangle-split, never drop)
 still bounds per-task width if an exotic flood slips past the probe.
@@ -52,6 +65,11 @@ from apache_beam_spark.functions.text import word_tokens
 
 _LOCK = threading.Lock()
 _MEMO: Dict[Tuple[int, str], object] = {}
+
+#: collapse when one token-stream clone group is wider than this
+MAX_CLONE_WIDTH = 32
+#: collapse when non-representative clones exceed this share of docs
+CLONE_FRACTION = 0.05
 
 
 def memoize_plan_stat(df: DataFrame, kind: str, compute):
@@ -101,14 +119,14 @@ def corpus_clone_stats(df: DataFrame, text_col: str = "text") -> Tuple[int, floa
     return memoize_plan_stat(df.select(F.col(text_col)), "__clones__", compute)
 
 
-def should_collapse(df: DataFrame, text_col: str,
-                    max_clone_width: int, clone_fraction: float) -> bool:
-    """Trip on either flood shape: one degenerate group (width) or
-    pervasive narrow duplication (fraction) — a corpus of 10x exact
-    copies has width 10 but pays ~w^2 candidate work on EVERY doc,
-    which rep-collapse cuts ~8x (measured, SCALING.md round 5)."""
+def should_collapse(df: DataFrame, text_col: str) -> bool:
+    """Trip on either flood shape: one degenerate group (width above
+    ``MAX_CLONE_WIDTH``) or pervasive narrow duplication (clone share
+    above ``CLONE_FRACTION``) — a corpus of 10x exact copies has width
+    10 but pays ~w^2 candidate work on EVERY doc, which rep-collapse
+    cuts ~8x (measured, SCALING.md round 5)."""
     wmax, frac = corpus_clone_stats(df, text_col)
-    return wmax > max_clone_width or frac > clone_fraction
+    return wmax > MAX_CLONE_WIDTH or frac > CLONE_FRACTION
 
 
 def clear_probe_memo() -> None:

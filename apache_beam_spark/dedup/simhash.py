@@ -95,41 +95,29 @@ def simhash_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 
 
 def simhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  max_hamming: int = 3, has_dups=None,
-                  max_clone_width: int = 32,
-                  clone_fraction: float = 0.05) -> DataFrame:
+                  max_hamming: int = 3) -> DataFrame:
     """Drop docs whose simhash is within ``max_hamming`` of a smaller-id
     doc (bucket-min over (d+1) chunk buckets + exact hamming verify).
 
-    Skew discipline (VERDICT r3 item 1): ids sharing an IDENTICAL
+    Skew discipline (VERDICT r3 item 1): when the memoized corpus clone
+    probe (``dedup/probe.should_collapse`` — token-stream-identical docs
+    have identical simhashes) finds a flood, ids sharing an IDENTICAL
     64-bit simhash collapse to their min-id representative before the
     chunk-bucket self-join, so a boilerplate-heavy corpus (many exact
     hash duplicates) joins one row per distinct hash instead of w —
     the equivalence is exact: a non-rep member is hamming-0 from its
     smaller rep (always dropped), and a rep needs dropping iff some
     SMALLER rep is within range (any smaller member's group rep is
-    smaller still, with the same hash).
-
-    ``has_dups``: ``None`` consults the MEMOIZED corpus-level clone
-    probe (``dedup/probe.py`` — token-stream-identical docs have
-    identical simhashes, and the one probe job is shared across the
-    whole miner family per process); the collapse engages when a
-    clone group exceeds ``max_clone_width`` OR clones exceed
-    ``clone_fraction`` of the corpus — sparse narrow dup groups cost
-    less in the direct self-join than the collapse window saves;
-    either flood shape pays it.  Pass ``True``/``False`` to pin the
-    plan.  Output identical either way."""
+    smaller still, with the same hash).  On a clean corpus the direct
+    self-join runs.  Output identical either way."""
+    from apache_beam_spark.dedup.probe import should_collapse
     from apache_beam_spark.plans.caching import cache_scoped
 
     n_chunks = max_hamming + 1
-    if has_dups is None:
-        from apache_beam_spark.dedup.probe import should_collapse
-
-        has_dups = should_collapse(df, text_col, max_clone_width,
-                                   clone_fraction)
+    collapse = should_collapse(df, text_col)
     # cache: (id, 64-bit hash) is ~16B/doc; reps + members read it twice
     sh = cache_scoped(simhash_table(df, text_col, id_col))
-    if not has_dups:
+    if not collapse:
         non_rep = None
         reps = sh
     else:

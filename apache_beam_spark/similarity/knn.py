@@ -40,21 +40,15 @@ def pair_cosine(df: DataFrame, a_col: str, b_col: str,
     (sequential adds, and the fold's 0.0 seed is exact), with the same
     cast-to-double per element and the same ``dot / (norm_a * norm_b)``
     op order.  Mismatched/absent arrays yield null, as ``zip_with``'s
-    null-padding does.  Two deliberate corner divergences, both pinned
-    in tests/test_knn_scale.py:
-
-    * a zero vector yields NaN here, where the HOF under ANSI raises
-      DIVIDE_BY_ZERO (verified empirically on Spark 4.1: double 0/0
-      DOES raise with ansi on) — no caller computes cosine of a zero
-      vector;
-    * a row whose array contains NaN **or null elements** yields a
-      null sim.  Arrow delivers null elements as NaN floats, so the
-      two are indistinguishable here; unmasked they produced a NaN
-      sim that sorts ABOVE every real double under ``sim.desc()``,
-      silently promoting corrupt vectors into top-k (ADVICE r13).
-      The HOF yields null for null elements (matched) and NaN for
-      literal-NaN elements (masked to null here — corrupt either
-      way, and null sorts LAST under desc).
+    null-padding does, and so do null elements.  A NaN quotient (a NaN
+    element — Arrow delivers null elements as NaN floats too — or inf
+    arithmetic) is masked to null exactly as the HOF masks it (ADVICE
+    r13: unmasked, a NaN sim sorts ABOVE every real double under
+    ``sim.desc()`` and promotes corrupt vectors into top-k).  One
+    corner divergence remains, pinned in tests/test_knn_scale.py: a
+    zero vector yields null here, where the HOF under ANSI raises
+    DIVIDE_BY_ZERO (verified empirically on Spark 4.1: double 0/0 DOES
+    raise with ansi on) — no caller computes cosine of a zero vector.
     """
     import numpy as np
 
@@ -78,44 +72,28 @@ def pair_cosine(df: DataFrame, a_col: str, b_col: str,
                 na = np.sqrt(np.cumsum(a * a, axis=1)[:, -1])
                 nb = np.sqrt(np.cumsum(b * b, axis=1)[:, -1])
                 sim = d / (na * nb)
-                # null/NaN-element rows -> null sim (see docstring);
-                # a computed NaN (zero vector) is NOT masked — only
-                # rows whose INPUT carries NaN
-                bad = np.isnan(a).any(axis=1) | np.isnan(b).any(axis=1)
-                if bad.any():
-                    sim = sim.astype(object)
-                    sim[bad] = None
             except Exception:
                 # ragged / null rows: exact per-row left fold with the
-                # HOF's null semantics (length mismatch -> null)
-                sims = []
-                for va, vb in zip(pdf[a_col], pdf[b_col]):
-                    if va is None or vb is None or len(va) != len(vb):
-                        sims.append(None)
+                # HOF's null semantics (length mismatch or a None
+                # element -> null); same op order as the HOF
+                # (dot / (sqrt(aa) * sqrt(bb)))
+                sim = np.full(len(pdf), np.nan)
+                for i, (va, vb) in enumerate(zip(pdf[a_col], pdf[b_col])):
+                    if (va is None or vb is None or len(va) != len(vb)
+                            or any(x is None for x in va)
+                            or any(y is None for y in vb)):
                         continue
                     acc = sa = sb = 0.0
-                    bad_row = False
                     for x, y in zip(va, vb):
-                        # None elements (pre-Arrow python lists) and
-                        # NaN elements (Arrow's null encoding) -> null
-                        # sim, same mask as the fast path; x != x is
-                        # the NaN test
-                        if x is None or y is None or x != x or y != y:
-                            bad_row = True
-                            break
                         x = float(x); y = float(y)
                         acc += x * y; sa += x * x; sb += y * y
-                    if bad_row:
-                        sims.append(None)
-                        continue
-                    # numpy scalar division: 0/0 -> NaN (the HOF under
-                    # ANSI raises on the zero vector instead — the
-                    # documented divergence); same op order as the HOF
-                    # (dot / (sqrt(aa) * sqrt(bb)))
-                    sims.append(float(np.float64(acc)
-                                      / (np.sqrt(np.float64(sa))
-                                         * np.sqrt(np.float64(sb)))))
-                sim = sims
+                    sim[i] = (np.float64(acc) / (np.sqrt(np.float64(sa))
+                                                 * np.sqrt(np.float64(sb))))
+            # NaN quotients -> null, the HOF's nanvl mask
+            nan = np.isnan(sim)
+            if nan.any():
+                sim = sim.astype(object)
+                sim[nan] = None
             res = pdf[keep].copy()
             res[out] = sim
             yield res
@@ -137,8 +115,7 @@ def pair_cosine(df: DataFrame, a_col: str, b_col: str,
 PAIR_COSINE_MIN_EST_PAIRS = 200_000
 
 
-def _est_candidate_pairs(n_rows: Optional[int], n_bands: int,
-                         band_bits: int) -> Optional[float]:
+def _est_candidate_pairs(n_rows: int, n_bands: int, band_bits: int) -> float:
     """Expected distinct banded-LSH candidate pairs for an UNCORRELATED
     corpus: ``C(n,2) * (1 - (1 - 2^-bits)^bands)``.  An upper-ish
     envelope of the real volume (true near-dups collide in many bands
@@ -147,8 +124,6 @@ def _est_candidate_pairs(n_rows: Optional[int], n_bands: int,
     in (n, geometry): used ONLY to pick the cosine execution path —
     both paths are bit-identical on well-formed vectors — never to
     change what a query computes."""
-    if n_rows is None:
-        return None
     p_any = 1.0 - (1.0 - 2.0 ** -band_bits) ** n_bands
     return 0.5 * n_rows * (n_rows - 1) * p_any
 
@@ -163,10 +138,10 @@ def cosine_pairs(df: DataFrame, a_col: str, b_col: str, out: str = "sim",
     codegen, but the Python stage's FIXED Arrow+worker cost dominates
     small candidate volumes; above it the per-pair interpreted fold
     dominates and the numpy batches win.  ``est_pairs=None`` (volume
-    unknown: pinned geometry with no corpus count in reach) keeps the
-    HOF — the small-corpus default; a 100 TB corpus always reaches
-    this with a count from the auto-banding or dup-probe pass, so the
-    Arrow path engages at scale without a code change.  Both branches
+    unknown) keeps the HOF — the small-corpus default;
+    ``embedding_near_dup_pairs`` always passes the estimate from its
+    memoized corpus probe, so the Arrow path engages at scale without
+    a code change.  Both branches
     produce identical columns ``[*keep, out]`` and bit-identical sims
     on well-formed vectors (pinned in tests/test_knn_scale.py)."""
     if est_pairs is not None and est_pairs >= PAIR_COSINE_MIN_EST_PAIRS:
@@ -230,7 +205,6 @@ def brute_force_topk_blas(queries: DataFrame, corpus: DataFrame, k: int = 5,
                           query_id: str = "vec_id", corpus_id: str = "vec_id",
                           vec_col: str = "embedding",
                           self_exclude: bool = True,
-                          broadcast_side: str = "auto",
                           max_broadcast_bytes: int = MAX_BROADCAST_BYTES) -> DataFrame:
     """Exact cosine top-k via block matrix multiply — the scale path for
     brute force.  Identical results to ``brute_force_topk`` (same
@@ -238,10 +212,11 @@ def brute_force_topk_blas(queries: DataFrame, corpus: DataFrame, k: int = 5,
     per-pair work is a BLAS gemm per Arrow batch instead of an
     interpreted higher-order Column function.
 
-    ``broadcast_side`` picks which side is densified (default ``auto``:
-    corpus mode while Catalyst's size estimate fits
-    ``max_broadcast_bytes``, else the streaming mode — the caller's
-    memory is never the deciding input):
+    The densified side comes from Catalyst's size estimate of the
+    corpus: corpus mode while it fits ``max_broadcast_bytes`` (the
+    deployment's executor-memory cap), else the streaming mode — the
+    caller's memory is never the deciding input, and a missing size
+    stat fails safe to streaming:
 
     - ``"corpus"``: the corpus is collected once and shipped via
       ``sc.broadcast`` (ONE copy per executor — not per task closure);
@@ -257,10 +232,7 @@ def brute_force_topk_blas(queries: DataFrame, corpus: DataFrame, k: int = 5,
     """
     import numpy as np
 
-    if broadcast_side not in ("auto", "corpus", "queries"):
-        raise ValueError(f"broadcast_side must be auto|corpus|queries, got {broadcast_side!r}")
-    if broadcast_side == "auto":
-        broadcast_side = _choose_broadcast_side(corpus, max_broadcast_bytes)
+    broadcast_side = _choose_broadcast_side(corpus, max_broadcast_bytes)
 
     def _densify(df: DataFrame, idc: str):
         rows = df.select(F.col(idc).alias("id"), F.col(vec_col).alias("v")).collect()
@@ -560,6 +532,25 @@ def auto_n_bands(threshold: float, band_bits: int,
                                      / math.log(1.0 - p_band))))
 
 
+def _vector_clone_stats(src: DataFrame, grp_keys: list) -> tuple:
+    """``(rows, distinct (group, vector) hashes)`` of the
+    ``(id, __v__[, grp])`` frame — memoized per logical plan through
+    the ``dedup/probe.py`` registry, so repeat builds over the same
+    vectors (the bench family, a driver composing several ANN
+    pipelines) submit no job.  One partial-agg count-distinct: exact
+    duplicates exist iff the two differ."""
+    from apache_beam_spark.dedup.probe import memoize_plan_stat
+
+    def compute():
+        r = src.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(
+                *grp_keys, F.xxhash64("__v__")).alias("d")).collect()[0]
+        return (int(r["n"]), int(r["d"]))
+
+    return memoize_plan_stat(src, "__vec_stats__", compute)
+
+
 def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
                              vec_col: str = "embedding",
                              threshold: float = 0.95,
@@ -570,35 +561,38 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
                              dim: Optional[int] = None,
                              group_col: Optional[str] = None,
                              vectors_df: Optional[DataFrame] = None,
-                             n_rows: Optional[int] = None,
                              observation=None,
-                             expand: str = "full",
-                             has_dups: Optional[bool] = None) -> DataFrame:
+                             expand: str = "full") -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, sim >= t).
 
     Candidate generation is banded sign-bit LSH — the same band/bucket
     shape as ``dedup/minhash.py`` — NOT an all-pairs cross join:
 
-    1. EXACT duplicates collapse first: ids sharing a vector hash map
-       to their min-id representative (one ids+hash shuffle — vectors
-       never move), so a boilerplate corpus's most-duplicated content
-       contributes ONE member per bucket instead of flooding it;
-    2. one vectorized pass computes ``n_bands * band_bits`` hyperplane
+    1. one memoized probe (``_vector_clone_stats``) counts the rows
+       and the distinct vectors; every plan choice below comes from it;
+    2. when the probe finds EXACT duplicates, ids sharing a vector
+       hash map to their min-id representative (one ids+hash shuffle —
+       vectors never move), so a boilerplate corpus's most-duplicated
+       content contributes ONE member per bucket instead of flooding
+       it; a duplicate-free corpus skips the rep window and expansion
+       joins (identical output);
+    3. one vectorized pass computes ``n_bands * band_bits`` hyperplane
        sign bits per vector (a single BLAS gemm per Arrow batch) and
        packs each band into an int bucket key;
-    3. representative pairs sharing any (band, bucket) meet via
+    4. pairs sharing any (band, bucket) meet via
        ``dedup/buckets.bucket_pairs`` — over-cap buckets are chunked
        and triangle-split across tasks, NEVER silently dropped (the r3
        scale-killer); pass ``observation`` to read the
        overcap-bucket/candidate counters;
-    4. pairs expand back through the duplicate groups, and exact
-       cosine verifies every candidate.
+    5. rep pairs expand back through the duplicate groups
+       (``dedup/buckets.expand_rep_pairs``), and exact cosine verifies
+       every candidate.
 
-    ``band_bits``/``n_bands`` default to AUTO: width from the corpus
-    count (constant expected occupancy — see ``auto_band_bits``), count
-    from the threshold so P(miss) <= 1e-4 regardless of width (see
-    ``auto_n_bands``).  Pass ``n_rows`` to skip the count job, or both
-    knobs explicitly to pin the geometry (oracle-pinned queries do).
+    ``band_bits``/``n_bands`` default to AUTO: width from the probe's
+    row count (constant expected occupancy — see ``auto_band_bits``),
+    count from the threshold so P(miss) <= 1e-4 regardless of width
+    (see ``auto_n_bands``).  Pass both explicitly to pin the geometry
+    (oracle-pinned queries do).
 
     ``group_col``: optional pre-partitioning (e.g. an IVF cell id) —
     pairs are then mined only WITHIN a group: the bucket key becomes
@@ -620,38 +614,34 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
     components (identical vectors share every sim, so connectivity is
     preserved); the right mode when the consumer is cluster resolution
     (``dup_clusters``), not the pair list itself.
-
-    ``has_dups``: ``None`` (default) runs a one-row driver probe to
-    detect exact duplicates; pass ``True``/``False`` to skip the probe
-    (an eager shuffle at plan-build time) when the corpus is known —
-    the lazy-builder opt-out, mirroring ``n_rows`` for the count job.
     """
     import numpy as np
 
-    from apache_beam_spark.dedup.buckets import bucket_pairs
+    from apache_beam_spark.dedup.buckets import bucket_pairs, expand_rep_pairs
+    from apache_beam_spark.plans.caching import cache_scoped
 
     if expand not in ("full", "star"):
         raise ValueError(f"expand must be 'full' or 'star', got {expand!r}")
     if dim is None:  # one-row probe; pass dim to keep the plan lazy
         dim = len(df.select(vec_col).first()[0])
-    # n_est: best corpus-count knowledge at plan-build time, feeding
-    # the cosine execution-path switch (never the results).  Sources,
-    # in order: the caller's n_rows, the auto-banding count, the dup
-    # probe's count(1) (below) — all jobs that already run; None (all
-    # knobs pinned, probe skipped) keeps the HOF small-corpus default.
-    n_est = n_rows
-    if band_bits is None or n_bands is None:
-        if n_est is None:
-            n_est = df.count()
-        if band_bits is None:
-            band_bits = auto_band_bits(n_est)
-        if n_bands is None:
-            n_bands = auto_n_bands(threshold, band_bits)
+    has_grp = group_col is not None
+    grp_keys = ["grp"] if has_grp else []
+    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("__v__")]
+    sig_schema = "id bigint, band int, bh bigint"
+    if has_grp:
+        cols.append(F.col(group_col).cast("bigint").alias("grp"))
+        sig_schema += ", grp bigint"
+    src = df.select(*cols)
+
+    n_rows, n_distinct = _vector_clone_stats(src, grp_keys)
+    if band_bits is None:
+        band_bits = auto_band_bits(n_rows)
+    if n_bands is None:
+        n_bands = auto_n_bands(threshold, band_bits)
     planes = np.random.RandomState(seed).standard_normal(
         (n_bands * band_bits, dim))
     pack = (1 << np.arange(band_bits, dtype=np.int64))
     band_idx = np.arange(n_bands, dtype=np.int64)
-    has_grp = group_col is not None
 
     def sig_fn(batches):
         import pandas as pd
@@ -673,84 +663,32 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
                     pdf["grp"].to_numpy(dtype=np.int64), n_bands)
             yield pd.DataFrame(out)
 
-    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("__v__")]
-    sig_schema = "id bigint, band int, bh bigint"
-    if has_grp:
-        cols.append(F.col(group_col).cast("bigint").alias("grp"))
-        sig_schema += ", grp bigint"
-    src = df.select(*cols)
     # suite-scoped banding cache (optimization r13): the (id, band, bh)
     # frame is rebuilt by every consumer branch and every rebuild of
     # the same query; mapInPandas closures pickle deterministically
     # (seeded planes), so CacheManager shares one copy across builds.
     # n_bands ints per vector — tiny next to the vectors themselves.
-    from apache_beam_spark.plans.caching import cache_scoped
-
     sigs = cache_scoped(
         parallelize_narrow(src).mapInPandas(sig_fn, sig_schema))
 
-    # exact-duplicate collapse: rep = min id per (group, vector-hash) —
-    # only (id, hash) shuffles; xxhash64 collisions (2^-64, the same
-    # family risk the minhash path accepts) are filtered by the exact
-    # cosine verify below
-    grp_keys = ["grp"] if has_grp else []
-
-    # cheap driver probe (bounded-scalar precedent: ivf max_cell
-    # factors, kmeans centroids): a dup-free corpus — the common case
-    # outside boilerplate-heavy crawls — skips the group-expansion
-    # joins entirely, keeping the pre-collapse plan shape + one window;
-    # results are identical either way (rep_map is the identity there).
-    # Callers who know their corpus (dup-free OR dup-heavy) pass
-    # ``has_dups`` to keep the builder fully lazy — the probe is one
-    # eager count-distinct agg at plan-BUILD time, the same opt-out
-    # contract as ``n_rows`` for the count job (ADVICE r4).
-    if has_dups is None:
-        # memoized per corpus plan (dedup/probe.py discipline): repeat
-        # invocations over the same vectors — the bench family, a
-        # driver composing several ANN pipelines — skip the eager
-        # probe job entirely.  The probe itself is a partial-agg
-        # count-distinct over (group, hash) vs count(*) (optimization
-        # r13): same answer as the old shuffle+window+take(1) — dups
-        # exist iff some (group, hash) repeats — at hash-agg cost with
-        # no window sort, and no rep_map is built at all on the
-        # dup-free branch.
-        from apache_beam_spark.dedup.probe import memoize_plan_stat
-
-        def _probe():
-            r = src.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(
-                    *grp_keys, F.xxhash64("__v__")).alias("d")).collect()[0]
-            # (corpus rows, distinct vectors): dups exist iff n != d,
-            # and n doubles as the free corpus count for the cosine
-            # path switch — the probe already pays for it
-            return (int(r["n"]), int(r["d"]))
-
-        n_probe_rows, n_distinct = memoize_plan_stat(
-            src, "__vec_stats__", _probe)
-        has_dups = n_probe_rows != n_distinct
-        if n_est is None:
-            n_est = n_probe_rows
-
-    rep_map = None
-    if has_dups:
-        rep_w = W.partitionBy(*grp_keys, "__h__")
-        # cached: (id, rep) is ids-only but feeds THREE plan branches
-        # (bucket members, both expansion sides) — without it each
-        # branch would re-scan the full vector column just to re-hash
-        from apache_beam_spark.plans.caching import cache_scoped
-
-        rep_map = cache_scoped(
-            src.select("id", *grp_keys,
-                       F.xxhash64("__v__").alias("__h__"))
-            .withColumn("rep", F.min("id").over(rep_w))
-            .select("id", *grp_keys, "rep"))
     bucket_keys = grp_keys + ["band", "bh"]
-    if not has_dups:
+    if n_rows == n_distinct:
         pairs = bucket_pairs(sigs.select(*grp_keys, "band", "bh", "id"),
                              bucket_keys, id_col="id",
                              max_bucket=max_bucket, observation=observation)
     else:
+        # exact-duplicate collapse: rep = min id per (group,
+        # vector-hash) — only (id, hash) shuffles; xxhash64 collisions
+        # (2^-64, the same family risk the minhash path accepts) are
+        # filtered by the exact cosine verify below.  Cached: (id, rep)
+        # is ids-only but feeds THREE plan branches (bucket members,
+        # both expansion sides) — without it each branch would re-scan
+        # the full vector column just to re-hash
+        rep_map = cache_scoped(
+            src.select("id", *grp_keys, F.xxhash64("__v__").alias("__h__"))
+            .withColumn("rep", F.min("id").over(
+                W.partitionBy(*grp_keys, "__h__")))
+            .select("id", *grp_keys, "rep"))
         # bucket members at representative granularity: identical
         # vectors have identical signatures, so (bucket, rep) collapses
         # in bucket_pairs' collect_set — degenerate boilerplate groups
@@ -760,31 +698,10 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
         rep_pairs = bucket_pairs(members, bucket_keys, id_col="id",
                                  max_bucket=max_bucket,
                                  observation=observation)
-
-        if expand == "star":
-            # spanning edges only: (rep, member) per duplicate + the
-            # rep pairs themselves — linear output, same components
-            star = (rep_map.filter(F.col("id") != F.col("rep"))
-                    .select(F.col("rep").alias("id_a"),
-                            F.col("id").alias("id_b")))
-            pairs = rep_pairs.unionByName(star).distinct()
-        else:
-            # expand rep pairs back through the duplicate groups, and
-            # pair the groups' own members (same rep -> identical
-            # vectors -> sim 1.0, still verified below like every other
-            # candidate); a giant identical group chunks through the
-            # same no-drop discipline
-            ga = rep_map.select(F.col("rep").alias("id_a"),
-                                F.col("id").alias("__ma__"))
-            gb = rep_map.select(F.col("rep").alias("id_b"),
-                                F.col("id").alias("__mb__"))
-            cross = (rep_pairs.join(ga, on="id_a").join(gb, on="id_b")
-                     .select(F.least("__ma__", "__mb__").alias("id_a"),
-                             F.greatest("__ma__", "__mb__").alias("id_b")))
-            within = bucket_pairs(
-                rep_map.select(F.col("rep").alias("bk"), "id"),
-                ["bk"], id_col="id", max_bucket=max_bucket)
-            pairs = cross.unionByName(within).distinct()
+        # within-group and star edges are identical vectors (sim 1.0),
+        # still verified below like every other candidate
+        pairs = expand_rep_pairs(rep_pairs, rep_map.select("id", "rep"),
+                                 expand, max_bucket).distinct()
 
     vecs = (vectors_df if vectors_df is not None else df).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("__v__"))
@@ -802,7 +719,7 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
         .select("id_a", "id_b", "__va__", "__vb__"))
     return (
         cosine_pairs(cand, "__va__", "__vb__", "sim",
-                     est_pairs=_est_candidate_pairs(n_est, n_bands,
+                     est_pairs=_est_candidate_pairs(n_rows, n_bands,
                                                     band_bits))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", F.round("sim", 6).alias("sim"))

@@ -80,7 +80,7 @@ def test_simhash_keeps_all_when_distant(spark):
     assert out.count() == 3
 
 
-def test_minhash_pairs_no_cache_over_cache(spark):
+def test_minhash_pairs_no_cache_over_cache(spark, pin_plan):
     """VERDICT r13 item 6: minhash_lsh_pairs must NOT stack a second
     cache on the (already cache_scoped) signature table — the outer
     cache of a rename projection held a second in-memory copy of ~the
@@ -96,8 +96,8 @@ def test_minhash_pairs_no_cache_over_cache(spark):
     base_ids = persistent_rdd_ids(sc)
     rows = [(i, f"some shared boilerplate text plus token {i % 3}")
             for i in range(12)]
+    pin_plan(False)
     with scoped_caches():
-        minhash_lsh_pairs(_docs(spark, rows), threshold=0.2,
-                          has_dups=False).collect()
+        minhash_lsh_pairs(_docs(spark, rows), threshold=0.2).collect()
         new = persistent_rdd_ids(sc) - base_ids
         assert len(new) == 1, new   # signature cache only, no outer copy

@@ -2,9 +2,10 @@
 
 - embedding_near_dup_pairs must generate candidates via banded LSH
   (no cross join in the plan) and still find every planted near-dup.
-- brute_force_topk_blas broadcast_side="queries" (corpus streams,
-  per-partition top-k + exact merge) must equal the corpus-broadcast
-  mode on a multi-partition corpus.
+- brute_force_topk_blas's streaming mode (corpus streams, per-partition
+  top-k + exact merge; chosen when the corpus exceeds
+  ``max_broadcast_bytes``) must equal the corpus-broadcast mode on a
+  multi-partition corpus.
 """
 
 from __future__ import annotations
@@ -222,9 +223,17 @@ def test_semantic_dedup_plan_no_cell_cartesian(spark, emb_df):
 
 
 def test_blas_queries_broadcast_equals_corpus_broadcast(spark, emb_df):
+    from apache_beam_spark.similarity.knn import (
+        _choose_broadcast_side, _plan_size_bytes)
+
     q = emb_df.filter(F.col("vec_id") < 20)
-    a = brute_force_topk_blas(q, emb_df, k=3, broadcast_side="corpus")
-    b = brute_force_topk_blas(q, emb_df, k=3, broadcast_side="queries")
+    # the size statistic picks the mode: a cap the corpus fits
+    # broadcasts it, a cap one byte smaller streams it
+    est = _plan_size_bytes(emb_df)
+    assert _choose_broadcast_side(emb_df, est) == "corpus"
+    assert _choose_broadcast_side(emb_df, est - 1) == "queries"
+    a = brute_force_topk_blas(q, emb_df, k=3, max_broadcast_bytes=est)
+    b = brute_force_topk_blas(q, emb_df, k=3, max_broadcast_bytes=est - 1)
     rows_a = sorted(map(tuple, a.collect()))
     rows_b = sorted(map(tuple, b.collect()))
     assert rows_a == rows_b
@@ -248,11 +257,6 @@ def test_blas_auto_stat_missing_falls_back_to_streaming(spark, emb_df,
     got = sorted(map(tuple,
                      knn.brute_force_topk_blas(q, emb_df, k=3).collect()))
     assert got == sorted(map(tuple, brute_force_topk(q, emb_df, k=3).collect()))
-
-
-def test_blas_bad_side_rejected(spark, emb_df):
-    with pytest.raises(ValueError, match="broadcast_side"):
-        brute_force_topk_blas(emb_df, emb_df, broadcast_side="both")
 
 
 def test_blas_auto_picks_mode_by_size(spark, emb_df):
@@ -321,9 +325,8 @@ def test_pair_cosine_corner_rows(spark):
     NaN or null ELEMENT -> null sim (ADVICE r13: Arrow delivers null
     elements as NaN; unmasked they became NaN sims that sort ABOVE
     every real double under sim.desc(), promoting corrupt vectors
-    into top-k — the HOF yields null there, so null-element rows now
-    MATCH it, while literal-NaN rows are the second documented
-    divergence: HOF NaN, pair_cosine null)."""
+    into top-k).  The HOF masks NaN quotients the same way, so both
+    element rows MATCH it."""
     from apache_beam_spark.functions.vectors import cosine
     from apache_beam_spark.similarity.knn import pair_cosine
 
@@ -341,15 +344,12 @@ def test_pair_cosine_corner_rows(spark):
     assert vec[901] is None and vec[902] is None
     assert vec[903] is None and vec[904] is None
     assert vec[905] is not None and abs(vec[905] - 1.0) < 1e-12
-    # the HOF's null-element row matches (null); its NaN row is the
-    # documented divergence
-    hof = {r["pid"]: r["sim"] for r in df.filter("pid in (903, 904)")
+    # the HOF agrees on both element rows: null, never NaN
+    hof = {r["pid"]: r["sim"] for r in df.filter("pid in (903, 904, 905)")
            .select("pid", cosine(F.col("va"), F.col("vb")).alias("sim"))
            .collect()}
-    import math
-
-    assert hof[904] is None          # matched: null element -> null
-    assert math.isnan(hof[903])      # divergence: HOF NaN, ours null
+    assert hof[903] is None and hof[904] is None
+    assert hof[905] == vec[905]
     # a NaN-ELEMENT row must also mask when it rides the per-row
     # fallback (batched with a ragged row) — same mask, both paths
     vec2 = {r["pid"]: r["sim"] for r in pair_cosine(
@@ -391,3 +391,70 @@ def test_cosine_pairs_chooser_both_branches(spark):
     for pid in got_low:
         h, v = got_low[pid], got_high[pid]
         assert h == v and math.copysign(1, h) == math.copysign(1, v), pid
+
+
+@pytest.mark.parametrize("branch", ["hof", "arrow"])
+def test_nan_vector_yields_no_near_dup_pair(spark, monkeypatch, branch):
+    """A vector with a NaN element has NaN sign bits on every plane, so
+    it lands in the all-zero bucket of every band next to any other
+    such vector; its cosine must be null on BOTH verify branches (NaN
+    passes ``sim >= threshold``), so no pair carries it."""
+    from apache_beam_spark.similarity import knn
+
+    monkeypatch.setattr(knn, "PAIR_COSINE_MIN_EST_PAIRS",
+                        float("inf") if branch == "hof" else 0)
+    rng = np.random.RandomState(13)
+    base = rng.standard_normal((20, 16))
+    rows = [(i, base[i].tolist()) for i in range(20)]
+    rows.append((100, (base[0] + 0.01).tolist()))          # real near-dup
+    for vid, src, pos in ((300, 1, 3), (301, 2, 5)):
+        v = base[src].copy()
+        v[pos] = float("nan")
+        rows.append((vid, v.tolist()))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {(r["id_a"], r["id_b"]) for r in
+           embedding_near_dup_pairs(df, threshold=0.95).collect()}
+    assert got == {(0, 100)}
+
+
+def test_lsh_topk_never_ranks_nan_vector(spark):
+    """NaN-element corpus vectors share the all-zero bucket with every
+    clean query whose sign bit is 0; their null cosine sorts after every
+    real neighbor, so with at least k clean candidates per bucket they
+    never make a top-k."""
+    from apache_beam_spark.similarity.knn import lsh_topk
+
+    rng = np.random.RandomState(17)
+    base = rng.standard_normal((60, 16))
+    rows = [(i, base[i].tolist()) for i in range(60)]
+    for j in range(3):
+        v = base[j].copy()
+        v[j] = float("nan")
+        rows.append((500 + j, v.tolist()))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = lsh_topk(df.filter(F.col("vec_id") < 60), df, dim=16, k=3,
+                   n_bits=1).collect()
+    assert len(out) == 60 * 3
+    assert not [r for r in out if r["neighbor_id"] >= 500]
+
+
+def test_embed_near_dup_warm_build_submits_no_job(spark):
+    """Every plan choice of embedding_near_dup_pairs comes from its
+    memoized (rows, distinct) probe: once a build has run it, building
+    the query again submits no Spark job."""
+    import __spark_entry__ as entry
+    from apache_beam_spark.plans.caching import scoped_caches
+
+    from tests.conftest import SF_DIR
+
+    build = entry.queries()["embed_near_dup"]
+    sc = spark.sparkContext
+    group = "embed-near-dup-warm-build"
+    with scoped_caches():
+        build(spark, SF_DIR)
+        sc.setJobGroup(group, "embed_near_dup warm build")
+        try:
+            build(spark, SF_DIR)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

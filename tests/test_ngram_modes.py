@@ -73,16 +73,17 @@ def test_full_mode_matches_python_reference(spark):
         assert math.isclose(got[k], want[k], abs_tol=1e-6)
 
 
-def test_star_mode_same_components_linear_clone_output(spark):
+def test_star_mode_same_components_linear_clone_output(spark, pin_plan):
     from apache_beam_spark.dedup.ngram import ngram_jaccard_pairs
 
     df = _docs(spark)
     nodes = [r["doc_id"] for r in df.select("doc_id").collect()]
     full = [(r["id_a"], r["id_b"])
             for r in ngram_jaccard_pairs(df, threshold=0.3).collect()]
+    pin_plan(True)
     star = [(r["id_a"], r["id_b"])
-            for r in ngram_jaccard_pairs(df, threshold=0.3, expand="star",
-                                         collapse="always").collect()]
+            for r in ngram_jaccard_pairs(df, threshold=0.3,
+                                         expand="star").collect()]
     assert _components(full, nodes) == _components(star, nodes)
     # clone group A (6 members) alone would be 15 full pairs; star emits
     # 5 spanning edges for it — linear in group width
@@ -90,17 +91,18 @@ def test_star_mode_same_components_linear_clone_output(spark):
     # star edges are (rep=min id, member) at exactly 1.0
     star_vals = {(r["id_a"], r["id_b"]): r["jaccard"]
                  for r in ngram_jaccard_pairs(df, threshold=0.3,
-                                              expand="star",
-                                              collapse="always").collect()}
+                                              expand="star").collect()}
     assert star_vals[(0, 3)] == 1.0
     assert star_vals[(6, 9)] == 1.0
 
 
-def test_collapse_auto_trips_on_wide_clone_groups(spark):
-    """auto == never below both thresholds (identical full output, no
-    rep stages), == always past either; max_clone_width=2 forces the
-    width trip on the 6-wide group here (the fraction trigger is
-    pinned high to isolate the width one)."""
+def test_collapse_auto_trips_on_wide_clone_groups(spark, pin_plan,
+                                                  monkeypatch):
+    """The probe's plan == the pinned direct plan below both thresholds
+    (identical full output, no rep stages), == the pinned collapse plan
+    past either; a width threshold of 2 trips on the 6-wide group here
+    (the fraction trigger is set high to isolate the width one)."""
+    from apache_beam_spark.dedup import probe
     from apache_beam_spark.dedup.ngram import ngram_jaccard_pairs
 
     df = _docs(spark)
@@ -110,26 +112,37 @@ def test_collapse_auto_trips_on_wide_clone_groups(spark):
                 for r in ngram_jaccard_pairs(df, threshold=0.3,
                                              **kw).collect()}
 
-    auto, never, always = (pairs(collapse=c, clone_fraction=0.9)
-                           for c in ("auto", "never", "always"))
-    assert auto == never == always          # full contract is mode-free
-    tripped = pairs(collapse="auto", max_clone_width=2, clone_fraction=0.9)
-    assert tripped == always
-    # star under untripped auto degrades to the full list — still a
+    pin_plan(False)
+    never = pairs()
+    pin_plan(True)
+    always = pairs()
+    monkeypatch.setattr(probe, "MAX_CLONE_WIDTH", 32)
+    monkeypatch.setattr(probe, "CLONE_FRACTION", 0.9)
+    auto = pairs()
+    assert auto == never == always          # full contract is plan-free
+    # star on the untripped probe degrades to the full list — still a
     # valid (superset) spanning set
-    star_auto = pairs(collapse="auto", expand="star", clone_fraction=0.9)
+    star_auto = pairs(expand="star")
     assert star_auto == always
+    monkeypatch.setattr(probe, "MAX_CLONE_WIDTH", 2)
+    tripped = pairs()
+    assert tripped == always
 
 
-def test_containment_collapse_modes_equal(spark):
+def test_containment_collapse_modes_equal(spark, pin_plan):
     from apache_beam_spark.dedup.ngram import ngram_containment_pairs
 
     df = _docs(spark)
-    outs = []
-    for c in ("auto", "never", "always"):
-        outs.append({(r["id_a"], r["id_b"]): r["containment"]
-                     for r in ngram_containment_pairs(
-                         df, threshold=0.8, collapse=c).collect()})
+
+    def pairs():
+        return {(r["id_a"], r["id_b"]): r["containment"]
+                for r in ngram_containment_pairs(
+                    df, threshold=0.8).collect()}
+
+    outs = [pairs()]
+    for collapse in (False, True):
+        pin_plan(collapse)
+        outs.append(pairs())
     assert outs[0] == outs[1] == outs[2]
     assert outs[0][(0, 3)] == 1.0 and outs[0][(3, 0)] == 1.0  # both dirs
 
@@ -194,7 +207,7 @@ def test_release_caches_drains_global_registry(spark):
     assert not (persistent_rdd_ids(sc) & new_ids)
 
 
-def test_positional_filter_in_plan_and_prunes(spark):
+def test_positional_filter_in_plan_and_prunes(spark, pin_plan):
     """The PPJoin positional bound must sit in the candidate join of
     BOTH miners (plan-asserted — it is the guard against hot-posting
     blowup on the containment full side, VERDICT r5 item 8), and it
@@ -207,9 +220,9 @@ def test_positional_filter_in_plan_and_prunes(spark):
         _ranked_postings, ngram_containment_pairs, ngram_jaccard_pairs)
 
     df = _docs(spark)
-    for out in (ngram_jaccard_pairs(df, threshold=0.5, collapse="never"),
-                ngram_containment_pairs(df, threshold=0.8,
-                                        collapse="never")):
+    pin_plan(False)
+    for out in (ngram_jaccard_pairs(df, threshold=0.5),
+                ngram_containment_pairs(df, threshold=0.8)):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "least(" in plan and "CEIL(" in plan.upper()
 
@@ -238,8 +251,7 @@ def test_positional_filter_in_plan_and_prunes(spark):
     n_kept = base.filter(ub >= need).select("x.id", "y.id") \
         .distinct().count()
     want = {(r["id_a"], r["id_b"])
-            for r in ngram_jaccard_pairs(corpus, threshold=t,
-                                         collapse="never").collect()}
+            for r in ngram_jaccard_pairs(corpus, threshold=t).collect()}
     assert n_all == 5 and n_kept == 0 and want == set()
 
 
@@ -274,7 +286,7 @@ def test_scoped_caches_are_thread_local(spark):
     assert not (persistent_rdd_ids(sc) & other_ids)
 
 
-def test_collapse_auto_trips_on_pervasive_clones(spark):
+def test_collapse_auto_trips_on_pervasive_clones(spark, pin_plan):
     """A corpus that is mostly exact copies (width BELOW the width
     threshold) must still trip auto via the clone-fraction trigger —
     the 10x-copies flood shape (SCALING.md round 5)."""
@@ -293,8 +305,8 @@ def test_collapse_auto_trips_on_pervasive_clones(spark):
     # width 5 <= 32, but fraction 0.8 > 0.05 -> collapse engages:
     # star output is the linear spanning set, not the full clique list
     star = ngram_jaccard_pairs(flood, threshold=0.3, expand="star").collect()
-    full = ngram_jaccard_pairs(flood, threshold=0.3,
-                               collapse="never").collect()
+    pin_plan(False)
+    full = ngram_jaccard_pairs(flood, threshold=0.3).collect()
     nodes = [r["doc_id"] for r in flood.select("doc_id").collect()]
     assert _components([(r["id_a"], r["id_b"]) for r in star], nodes) == \
         _components([(r["id_a"], r["id_b"]) for r in full], nodes)

@@ -52,18 +52,38 @@ def test_clear_probe_memo_forces_recompute(spark):
     assert not probe._MEMO
 
 
-def test_should_collapse_thresholds(spark):
-    from apache_beam_spark.dedup.probe import clear_probe_memo, should_collapse
+def test_should_collapse_thresholds(spark, monkeypatch):
+    from apache_beam_spark.dedup import probe
 
-    clear_probe_memo()
+    probe.clear_probe_memo()
     rows = [(i, "copy me please now") for i in range(10)] + \
         [(100 + i, f"unique text number {i} entirely") for i in range(10)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     # wmax 10, frac 9/20 = 0.45: trips width at 8, not at 32 w/ frac 0.5
-    assert should_collapse(df, "text", max_clone_width=8, clone_fraction=0.9)
-    assert not should_collapse(df, "text",
-                               max_clone_width=32, clone_fraction=0.5)
-    assert should_collapse(df, "text", max_clone_width=32, clone_fraction=0.4)
+    for width, frac, want in ((8, 0.9, True), (32, 0.5, False),
+                              (32, 0.4, True)):
+        monkeypatch.setattr(probe, "MAX_CLONE_WIDTH", width)
+        monkeypatch.setattr(probe, "CLONE_FRACTION", frac)
+        assert probe.should_collapse(df, "text") is want
+
+
+def test_default_policy_keeps_sparse_clones_direct(spark):
+    """The shipped constants: sparse narrow clone groups (the fixture
+    corpora's shape) stay on the direct plan; a 10x-copies flood trips
+    the fraction trigger."""
+    from apache_beam_spark.dedup import probe
+
+    probe.clear_probe_memo()
+    sparse = spark.createDataFrame(
+        [(i, f"document {i} text") for i in range(40)]
+        + [(99, "document 0 text")],
+        "doc_id long, text string")
+    assert not probe.should_collapse(sparse, "text")
+    flood = spark.createDataFrame(
+        [(10 * i + c, f"document {i} text")
+         for i in range(4) for c in range(10)],
+        "doc_id long, text string")
+    assert probe.should_collapse(flood, "text")
 
 
 def test_empty_corpus_never_collapses(spark):
