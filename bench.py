@@ -15,121 +15,14 @@ import os
 import sys
 import time
 
+from queries import headline
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-#: headline queries — the heavy, scale-relevant subset of queries()
-HEADLINE = [
-    "q1_pricing_summary",
-    "star_join_revenue",
-    "cogroup_by_key",
-    "top_per_key",
-    "window_fixed",
-    "window_sliding",
-    "window_session",
-    "wordcount",
-    "group_into_batches",
-    "latest_per_user",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_simhash",
-    "ngram_jaccard",
-    "embed_knn",
-    "embed_lsh_knn",
-    "text_stats",
-    "quality_score",
-    "secondary_sort",
-    "autocomplete",
-    "tfidf",
-    "user_sessions",
-    "asof_last_purchase",
-    "range_join_followups",
-    "rollup_daily",
-    "q5_local_supplier",
-    "q10_returned_items",
-    "q18_large_volume",
-    "embed_ivf_fixed",
-    "combine_grouped_values",
-    "embed_near_dup",
-    "q13_customer_distribution",
-    "dup_clusters",
-    "collocations_pmi",
-    "embed_kmeans_fixed",
-    "pack_sequences",
-    "llm_corpus_prep",
-    "ngram_containment",
-    "trigram_logprob",
-    "funnel_view_purchase",
-    "weekly_retention",
-    "event_type_pivot",
-    "q4_order_priority",
-    "q12_shipmode_priority",
-    "heavy_hitter_words",
-    "repetition_stats",
-    "decontaminate_benchmark",
-    "chunk_dedup",
-    "pii_scrub",
-    "mixture_cap_tokens",
-    "q9_product_profit",
-    "q21_waiting_suppliers",
-    "epoch_shuffle",
-    "funnel_instances",
-    "semantic_dedup",
-    "trending_topk",
-    "rolling_features",
-    "dedup_incremental",
-    "feature_store_events",
-    "quality_percentile",
-    "bm25_search",
-    "cdc_upsert_snapshot",
-    "mixture_temperature",
-    "textrank_words",
-    # round-6 operators
-    "dup_span_scrub",
-    "bpe_token_counts",
-    "embed_pca_gram",
-    "embed_pq_fixed",
-    "dedup_incremental_bloom",
-    "cms_word_counts",
-    "hll_distinct_users",
-    "kmv_user_overlap",
-    "quality_lr_fixed",
-    # round-7 operators
-    "hist_quantiles_prices",
-    "embed_ivfpq_fixed",
-    "dedup_incremental_minhash",
-    "unigram_token_counts",
-    "unigram_piece_counts",
-    # round-8 operators: production tokenizer encode paths, the
-    # WordPiece family, progressive-JPEG/Adam7 codec roundtrips
-    "bpe_rank_token_counts",
-    "unigram_token_counts_bc",
-    "wordpiece_token_counts",
-    "jpeg_progressive_roundtrip",
-    "png_adam7_roundtrip",
-    "gif_roundtrip",
-    "tiff_roundtrip",
-    "dsir_scores",
-    # round-9: arithmetic-coded JPEG (SOF9 QM-coder), lossless JPEG
-    # (SOF3 DPCM), lossless FLAC
-    "jpeg_arith_roundtrip",
-    "jpeg_lossless_roundtrip",
-    "flac_roundtrip",
-    # round-10: general LPC subframes (the real-world FLAC coding)
-    "flac_lpc_roundtrip",
-    # round-10 second pass: fuzzy entity resolution, series gap fill,
-    # perceptual image dedup, audio frame features, real MJPEG video
-    "fuzzy_join_customers",
-    "timeseries_gapfill",
-    "image_dhash_dedup",
-    "audio_features",
-    "video_mjpeg_roundtrip",
-    "rollup_ohlc",
-    "image_near_dup",
-    "audio_resample",
-    # round-11: Beam-parity strict-gap sessions (merge_intervals path)
-    "window_session_strict",
-]
+#: headline queries — the heavy, scale-relevant subset of queries(),
+#: flagged ``headline=True`` where each query is declared
+HEADLINE = headline()
 
 
 def main() -> None:

@@ -11,7 +11,10 @@ affine model on (1, 10), and report how far the k=3 point sits from
 the fit — an affine plan predicts it within noise; a superlinear one
 overshoots.  Prints one JSON line for SCALING.md.
 
-Usage: python scripts/asof_scale_profile.py [reps]
+Usage: python scripts/asof_scale_profile.py reps query [query ...]
+
+The SCALING.md numbers come from ``3 asof_last_purchase
+funnel_instances feature_store_events user_sessions``.
 """
 
 from __future__ import annotations
@@ -21,15 +24,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
-QUERIES = ["asof_last_purchase", "funnel_instances", "feature_store_events",
-           "user_sessions"]
 
 
 def main() -> None:
-    reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
+    reps, names = int(sys.argv[1]), sys.argv[2:]
     from apache_beam_spark.engine import get_spark
     from apache_beam_spark.plans.caching import scoped_caches
     from scale_check import build_replica
@@ -40,17 +42,17 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     dirs = {1: SRC}
     for k in (3, 10):
-        dst = f"/root/repo/.scale/sf0.1x{k}"
+        dst = f"{REPO}/.scale/sf0.1x{k}"
         os.makedirs(dst, exist_ok=True)
         build_replica(spark, k, dst)
         dirs[k] = dst
 
     queries = entrymod.queries()
-    walls: dict[str, dict[int, float]] = {q: {} for q in QUERIES}
+    walls: dict[str, dict[int, float]] = {q: {} for q in names}
     # interleaved rounds: host-load beats hit every (query, k) equally
     for rep in range(reps):
         for k, d in dirs.items():
-            for q in QUERIES:
+            for q in names:
                 t0 = time.time()
                 with scoped_caches():
                     queries[q](spark, d).write.format("noop") \
@@ -61,7 +63,7 @@ def main() -> None:
               file=sys.stderr, flush=True)
 
     report = {}
-    for q in QUERIES:
+    for q in names:
         t1, t3, t10 = walls[q][1], walls[q][3], walls[q][10]
         # affine fit through k=1 and k=10
         b = (t10 - t1) / 9.0

@@ -6,8 +6,7 @@ Usage:
     python scripts/capture_plans.py --compare DIR_A DIR_B
 
 Capture writes <out_dir>/<query>_<suffix>.txt for each query (default:
-the optimization round's watch list) from the checkout the script sits
-in.  Queries whose construction runs driver-side actions (CC loops,
+every ``bench.HEADLINE`` query) from the checkout the script sits in.  Queries whose construction runs driver-side actions (CC loops,
 fixed-codebook collects) execute those actions during capture — that
 is inherent to their build, not a bug.
 
@@ -29,17 +28,6 @@ from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-DEFAULT = [
-    "semantic_dedup", "dup_clusters", "llm_corpus_prep", "dedup_simhash",
-    "ngram_jaccard", "embed_near_dup", "ngram_containment", "dsir_scores",
-    "dedup_incremental_minhash", "q18_large_volume", "dup_span_scrub",
-    "chunk_dedup", "textrank_words", "dedup_incremental_bloom",
-    "cms_word_counts", "image_near_dup", "quality_percentile",
-    "star_join_revenue", "trigram_logprob", "q21_waiting_suppliers",
-    "dedup_minhash", "q1_pricing_summary", "fuzzy_join_customers",
-    "heavy_hitter_words", "kmv_user_overlap",
-]
 
 #: build-local identifiers: same plan, different numbers on every build
 #: (adaptive execution also numbers codegen stages and query stages in
@@ -123,7 +111,12 @@ def main() -> None:
         raise SystemExit(compare(args[1], args[2]))
     out_dir = args[0] if args else "plans/r13"
     suffix = args[1] if len(args) > 1 else "before"
-    capture(out_dir, suffix, args[2:] or DEFAULT)
+    names = args[2:]
+    if not names:
+        import bench
+
+        names = bench.HEADLINE
+    capture(out_dir, suffix, names)
 
 
 if __name__ == "__main__":

@@ -16,15 +16,18 @@ Usage: python scripts/gen_query_catalog.py [--check]
 
 from __future__ import annotations
 
+import os
 import re
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 MARK_BEGIN = "<!-- query-catalog:begin -->"
 MARK_END = "<!-- query-catalog:end -->"
-DOCS = ["SURVEY.md", "SCALING.md"]
+DOCS = [os.path.join(REPO, d) for d in ("SURVEY.md", "SCALING.md")]
+QUERIES_MD = os.path.join(REPO, "docs", "QUERIES.md")
 
 
 def catalog_block(test_count: int) -> str:
@@ -86,7 +89,7 @@ def queries_doc() -> str:
 def count_tests() -> int:
     out = subprocess.run(
         [sys.executable, "-m", "pytest", "--collect-only", "-q",
-         "tests/"], capture_output=True, text=True, cwd="/root/repo")
+         "tests/"], capture_output=True, text=True, cwd=REPO)
     m = (re.search(r"(\d+) tests collected", out.stdout)
          or re.search(r"collected (\d+) items", out.stdout))
     if not m:
@@ -110,14 +113,17 @@ def rewrite(path: str, block: str, check: bool) -> bool:
 
 
 def main() -> None:
+    import __spark_entry__ as e
+
     check = "--check" in sys.argv
+    print(f"# entry module: {e.__file__}")
     block = catalog_block(count_tests())
     stale = [d for d in DOCS if rewrite(d, block, check)]
     qdoc = queries_doc()
-    if open("docs/QUERIES.md").read() != qdoc:
-        stale.append("docs/QUERIES.md")
+    if open(QUERIES_MD).read() != qdoc:
+        stale.append(QUERIES_MD)
         if not check:
-            open("docs/QUERIES.md", "w").write(qdoc)
+            open(QUERIES_MD, "w").write(qdoc)
     if check and stale:
         print(f"STALE: {stale} — run scripts/gen_query_catalog.py")
         sys.exit(1)

@@ -13,6 +13,7 @@ driver.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import traceback
@@ -20,7 +21,7 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -44,6 +45,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    print(f"# entry module: {entrymod.__file__}")
 
     from apache_beam_spark.engine import get_spark
     spark = get_spark("oracle-check")

@@ -7,31 +7,22 @@ order-insensitive values — the same contract as CORRECTNESS_r{N}.json.
 
 from __future__ import annotations
 
-import math
+import os
+import sys
 
 import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
 
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "scripts"))
+from oracle_check import canon  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.001"
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
-
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        if str(df[c].dtype).startswith("datetime64"):
-            df[c] = df[c].astype("datetime64[us]")
-        if str(df[c].dtype) in ("float64", "float32"):
-            df[c] = df[c].astype("float64").round(6)
-        if str(df[c].dtype).startswith(("int", "uint", "Int")):
-            df[c] = df[c].astype("int64")
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -43,7 +34,7 @@ def test_query_matches_oracle(name, spark, duck):
         return
     odf = duck.execute(ORACLES[name]).fetchdf()
     assert len(sdf) == len(odf), f"{name}: rows {len(sdf)} != oracle {len(odf)}"
-    s, o = _canon(sdf), _canon(odf)
+    s, o = canon(sdf), canon(odf)
     assert list(s.columns) == list(o.columns), f"{name}: columns {list(s.columns)} != {list(o.columns)}"
     pd.testing.assert_frame_equal(s, o, check_dtype=False, check_exact=False,
                                   rtol=0, atol=1e-9, obj=name)
