@@ -66,8 +66,20 @@ _ENGINE_CONF = {
 }
 
 
+#: the checkout holding this package
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(app_name: str = "apache_beam_spark", master: str | None = None) -> SparkSession:
-    """Return (building if needed) the engine's SparkSession."""
+    """Return (building if needed) the engine's SparkSession.
+
+    Puts this package's checkout first on PYTHONPATH before the JVM
+    starts, so the Python workers it spawns import the same code as the
+    driver when a script runs from outside its checkout (a worker still
+    finds its working directory first)."""
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if paths[:1] != [CHECKOUT]:
+        os.environ["PYTHONPATH"] = os.pathsep.join([CHECKOUT, *paths])
     builder = SparkSession.builder.appName(app_name)
     builder = builder.master(master or f"local[{DEFAULT_CPUS}]")
     for k, v in _ENGINE_CONF.items():

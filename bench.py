@@ -26,9 +26,7 @@ HEADLINE = headline()
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
-    from apache_beam_spark.engine import _ENGINE_CONF
+    from apache_beam_spark.engine import get_spark
 
     # self-throttle (VERDICT r11 item 2): three of the last four driver
     # bench artifacts were self-labeled contaminated via
@@ -49,10 +47,7 @@ def main() -> None:
               f"(loadavg {loadavg_at_invoke} -> "
               f"{os.getloadavg()[0]:.2f})", file=sys.stderr)
 
-    builder = SparkSession.builder.appName("bench").master(f"local[{CPUS}]")
-    for k, v in _ENGINE_CONF.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod

@@ -9,18 +9,12 @@ docs/QUERIES.md are all read from ``REGISTRY``.
 
 from __future__ import annotations
 
-import importlib
 from collections.abc import Callable
 from dataclasses import dataclass
-
-#: one module per family, imported in this order to fill REGISTRY
-FAMILIES = ("tpch", "beam", "streaming", "text", "dedup", "embeddings",
-            "llm_data", "analytics", "multimodal")
 
 
 @dataclass(frozen=True)
 class Query:
-    name: str
     build: Callable
     #: DuckDB SQL of the value oracle; a function returning it when the
     #: text needs an import the entry module must not pay for; None for
@@ -42,7 +36,7 @@ def register(name: str, build: Callable, oracle=None, headline=False,
              scale=False) -> Callable:
     if name in REGISTRY:
         raise ValueError(f"query {name!r} is already registered")
-    REGISTRY[name] = Query(name, build, oracle, headline, scale)
+    REGISTRY[name] = Query(build, oracle, headline, scale)
     return build
 
 
@@ -61,12 +55,15 @@ def oracle_of(name: str) -> str:
 
 
 def headline() -> list[str]:
-    return [q.name for q in REGISTRY.values() if q.headline]
+    return [name for name, q in REGISTRY.items() if q.headline]
 
 
 def scale_rows() -> list[str]:
-    return [q.name for q in REGISTRY.values() if q.headline or q.scale]
+    return [name for name, q in REGISTRY.items() if q.headline or q.scale]
 
 
-for _family in FAMILIES:
-    importlib.import_module(f"{__name__}.{_family}")
+# one module per family; importing them fills REGISTRY, in this order
+# (oracle_of reads queries registered by an earlier family)
+from queries import (  # noqa: E402,F401
+    tpch, beam, streaming, text, dedup, embeddings, llm_data, analytics,
+    multimodal)

@@ -11,10 +11,7 @@ affine model on (1, 10), and report how far the k=3 point sits from
 the fit — an affine plan predicts it within noise; a superlinear one
 overshoots.  Prints one JSON line for SCALING.md.
 
-Usage: python scripts/asof_scale_profile.py reps query [query ...]
-
-The SCALING.md numbers come from ``3 asof_last_purchase
-funnel_instances feature_store_events user_sessions``.
+Usage: python scripts/asof_scale_profile.py [reps]
 """
 
 from __future__ import annotations
@@ -28,10 +25,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
+#: this profile's own workload: the events-window family
+QUERIES = ["asof_last_purchase", "funnel_instances", "feature_store_events",
+           "user_sessions"]
 
 
 def main() -> None:
-    reps, names = int(sys.argv[1]), sys.argv[2:]
+    reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     from apache_beam_spark.engine import get_spark
     from apache_beam_spark.plans.caching import scoped_caches
     from scale_check import build_replica
@@ -48,11 +48,11 @@ def main() -> None:
         dirs[k] = dst
 
     queries = entrymod.queries()
-    walls: dict[str, dict[int, float]] = {q: {} for q in names}
+    walls: dict[str, dict[int, float]] = {q: {} for q in QUERIES}
     # interleaved rounds: host-load beats hit every (query, k) equally
     for rep in range(reps):
         for k, d in dirs.items():
-            for q in names:
+            for q in QUERIES:
                 t0 = time.time()
                 with scoped_caches():
                     queries[q](spark, d).write.format("noop") \
@@ -63,7 +63,7 @@ def main() -> None:
               file=sys.stderr, flush=True)
 
     report = {}
-    for q in names:
+    for q in QUERIES:
         t1, t3, t10 = walls[q][1], walls[q][3], walls[q][10]
         # affine fit through k=1 and k=10
         b = (t10 - t1) / 9.0

@@ -138,12 +138,10 @@ def time_suite(spark, queries, sf_dir: str,
 #: both output modes, so the spanning-edge discipline's effect is
 #: tracked by the same artifact that caught the r3 LSH finding.
 def _extras() -> dict:
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entrymod
     from apache_beam_spark.dedup.ngram import ngram_jaccard_pairs
     from apache_beam_spark.similarity.knn import embedding_near_dup_pairs
     from apache_beam_spark.sources.tables import load_table
+    from queries.shared import _planted_embeddings
 
     def ngram_star(spark, sf_dir):
         return ngram_jaccard_pairs(
@@ -152,12 +150,12 @@ def _extras() -> dict:
 
     def embed_full(spark, sf_dir):
         return embedding_near_dup_pairs(
-            entrymod._planted_embeddings(spark, sf_dir),
+            _planted_embeddings(spark, sf_dir),
             threshold=0.95, dim=64, expand="full")
 
     def embed_star(spark, sf_dir):
         return embedding_near_dup_pairs(
-            entrymod._planted_embeddings(spark, sf_dir),
+            _planted_embeddings(spark, sf_dir),
             threshold=0.95, dim=64, expand="star")
 
     return {"ngram_jaccard_star": ngram_star,

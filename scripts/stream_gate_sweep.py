@@ -21,7 +21,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # gate -> list of (label, shuffle_partitions, mft, n_shards)
 CONFIGS = {
@@ -49,18 +48,12 @@ CONFIGS = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
-    from apache_beam_spark.engine import _ENGINE_CONF
+    from apache_beam_spark.engine import get_spark
     from apache_beam_spark.sources.tables import load_table
     from apache_beam_spark.windowing import ensure_event_time
 
     rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 5
-    builder = SparkSession.builder.appName("gate-sweep") \
-        .master(f"local[{CPUS}]")
-    for k, v in _ENGINE_CONF.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark("gate-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     events = ensure_event_time(load_table(spark, "events", SF_DIR), "ts")

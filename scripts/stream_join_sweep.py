@@ -18,10 +18,9 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # (shuffle_partitions, spool_files, max_files_per_trigger)
 CONFIGS = [
@@ -37,18 +36,14 @@ CONFIGS = [
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from apache_beam_spark.engine import _ENGINE_CONF
+    from apache_beam_spark.engine import get_spark
     from apache_beam_spark.sources.tables import load_table
     from apache_beam_spark.windowing import ensure_event_time
 
     rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 5
-    builder = SparkSession.builder.appName("sweep").master(f"local[{CPUS}]")
-    for k, v in _ENGINE_CONF.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark("sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     events = ensure_event_time(load_table(spark, "events", SF_DIR), "ts")

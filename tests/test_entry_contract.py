@@ -64,6 +64,34 @@ def test_bench_headline_subset_of_queries():
     assert len(rows) == len(set(rows)), "duplicate scale_check rows"
     assert set(rows) <= q, sorted(set(rows) - q)
     assert set(bench.HEADLINE) <= set(rows), "a headline query lost its 10x row"
+    asof = _load_script("asof_scale_profile").QUERIES
+    assert set(asof) <= q, sorted(set(asof) - q)
+
+
+def test_scale_check_extras_build(monkeypatch):
+    """Every extra scale_check row resolves its names and calls its
+    miner; the loaders and miners are stubbed, so no Spark runs."""
+    import queries.shared
+    from apache_beam_spark.dedup import ngram
+    from apache_beam_spark.similarity import knn
+    from apache_beam_spark.sources import tables
+
+    mined = []
+
+    def miner(df, **kw):
+        mined.append(df)
+        return "pairs"
+
+    monkeypatch.setattr(tables, "load_table", lambda *a: "documents")
+    monkeypatch.setattr(queries.shared, "_planted_embeddings",
+                        lambda *a: "embeddings")
+    monkeypatch.setattr(ngram, "ngram_jaccard_pairs", miner)
+    monkeypatch.setattr(knn, "embedding_near_dup_pairs", miner)
+    extras = _load_script("scale_check")._extras()
+    assert extras
+    for name, build in extras.items():
+        assert build(None, "unused") == "pairs", name
+    assert mined == ["documents", "embeddings", "embeddings"]
 
 
 def test_registering_a_taken_name_raises():
