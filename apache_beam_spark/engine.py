@@ -63,6 +63,22 @@ _ENGINE_CONF = {
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ),
+    # each RocksDB commit writes one changelog file per partition instead
+    # of uploading the new SST files and a zip; a snapshot is still made
+    # every minDeltasForSnapshot versions and uploaded in the background
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
+        "true"),
+}
+
+# Without the native Hadoop library, Hadoop's local FileContext starts a
+# `readlink` process for every checkpoint rename.  On the local file
+# system the FileSystem-based manager's rename is POSIX rename(2), just
+# as atomic, and starts none.  Other masters keep Spark's default:
+# FileContext is what gives HDFS its atomic rename.
+_LOCAL_CHECKPOINT_CONF = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"),
 }
 
 
@@ -80,11 +96,20 @@ def get_spark(app_name: str = "apache_beam_spark", master: str | None = None) ->
     paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     if paths[:1] != [CHECKOUT]:
         os.environ["PYTHONPATH"] = os.pathsep.join([CHECKOUT, *paths])
-    builder = SparkSession.builder.appName(app_name)
-    builder = builder.master(master or f"local[{DEFAULT_CPUS}]")
-    for k, v in _ENGINE_CONF.items():
+    master = master or f"local[{DEFAULT_CPUS}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in session_conf(master).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def session_conf(master: str) -> dict[str, str]:
+    """The confs ``get_spark`` sets for ``master``: the engine's confs,
+    plus the local checkpoint file manager on a ``local``/``local[...]``
+    master."""
+    if master == "local" or master.startswith("local["):
+        return {**_ENGINE_CONF, **_LOCAL_CHECKPOINT_CONF}
+    return dict(_ENGINE_CONF)
 
 
 def stop_spark() -> None:

@@ -225,7 +225,10 @@ _Q9_SQL = """
 
 # Q11 adapted: "stock value" of a part held by one nation's suppliers
 # := their lineitem revenue for it; the correlated global-fraction
-# HAVING of the original becomes the scalar subquery on the CTE.
+# HAVING of the original becomes the scalar subquery on the CTE.  The
+# threshold is 2.4x the mean part value, so it scales with the number
+# of parts as TPC-H's 0.0001/SF fraction does (a fixed fraction of the
+# total keeps no part at all at sf0.1).
 _Q11_SQL = """
     WITH val AS (
       SELECT l_partkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS value
@@ -234,7 +237,7 @@ _Q11_SQL = """
       JOIN nation ON s_nationkey = n_nationkey
       WHERE n_name = 'NATION_3' GROUP BY l_partkey)
     SELECT l_partkey AS ps_partkey, CAST(value AS DOUBLE) AS part_value
-    FROM val WHERE value > (SELECT SUM(value) * 0.002 FROM val)"""
+    FROM val WHERE value > (SELECT SUM(value) * 2.4 / COUNT(*) FROM val)"""
 
 # Q16 adapted: the supplier-part relation comes from lineitem; the
 # "customer complaints" NOT IN exclusion becomes negative-balance

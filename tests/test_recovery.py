@@ -4,7 +4,12 @@ of the reference runner's bundle-retry + state-reuse guarantee."""
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import os
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from apache_beam_spark.streaming import streaming_distinct
@@ -43,6 +48,61 @@ def test_streaming_distinct_survives_restart(spark, tmp_path):
     # dedup state must suppress; 6,7,8 are new
     _write_batch(spark, spool, [3, 4, 5, 6, 7, 8])
     _run_once(spark, spool, out, ckpt)
+
+    got = sorted(r["event_id"] for r in spark.read.parquet(out).collect())
+    assert got == [1, 2, 3, 4, 5, 6, 7, 8]
+
+
+#: the two checkpoint confs the engine sets over Spark's defaults
+_CHECKPOINT_CONFS = (
+    "spark.sql.streaming.checkpointFileManagerClass",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+)
+
+
+@contextlib.contextmanager
+def _spark_defaults(spark):
+    """Run the block under Spark's own checkpoint file manager and
+    RocksDB commit format, then restore the engine's."""
+    saved = {k: spark.conf.get(k, None) for k in _CHECKPOINT_CONFS}
+    try:
+        for k in _CHECKPOINT_CONFS:
+            spark.conf.unset(k)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is not None:
+                spark.conf.set(k, v)
+
+
+def _changelogs(ckpt):
+    return glob.glob(os.path.join(ckpt, "state", "**", "*.changelog"),
+                     recursive=True)
+
+
+@pytest.mark.parametrize("defaults_first", [True, False],
+                         ids=["spark_then_engine", "engine_then_spark"])
+def test_checkpoint_resumes_across_engine_confs(spark, tmp_path,
+                                                defaults_first):
+    """A dedup checkpoint written under Spark's default checkpoint confs
+    resumes under the engine's (FileSystem checkpoint manager, RocksDB
+    changelog commits) with its state intact, and the reverse."""
+    spool = str(tmp_path / "spool")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    first = _spark_defaults(spark) if defaults_first else contextlib.nullcontext()
+    second = contextlib.nullcontext() if defaults_first else _spark_defaults(spark)
+
+    _write_batch(spark, spool, [1, 2, 3, 4, 5])
+    with first:
+        _run_once(spark, spool, out, ckpt)
+    # the first run really wrote its state in its own commit format
+    assert bool(_changelogs(ckpt)) is not defaults_first
+
+    _write_batch(spark, spool, [3, 4, 5, 6, 7, 8])
+    with second:
+        _run_once(spark, spool, out, ckpt)
 
     got = sorted(r["event_id"] for r in spark.read.parquet(out).collect())
     assert got == [1, 2, 3, 4, 5, 6, 7, 8]
