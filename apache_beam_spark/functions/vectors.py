@@ -25,13 +25,16 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; null where the quotient is NaN (a NaN element,
-    or inf arithmetic).  NaN sorts above every double and passes
-    ``sim >= threshold``, so an unmasked NaN would rank a corrupt
-    vector first; null sorts last and fails every comparison.
-    ``similarity/knn.pair_cosine`` (the Arrow path) applies the same
-    mask, so a row's sim does not depend on the execution path."""
-    return F.nanvl(dot(a, b) / (norm(a) * norm(b)),
+    """Cosine similarity; null where a vector is all zeros (the
+    division is a ``try_divide``, which ANSI mode would otherwise turn
+    into a DIVIDE_BY_ZERO error) and where the quotient is NaN (a NaN
+    element, or inf arithmetic).  NaN sorts above every double and
+    passes ``sim >= threshold``, so an unmasked NaN would rank a
+    corrupt vector first; null sorts last and fails every comparison.
+    ``similarity/knn.pair_cosine`` (the Arrow path) yields null for
+    the same rows, so a row's sim does not depend on the execution
+    path."""
+    return F.nanvl(F.try_divide(dot(a, b), norm(a) * norm(b)),
                    F.lit(None).cast("double"))
 
 

@@ -279,6 +279,27 @@ class Top:
     N_SALTS = 32
 
     @staticmethod
+    def prune_salted(df: DataFrame, keys: Sequence, order: Sequence[Column],
+                     salt_cols: Sequence[Column], k: int) -> DataFrame:
+        """Level 1 of the exact two-level per-key top-k: keep the top
+        ``k`` rows of each (key, salt) bucket, salt =
+        ``pmod(xxhash64(salt_cols), N_SALTS)``.  Exact: a row outside
+        its bucket's top-k has >= k same-key rows ahead of it
+        globally, so the per-key top-k survives.  The rank column
+        gets a name no input column has, so no input column is
+        overwritten or dropped."""
+        from pyspark.sql.window import Window as W
+
+        taken = {c.lower() for c in df.columns}
+        rn = "__lrn__"
+        while rn in taken:
+            rn += "_"
+        salt = F.pmod(F.xxhash64(*salt_cols), F.lit(Top.N_SALTS))
+        lw = W.partitionBy(*keys, salt).orderBy(*order)
+        return (df.withColumn(rn, F.row_number().over(lw))
+                .filter(F.col(rn) <= k).drop(rn))
+
+    @staticmethod
     def per_key(keys: Union[str, Sequence[str]], order_col: str, k: int,
                 ascending: bool = False, rank_alias: str = "rank",
                 tiebreak: Optional[Sequence[str]] = None,
@@ -314,13 +335,10 @@ class Top:
                 # who know their key is near-unique should skip it.
                 # Results are identical either way.
                 if salted:
-                    salt = F.pmod(
-                        F.xxhash64(F.col(order_col),
-                                   *[F.col(t) for t in tiebreak or []]),
-                        F.lit(Top.N_SALTS))
-                    lw = W.partitionBy(*keys_l, salt).orderBy(*order)
-                    df = (df.withColumn("__lrn__", F.row_number().over(lw))
-                          .filter(F.col("__lrn__") <= k).drop("__lrn__"))
+                    df = Top.prune_salted(
+                        df, keys_l, order,
+                        [F.col(c) for c in [order_col, *(tiebreak or [])]],
+                        k)
                 w = W.partitionBy(*keys_l).orderBy(*order)
                 df = (
                     df.withColumn(rank_alias, F.row_number().over(w))

@@ -44,11 +44,8 @@ def pair_cosine(df: DataFrame, a_col: str, b_col: str,
     element — Arrow delivers null elements as NaN floats too — or inf
     arithmetic) is masked to null exactly as the HOF masks it (ADVICE
     r13: unmasked, a NaN sim sorts ABOVE every real double under
-    ``sim.desc()`` and promotes corrupt vectors into top-k).  One
-    corner divergence remains, pinned in tests/test_knn_scale.py: a
-    zero vector yields null here, where the HOF under ANSI raises
-    DIVIDE_BY_ZERO (verified empirically on Spark 4.1: double 0/0 DOES
-    raise with ansi on) — no caller computes cosine of a zero vector.
+    ``sim.desc()`` and promotes corrupt vectors into top-k).  A zero
+    vector (0/0) yields null too, as the HOF's ``try_divide`` does.
     """
     import numpy as np
 

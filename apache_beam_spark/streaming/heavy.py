@@ -14,21 +14,21 @@ n/(capacity+1) survives, and every reported count undercounts by at most
 n/(capacity+1).  With ``capacity`` >= the window's distinct-item count
 the summary degenerates to exact counting (useful for tests/oracles).
 
-Mechanics mirror ``streaming/sequences.py``: JSON state blob, global
-watermark via ``getCurrentWatermarkMs``, event-time timeout re-arming
-at watermark+1 so idle windows still close.
+Mechanics mirror ``streaming/sequences.py``: windows share key-group
+state (``stateful_per_key_group``), global watermark via
+``getCurrentWatermarkMs``, event-time timeout re-arming at
+watermark+1 so idle windows still close.
 """
 
 from __future__ import annotations
-
-import json
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType, TimestampNTZType
 
-from apache_beam_spark.streaming.stateful import stateful_per_key
+from apache_beam_spark.streaming.stateful import (KEY_GROUPS,
+                                                   stateful_per_key_group)
 
 
 def streaming_heavy_hitters(df: DataFrame, item_col: str,
@@ -36,7 +36,7 @@ def streaming_heavy_hitters(df: DataFrame, item_col: str,
                             min_count: int = 1,
                             ts_col: str = "ts",
                             lateness_ms: int = 0,
-                            n_shards: int = 0) -> DataFrame:
+                            n_shards: int = KEY_GROUPS) -> DataFrame:
     """Per closed window: items whose MG count reaches ``min_count``.
 
     Output ``(window_start, item, approx_count)`` — ``window_start`` as
@@ -44,11 +44,9 @@ def streaming_heavy_hitters(df: DataFrame, item_col: str,
     (window rows)/(capacity+1).  Rows later than ``lateness_ms`` are
     dropped (standard watermark discipline).
 
-    ``n_shards`` > 0 multiplexes many windows through one state key
-    (``hash(window) % n_shards`` key-grouping, same trick as
-    ``streaming_funnel``): long replays touching hundreds of windows per
-    micro-batch pay ``n_shards`` Python round trips instead of one per
-    window.  Results identical; 0 = one state key per window.
+    Windows are the state keys, multiplexed through ``n_shards`` key
+    groups: long replays touching hundreds of windows per micro-batch
+    pay at most ``n_shards`` Python round trips.
     """
     window_us = window_ms * 1000
 
@@ -64,17 +62,6 @@ def streaming_heavy_hitters(df: DataFrame, item_col: str,
            .withWatermark("__wmts__", f"{max(lateness_ms, 0)} milliseconds"))
 
     out_schema = "window_start bigint, item string, approx_count bigint"
-    state_schema = "js string"
-
-    def _absorb(counters, pdf):
-        for item, c in pdf["item"].value_counts().items():
-            counters[item] = counters.get(item, 0) + int(c)
-        if len(counters) > capacity:
-            # mergeable-summaries trim: subtract the
-            # (capacity+1)-th largest count from everyone
-            cut = sorted(counters.values())[-(capacity + 1)]
-            counters = {i: n - cut for i, n in counters.items() if n > cut}
-        return counters
 
     def _close(w_start, counters):
         items = [(i, n) for i, n in counters.items() if n >= min_count]
@@ -85,76 +72,44 @@ def streaming_heavy_hitters(df: DataFrame, item_col: str,
                 "approx_count": [n for _, n in items]})
         return None
 
-    def fn(key, pdfs, state):
-        w_start = key[0]
-        counters = json.loads(state.get[0]) if state.exists else {}
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                # standard late-row discipline: rows behind the
-                # watermark are beyond the lateness bound -> dropped
-                # (wm 0 = first batch: nothing can be late, skip the
-                # full-frame mask+copy)
-                counters = _absorb(
-                    counters, pdf[pdf["t"] >= wm_us] if wm_us else pdf)
-        if wm_us >= w_start + window_us:  # window closed: emit + free
-            if state.exists:
-                state.remove()
-            out = _close(w_start, counters)
-            if out is not None:
-                yield out
-        else:
-            state.update((json.dumps(counters),))
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-
     def _trim(counters):
         if len(counters) > capacity:
+            # mergeable-summaries trim: subtract the
+            # (capacity+1)-th largest count from everyone
             cut = sorted(counters.values())[-(capacity + 1)]
             counters = {i: n - cut for i, n in counters.items() if n > cut}
         return counters
 
-    def fn_sharded(key, pdfs, state):
-        wins = json.loads(state.get[0]) if state.exists else {}
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if wm_us:       # first batch: nothing can be late
-                    pdf = pdf[pdf["t"] >= wm_us]
-                if not len(pdf):
-                    continue
-                # ONE vectorized count over the whole batch instead of
-                # a value_counts call per window group — the absorb
-                # loop then walks a ~(windows x items)-sized series
-                counts = pdf.groupby(["w", "item"], sort=False).size()
-                touched = set()
-                for (w_start, item), c in counts.items():
-                    k = str(int(w_start))
-                    counters = wins.get(k)
-                    if counters is None:
-                        counters = wins[k] = {}
-                    counters[item] = counters.get(item, 0) + int(c)
-                    touched.add(k)
-                for k in touched:       # MG trim once per touched window
-                    wins[k] = _trim(wins[k])
+    def step(wins, pdfs, state):
+        # wins: {window_start: {item: count}}
+        wm_ms = state.getCurrentWatermarkMs()
+        wm_us = wm_ms * 1000
+        for pdf in pdfs:
+            # standard late-row discipline: rows behind the watermark
+            # are beyond the lateness bound -> dropped (wm 0 = first
+            # batch: nothing can be late, skip the mask+copy)
+            if wm_us:
+                pdf = pdf[pdf["t"] >= wm_us]
+            # ONE vectorized count over the whole batch instead of a
+            # value_counts call per window — the absorb loop then
+            # walks a ~(windows x items)-sized series
+            counts = pdf.groupby(["w", "item"], sort=False).size()
+            touched = set()
+            for (w_start, item), c in counts.items():
+                k = str(int(w_start))
+                counters = wins.setdefault(k, {})
+                counters[item] = counters.get(item, 0) + int(c)
+                touched.add(k)
+            for k in touched:       # MG trim once per touched window
+                wins[k] = _trim(wins[k])
         outs = []
         for k in [k for k in wins
                   if wm_us >= int(k) + window_us]:  # closed windows
             out = _close(int(k), wins.pop(k))
             if out is not None:
                 outs.append(out)
-        if wins:
-            state.update((json.dumps(wins),))
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        elif state.exists:
-            state.remove()
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+        return (pd.concat(outs, ignore_index=True) if outs else None,
+                wm_ms + 1)
 
-    if n_shards > 0:
-        sharded = src.withColumn(
-            "__shard__", F.pmod(F.hash("w"), F.lit(n_shards)))
-        return stateful_per_key(sharded, ["__shard__"], fn_sharded,
-                                out_schema, state_schema,
-                                timeout="EventTimeTimeout")
-    return stateful_per_key(src, ["w"], fn, out_schema, state_schema,
-                            timeout="EventTimeTimeout")
+    return stateful_per_key_group(src, "w", step, out_schema, n_shards,
+                                  timeout="EventTimeTimeout")

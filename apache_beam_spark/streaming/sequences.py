@@ -23,16 +23,15 @@ events are pruned by a codegen filter Catalyst pushes into the scan,
 so they cost nothing anywhere — see ``streaming_funnel``'s docstring
 for the trade.
 
-State is one JSON blob per key (same style as the trigger state
-machines): the unsealed event buffer and the open partial chains per
-stage.  At scale the buffer per key is bounded by (lateness window x
-per-key event rate) — the identical bound Spark's own stream-stream
+State per key is the unsealed event buffer and the open partial
+chains per stage, kept in key-group blobs (``stateful_per_key_group``).
+At scale the buffer per key is bounded by (lateness window x per-key
+event rate) — the identical bound Spark's own stream-stream
 joins keep.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Sequence
 
 import pandas as pd
@@ -41,7 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (ByteType, IntegerType, LongType, ShortType,
                                TimestampType, TimestampNTZType)
 
-from apache_beam_spark.streaming.stateful import stateful_per_key
+from apache_beam_spark.streaming.stateful import (KEY_GROUPS,
+                                                   stateful_per_key_group)
 
 _INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
@@ -63,7 +63,7 @@ def streaming_funnel(df: DataFrame, steps: Sequence[str], within_ms: int,
                      key_col: str = "user_id", ts_col: str = "ts",
                      type_col: str = "event_type", id_col: str = "event_id",
                      lateness_ms: int = 0,
-                     n_shards: int = 0) -> DataFrame:
+                     n_shards: int = KEY_GROUPS) -> DataFrame:
     """Emit completed ``steps[0] -> steps[1] -> ...`` chains per key.
 
     Output: ``(key_col, <step>_ts ...)`` with timestamps as epoch
@@ -71,12 +71,10 @@ def streaming_funnel(df: DataFrame, steps: Sequence[str], within_ms: int,
     match the batch operator for every event arriving within
     ``lateness_ms`` of the key's max seen event time.
 
-    ``n_shards`` > 0 multiplexes many user-keys through one state key
-    (``hash(key) % n_shards`` — Flink's key-group idea): the per-batch
-    Python/Arrow round trip count drops from #distinct-keys to
-    ``n_shards`` while per-user buffers stay independent inside the
-    shard blob.  Results are identical; pick ~10x the executor-core
-    count.  0 = one state key per user key (finest granularity).
+    User keys are multiplexed through ``n_shards`` key groups
+    (``stateful_per_key_group``): a micro-batch pays at most
+    ``n_shards`` Python/Arrow round trips while per-user buffers stay
+    independent inside the group blob.
 
     Watermark scope: only events whose type is one of ``steps``
     advance the query watermark — non-step events are pruned by a
@@ -125,7 +123,6 @@ def streaming_funnel(df: DataFrame, steps: Sequence[str], within_ms: int,
 
     out_cols = ", ".join(f"{s}_ts bigint" for s in steps)
     out_schema = f"{key_col} bigint, {out_cols}"
-    state_schema = "js string"
 
     def _advance(buf, parts, wm, done, out_keys, user):
         """Seal events behind the watermark and push them through the
@@ -162,82 +159,36 @@ def streaming_funnel(df: DataFrame, steps: Sequence[str], within_ms: int,
              **{f"{s}_ts": [d[i] for d in done]
                 for i, s in enumerate(steps)}})
 
-    def fn(key, pdfs, state):
-        s = (json.loads(state.get[0])
-             if state.exists else {"buf": [], "parts": []})
-        buf, parts = s["buf"], s["parts"]
+    def step(users, pdfs, state):
+        # users: {user_key: {"buf": [...], "parts": [...]}}
         wm_ms = state.getCurrentWatermarkMs()
         wm = wm_ms * 1000  # query watermark (µs): global, monotone
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                # Spark's late-row rule: a row with event time < the
-                # watermark is beyond the lateness bound -> dropped
-                # (wm 0 = first batch: nothing can be late, skip the
-                # full-frame mask+copy)
-                if wm:
-                    pdf = pdf[pdf["t"] >= wm]
-                buf.extend(zip(pdf["t"].astype(int).tolist(),
-                               pdf["y"].astype(int).tolist(),
-                               pdf["i"].astype(int).tolist()))
+        for pdf in pdfs:
+            # vectorized ingest: Spark's late-row rule (a row with
+            # event time < the watermark is beyond the lateness bound
+            # -> dropped; skipped on the wm-0 first batch: nothing can
+            # be late) + per-user bulk extend (a groupby over the
+            # Arrow batch, not a Python loop over events)
+            if wm:
+                pdf = pdf[pdf["t"] >= wm]
+            for u, g in pdf.groupby("k", sort=False):
+                st = users.setdefault(str(u), {"buf": [], "parts": []})
+                st["buf"].extend(zip(g["t"].astype(int).tolist(),
+                                     g["y"].astype(int).tolist(),
+                                     g["i"].astype(int).tolist()))
 
         done, out_keys = [], []
-        buf, parts = _advance(buf, parts, wm, done, out_keys, key[0])
-
-        if buf or parts:
-            state.update((json.dumps({"buf": buf, "parts": parts}),))
-            # wake this key as soon as the watermark moves again, even
-            # if it never receives another event
-            state.setTimeoutTimestamp(wm_ms + 1)
-        elif state.exists:
-            state.remove()
-        if done:
-            yield _emit(done, out_keys)
-
-    def fn_sharded(key, pdfs, state):
-        users = json.loads(state.get[0]) if state.exists else {}
-        wm_ms = state.getCurrentWatermarkMs()
-        wm = wm_ms * 1000
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                # vectorized ingest: late-row filter (skipped on
-                # the wm-0 first batch: nothing can be late) +
-                # per-user bulk extend (a groupby over the Arrow
-                # batch, not a Python loop over events)
-                if wm:
-                    pdf = pdf[pdf["t"] >= wm]
-                for u, g in pdf.groupby("k", sort=False):
-                    st = users.get(str(u))
-                    if st is None:
-                        st = users[str(u)] = {"buf": [], "parts": []}
-                    st["buf"].extend(zip(g["t"].astype(int).tolist(),
-                                         g["y"].astype(int).tolist(),
-                                         g["i"].astype(int).tolist()))
-
-        done, out_keys = [], []
-        dead = []
-        for u, st in users.items():
+        for u in list(users):
+            st = users[u]
             buf, parts = _advance(st["buf"], st["parts"], wm,
                                   done, out_keys, int(u))
             if buf or parts:
                 st["buf"], st["parts"] = buf, parts
             else:
-                dead.append(u)
-        for u in dead:
-            del users[u]
+                del users[u]
+        # wake each group as soon as the watermark moves again, even
+        # if it never receives another event
+        return (_emit(done, out_keys) if done else None), wm_ms + 1
 
-        if users:
-            state.update((json.dumps(users),))
-            state.setTimeoutTimestamp(wm_ms + 1)
-        elif state.exists:
-            state.remove()
-        if done:
-            yield _emit(done, out_keys)
-
-    if n_shards > 0:
-        sharded = src.withColumn(
-            "__shard__", F.pmod(F.hash("k"), F.lit(n_shards)))
-        return stateful_per_key(sharded, ["__shard__"], fn_sharded,
-                                out_schema, state_schema,
-                                timeout="EventTimeTimeout")
-    return stateful_per_key(src, ["k"], fn, out_schema, state_schema,
-                            timeout="EventTimeTimeout")
+    return stateful_per_key_group(src, "k", step, out_schema, n_shards,
+                                  timeout="EventTimeTimeout")

@@ -16,11 +16,19 @@ the single Spark timeout wakes the key).
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Optional
+import json
+from typing import Callable, Iterable, Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+#: Key groups per operator when the caller names no count (see
+#: ``stateful_per_key_group``; the timing that set it is in SCALING.md
+#: "One key-group layout").
+KEY_GROUPS = 64
+
+_KEY_GROUP_COL = "__key_group__"
 
 
 def stateful_per_key(
@@ -45,6 +53,52 @@ def stateful_per_key(
         func, outputStructType=output_schema, stateStructType=state_schema,
         outputMode="append", timeoutConf=to,
     )
+
+
+def stateful_per_key_group(
+    df: DataFrame,
+    key: str,
+    step: Callable[[dict, Iterator[pd.DataFrame], GroupState],
+                   tuple[Optional[pd.DataFrame], Optional[int]]],
+    output_schema,
+    n_shards: int = KEY_GROUPS,
+    timeout: str = "NoTimeout",
+) -> DataFrame:
+    """Stateful ParDo over key groups (Flink's key-group idea): rows
+    are grouped by ``pmod(xxhash64(key), n_shards)``, so a micro-batch
+    pays at most ``n_shards`` Python/Arrow round trips however many
+    distinct keys it carries, and a group's state is one JSON
+    ``{str(key): key_state}`` blob in which keys stay independent.
+    The group count changes no result, only how keys share state rows;
+    keep it fixed for the life of a checkpoint, since a key's state
+    lives in the group its hash picked.
+
+    ``step(blob, pdfs, state) -> (rows, wake_ms)`` updates ``blob`` in
+    place from the group's pandas chunks (none on a timeout wake) and
+    returns the rows to emit (or None) and the event-time timeout to
+    arm (or None).  An empty blob removes the group's state.
+    """
+    from pyspark.sql import functions as F
+
+    if n_shards < 1:
+        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
+
+    def fn(_group, pdfs, state: GroupState):
+        blob = json.loads(state.get[0]) if state.exists else {}
+        rows, wake_ms = step(blob, pdfs, state)
+        if blob:
+            state.update((json.dumps(blob),))
+            if wake_ms is not None:
+                state.setTimeoutTimestamp(wake_ms)
+        elif state.exists:
+            state.remove()
+        if rows is not None:
+            yield rows
+
+    grouped = df.withColumn(
+        _KEY_GROUP_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_shards)))
+    return stateful_per_key(grouped, [_KEY_GROUP_COL], fn, output_schema,
+                            "js string", timeout)
 
 
 def group_into_batches_stream(
@@ -134,7 +188,7 @@ def rate_limit_batch(df: DataFrame, key: str, event_time: str,
 def streaming_rate_limit(df: DataFrame, key: str, event_time: str,
                          id_col: str, window_ms: int,
                          max_per_window: int,
-                         n_shards: int = 0) -> DataFrame:
+                         n_shards: int = KEY_GROUPS) -> DataFrame:
     """Per-key event-time token bucket: admit at most
     ``max_per_window`` events per key per ``window_ms`` event-time
     window; excess rows are dropped (throttling / abuse-limiting at
@@ -142,40 +196,25 @@ def streaming_rate_limit(df: DataFrame, key: str, event_time: str,
 
     Deterministic: admission order within a micro-batch is
     (event_time, id) per key.  State is one (window_start ->
-    admitted_count) map per key; windows older than the watermark
+    admitted_count) map per key, kept in ``n_shards`` key groups
+    (``stateful_per_key_group``); windows older than the watermark
     minus one window are evicted on every invocation, so state is
     bounded by ``lateness / window`` entries per key.  Output:
     ``(key, id, ts_ms, win_start_ms, seq)`` — matches
     ``rate_limit_batch`` on in-order input (parity-tested).
-
-    ``n_shards`` > 0 multiplexes many keys through one state key
-    (hash(key) % n_shards — the Flink key-group idea also used by
-    streaming_funnel): per-batch Python/Arrow round trips drop from
-    #distinct-keys to n_shards; per-key buckets stay independent
-    inside the shard blob, results identical (parity-tested).
     """
-    import json
-
     from pyspark.sql import functions as F
 
     from apache_beam_spark.windowing import ensure_event_time
 
     out_schema = (f"{key} string, {id_col} long, ts_ms long, "
                   "win_start_ms long, seq int")
-    state_schema = "js string"
-    sharded = n_shards > 0
 
-    def fn(k, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return
-        # {user_key: {win_start: count}} (single-key mode uses one entry)
-        blob = json.loads(state.get[0]) if state.exists else {}
+    def step(blob, pdfs, state):
+        # blob: {user_key: {win_start: count}}
         out = {key: [], id_col: [], "ts_ms": [], "win_start_ms": [],
                "seq": []}
         for pdf in pdfs:
-            if not len(pdf):
-                continue
             pdf = pdf.sort_values([key, "__ts_ms__", id_col])
             for uk, i, t in zip(pdf[key], pdf[id_col], pdf["__ts_ms__"]):
                 bucket = blob.setdefault(str(uk), {})
@@ -191,15 +230,14 @@ def streaming_rate_limit(df: DataFrame, key: str, event_time: str,
         # evict windows the watermark has passed (bounded state)
         wm = state.getCurrentWatermarkMs()
         if wm > 0:
-            blob = {uk: kept for uk, b in blob.items()
-                    if (kept := {w: c for w, c in b.items()
-                                 if int(w) + window_ms > wm - window_ms})}
-        if blob:
-            state.update((json.dumps(blob),))
-        elif state.exists:
-            state.remove()
-        if out[key]:
-            yield pd.DataFrame(out)
+            for uk in list(blob):
+                kept = {w: c for w, c in blob[uk].items()
+                        if int(w) + window_ms > wm - window_ms}
+                if kept:
+                    blob[uk] = kept
+                else:
+                    del blob[uk]
+        return (pd.DataFrame(out) if out[key] else None), None
 
     prepped = (ensure_event_time(df, event_time)
                .withWatermark(event_time, f"{window_ms} milliseconds"))
@@ -211,12 +249,7 @@ def streaming_rate_limit(df: DataFrame, key: str, event_time: str,
         F.col(id_col).cast("long").alias(id_col),
         F.col(event_time),
         F.unix_millis(F.col(event_time)).alias("__ts_ms__"))
-    if sharded:
-        prepped = prepped.withColumn(
-            "__shard__", F.pmod(F.xxhash64(F.col(key)), F.lit(n_shards)))
-        return stateful_per_key(prepped, ["__shard__"], fn, out_schema,
-                                state_schema)
-    return stateful_per_key(prepped, [key], fn, out_schema, state_schema)
+    return stateful_per_key_group(prepped, key, step, out_schema, n_shards)
 
 
 def streaming_minhash_dedup(df: DataFrame, text_col: str = "text",
@@ -299,7 +332,7 @@ def streaming_minhash_dedup(df: DataFrame, text_col: str = "text",
 
 def streaming_sessions_strict(df: DataFrame, key: str, event_time: str,
                               gap_ms: int,
-                              n_shards: int = 0) -> DataFrame:
+                              n_shards: int = KEY_GROUPS) -> DataFrame:
     """Streaming session windows with EXACT reference boundary
     semantics (``Sessions.java:40`` + ``IntervalWindow.isDisjoint``:
     ``end == other.start`` is disjoint, so two events exactly one gap
@@ -307,8 +340,9 @@ def streaming_sessions_strict(df: DataFrame, key: str, event_time: str,
     ``session_window`` merges).  The unbounded twin of
     ``windowing.Sessions(gap, strict_gap=True).apply``.
 
-    State per key: the OPEN sessions as (start_ms, end_ms, n) triples
-    — an event t merges into a session iff its proto-window
+    State per key: the OPEN sessions as (start_ms, end_ms, n) triples,
+    kept in ``n_shards`` key groups (``stateful_per_key_group``) — an
+    event t merges into a session iff its proto-window
     [t, t+gap) OVERLAPS it (t < end and t+gap > start; equality at
     either edge keeps them separate).  A session closes exactly when
     the watermark reaches its end: any later on-time event has
@@ -318,15 +352,8 @@ def streaming_sessions_strict(df: DataFrame, key: str, event_time: str,
     extra touching check; strict semantics make the bound exact).
     State is therefore bounded by each key's open sessions within the
     watermark horizon, not by the stream.  Closed sessions emit on the
-    EventTimeTimeout wake (set to the earliest open end), so a key
-    needs no new data to flush.
-
-    ``n_shards`` > 0 multiplexes many keys through one state key
-    (hash(key) % n_shards — the Flink key-group idea shared with
-    streaming_rate_limit/streaming_funnel): per-batch Python/Arrow
-    round trips drop from #distinct-keys to n_shards, per-user session
-    lists stay independent inside the shard blob, results identical
-    (parity-pinned in tests/test_strict_sessions.py).  The bench gate
+    EventTimeTimeout wake (set to the earliest open end in the group),
+    so a key needs no new data to flush.  The bench gate
     `stream_strict_session_events_per_sec` measures this operator on
     the 10x replay spool with bounded-state evidence.
 
@@ -334,16 +361,12 @@ def streaming_sessions_strict(df: DataFrame, key: str, event_time: str,
     ``(key string, session_start_ms, session_end_ms, n_events)``.
     Batch/stream parity is pinned in tests/test_strict_sessions.py.
     """
-    import json
-
     from pyspark.sql import functions as F
 
     from apache_beam_spark.windowing import ensure_event_time
 
     out_schema = (f"{key} string, session_start_ms long, "
                   "session_end_ms long, n_events long")
-    state_schema = "js string"
-    sharded = n_shards > 0
 
     def _merge_strict(sessions):
         # islands split where start >= running max end (strict: a
@@ -358,51 +381,43 @@ def streaming_sessions_strict(df: DataFrame, key: str, event_time: str,
                 merged.append([s, e, n])
         return merged
 
-    def fn(k, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        # {user_key: [[start, end, n], ...]} — single-key mode carries
-        # exactly one entry; shard mode one per user in the key group
-        blob = json.loads(state.get[0]) if state.exists else {}
+    def step(blob, pdfs, state):
+        # blob: {user_key: [[start, end, n], ...]}
         wm = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for uk, t in zip(pdf[key], pdf["__ts_ms__"]):
-                    t = int(t)
-                    # reference late-drop against the CURRENT watermark
-                    # (LateDataDroppingDoFnRunner: an element whose
-                    # window end <= input watermark is droppable at
-                    # allowed-lateness 0).  Spark's own pre-state late
-                    # filter uses the PREVIOUS batch's watermark, which
-                    # lets an element within one gap of the stream head
-                    # leak into a still-open session one batch after the
-                    # watermark already passed it — observably different
-                    # sessions (caught by stream_session_late_exact).
-                    if t + gap_ms <= wm:
-                        continue
-                    blob.setdefault(str(uk), []).append(
-                        [t, t + gap_ms, 1])
+        for pdf in pdfs:
+            for uk, t in zip(pdf[key], pdf["__ts_ms__"]):
+                t = int(t)
+                # reference late-drop against the CURRENT watermark
+                # (LateDataDroppingDoFnRunner: an element whose window
+                # end <= input watermark is droppable at
+                # allowed-lateness 0).  Spark's own pre-state late
+                # filter uses the PREVIOUS batch's watermark, which lets
+                # an element within one gap of the stream head leak
+                # into a still-open session one batch after the
+                # watermark already passed it — observably different
+                # sessions (caught by stream_session_late_exact).
+                if t + gap_ms <= wm:
+                    continue
+                blob.setdefault(str(uk), []).append([t, t + gap_ms, 1])
         out = {key: [], "session_start_ms": [], "session_end_ms": [],
                "n_events": []}
-        kept: dict = {}
         nxt = None
-        for uk, sess in blob.items():
-            for s, e, n in _merge_strict(sess):
+        for uk in list(blob):
+            kept = []
+            for s, e, n in _merge_strict(blob.pop(uk)):
                 if e <= wm:
                     out[key].append(uk)
                     out["session_start_ms"].append(s)
                     out["session_end_ms"].append(e)
                     out["n_events"].append(n)
                 else:
-                    kept.setdefault(uk, []).append([s, e, n])
+                    kept.append([s, e, n])
                     nxt = e if nxt is None else min(nxt, e)
-        if kept:
-            state.update((json.dumps(kept),))
-            # wake when the watermark passes the earliest open end
-            # (> wm by construction, as Spark requires)
-            state.setTimeoutTimestamp(nxt)
-        elif state.exists:
-            state.remove()
-        if out[key]:
-            yield pd.DataFrame(out)
+            if kept:
+                blob[uk] = kept
+        # wake when the watermark passes the earliest open end (> wm
+        # by construction, as Spark requires)
+        return (pd.DataFrame(out) if out[key] else None), nxt
 
     from pyspark.sql.types import TimestampType
 
@@ -422,10 +437,5 @@ def streaming_sessions_strict(df: DataFrame, key: str, event_time: str,
         F.col(key).cast("string").alias(key),
         F.col(event_time),
         F.unix_millis(F.col(event_time)).alias("__ts_ms__"))
-    if sharded:
-        prepped = prepped.withColumn(
-            "__shard__", F.pmod(F.xxhash64(F.col(key)), F.lit(n_shards)))
-        return stateful_per_key(prepped, ["__shard__"], fn, out_schema,
-                                state_schema, timeout="EventTimeTimeout")
-    return stateful_per_key(prepped, [key], fn, out_schema,
-                            state_schema, timeout="EventTimeTimeout")
+    return stateful_per_key_group(prepped, key, step, out_schema, n_shards,
+                                  timeout="EventTimeTimeout")

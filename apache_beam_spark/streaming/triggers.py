@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
+from apache_beam_spark.streaming.stateful import (KEY_GROUPS,
+                                                   stateful_per_key_group)
 from apache_beam_spark.streaming.timers import stateful_do_fn
 
 
@@ -37,106 +39,63 @@ def count_trigger_aggregate(
     key: str,
     value_col: str,
     fire_every: int,
-    event_time: str = "ts",
     accumulating: bool = True,
-    n_shards: int = 0,
+    n_shards: int = KEY_GROUPS,
 ) -> DataFrame:
     """AfterPane.elementCountAtLeast(fire_every) on a per-key sum.
 
     Emits a pane ``(key, pane_index, n_in_pane, total)`` every
     ``fire_every`` elements; ``accumulating=True`` makes ``total`` the
     running aggregate across panes (ACCUMULATING_FIRED_PANES),
-    ``False`` resets per pane (DISCARDING_FIRED_PANES).
-
-    ``n_shards`` > 0 multiplexes many keys through one state key
-    (``hash(key) % n_shards`` key-grouping, the ``streaming_funnel``
-    trick): a high-cardinality key column pays ``n_shards`` Python
-    round trips per micro-batch instead of one per key.  Results
-    identical; 0 = one state key per key value.
+    ``False`` resets per pane (DISCARDING_FIRED_PANES).  Keys share
+    ``n_shards`` key groups (``stateful_per_key_group``).
     """
+    import numpy as np
 
-    def process(k, pdf: pd.DataFrame, ctx) -> None:
-        # vectorized pane math (the per-element Python loop was the
-        # throughput bottleneck of this gate): fires land at 1-based
-        # positions fire_every - pane_n, then every fire_every; cumsum
-        # gives both running totals and per-pane sums, Python touches
-        # only the fired panes (~1/fire_every of the rows)
-        import numpy as np
+    def step(blob, pdfs, state):
+        # blob: {key: {"total", "pane", "pane_n", "pane_total"}}
+        rows = []
+        for pdf in pdfs:
+            for k, grp in pdf.groupby("__k__", sort=False):
+                st = blob.setdefault(str(k), {
+                    "total": 0.0, "pane": 0, "pane_n": 0,
+                    "pane_total": 0.0})
+                # vectorized pane math: fires land at 1-based positions
+                # fire_every - pane_n, then every fire_every; cumsum
+                # gives both running totals and per-pane sums, Python
+                # touches only the fired panes (~1/fire_every of rows)
+                vals = grp[value_col].to_numpy(dtype=np.float64)
+                m = len(vals)
+                s = np.cumsum(vals)
+                fire_pos = np.arange(fire_every - st["pane_n"], m + 1,
+                                     fire_every)
+                if len(fire_pos):
+                    tots = st["total"] + s[fire_pos - 1]
+                    pane_sums = np.diff(
+                        np.concatenate(([0.0], s[fire_pos - 1])))
+                    pane_sums[0] += st["pane_total"]
+                    for j in range(len(fire_pos)):
+                        rows.append((str(k), st["pane"] + j, fire_every,
+                                     float(tots[j]) if accumulating
+                                     else float(pane_sums[j])))
+                    last = int(fire_pos[-1])
+                    st["pane"] += len(fire_pos)
+                    st["pane_n"] = m - last
+                    st["pane_total"] = (float(s[-1] - s[last - 1])
+                                        if m > last else 0.0)
+                else:
+                    st["pane_n"] += m
+                    st["pane_total"] += float(s[-1])
+                st["total"] += float(s[-1])
+        out = pd.DataFrame(rows, columns=["key", "pane_index", "n_in_pane",
+                                          "total"]) if rows else None
+        return out, None
 
-        n = ctx.get("n", 0)
-        total = ctx.get("total", 0.0)
-        pane = ctx.get("pane", 0)
-        pane_n = ctx.get("pane_n", 0)
-        pane_total = ctx.get("pane_total", 0.0)
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        m = len(vals)
-        if not m:
-            return
-        s = np.cumsum(vals)
-        fire_pos = np.arange(fire_every - pane_n, m + 1, fire_every)
-        if len(fire_pos):
-            tots = total + s[fire_pos - 1]
-            pane_sums = np.diff(np.concatenate(([0.0], s[fire_pos - 1])))
-            pane_sums[0] += pane_total
-            for j in range(len(fire_pos)):
-                ctx.output({
-                    "key": k[0], "pane_index": pane + j,
-                    "n_in_pane": fire_every,
-                    "total": float(tots[j]) if accumulating
-                    else float(pane_sums[j]),
-                })
-            last = int(fire_pos[-1])
-            pane += len(fire_pos)
-            pane_n = m - last
-            pane_total = float(s[-1] - s[last - 1]) if m > last else 0.0
-        else:
-            pane_n += m
-            pane_total += float(s[-1])
-        total += float(s[-1])
-        n += m
-        ctx.put("n", n); ctx.put("total", total); ctx.put("pane", pane)
-        ctx.put("pane_n", pane_n); ctx.put("pane_total", pane_total)
-
-    def on_timer(k, timer_id, ctx) -> None:  # pragma: no cover - no timers set
-        pass
-
-    out_schema = "key string, pane_index int, n_in_pane int, total double"
-    if n_shards > 0:
-        class _SubCtx:
-            """Per-key view over the shard's state dict: same get/put/
-            output surface ``process`` already uses."""
-
-            def __init__(self, st, outer):
-                self._st, self._outer = st, outer
-
-            def get(self, state_id, default=None):
-                return self._st.get(state_id, default)
-
-            def put(self, state_id, value):
-                self._st[state_id] = value
-
-            def output(self, row):
-                self._outer.output(row)
-
-        def process_sharded(k, pdf: pd.DataFrame, ctx) -> None:
-            for kv, grp in pdf.groupby("__k__", sort=False):
-                st = ctx.get(f"u{kv}") or {}
-                process((kv,), grp, _SubCtx(st, ctx))
-                ctx.put(f"u{kv}", st)
-
-        sharded = df.select(
-            F.col(key).cast("string").alias("__k__"), value_col,
-            event_time).withColumn(
-            "__shard__", F.pmod(F.hash("__k__"), F.lit(n_shards)))
-        return stateful_do_fn(
-            sharded, ["__shard__"], process_sharded, on_timer,
-            output_schema=out_schema, time_domain="none",
-        )
-    return stateful_do_fn(
-        df.select(key, value_col, event_time).withColumnRenamed(key, "__k__"),
-        ["__k__"], process, on_timer,
-        output_schema=out_schema, time_domain="none",
-    )
+    return stateful_per_key_group(
+        df.select(F.col(key).cast("string").alias("__k__"), value_col),
+        "__k__", step,
+        "key string, pane_index int, n_in_pane int, total double",
+        n_shards)
 
 
 _INTERVAL_UNITS_MS = {

@@ -563,19 +563,14 @@ def _sample_fixed_per_key(spark, sf_dir):
     li = load_table(spark, "lineitem", sf_dir)
     h = F.md5(F.concat_ws("-", F.col("l_orderkey").cast("string"),
                           F.col("l_linenumber").cast("string")))
-    # two-level top-k (r14, VERDICT r13 item 7 — the combine.py §2.5
+    # two-level top-k (r14, VERDICT r13 item 7 — Top.per_key's
     # pattern): a window over the THREE-value l_returnflag sorts every
     # lineitem row in 3 tasks at any scale.  Level 1 takes the
     # per-(flag, salt) top-5 in parallel (salt = deterministic hash of
-    # the ordering column, 32 buckets like Top.N_SALTS); level 2 ranks
-    # the <= 160 survivors per flag.  Exact: a row outside its salt
-    # bucket's top-5 has >= 5 same-flag rows ahead of it globally
-    # (md5 over the unique key pair is a total order), so the global
-    # top-5 is contained in the bucket top-5 union.
-    salt = F.pmod(F.xxhash64(h), F.lit(32))
-    lw = W.partitionBy("l_returnflag", salt).orderBy(h)
-    pruned = (li.withColumn("__lrn__", F.row_number().over(lw))
-              .filter(F.col("__lrn__") <= 5).drop("__lrn__"))
+    # the ordering column); level 2 ranks the <= 160 survivors per
+    # flag.  Exact because md5 over the unique key pair is a total
+    # order.
+    pruned = Top.prune_salted(li, ["l_returnflag"], [h], [h], 5)
     w = W.partitionBy("l_returnflag").orderBy(h)
     return (pruned.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= 5)

@@ -335,8 +335,8 @@ def _stream_minhash_dedup(spark, sf_dir):
             HAVING COUNT(*) >= 5""")
 def _stream_heavy_hitters_exact(spark, sf_dir):
     """Streaming windowed heavy hitters run END-TO-END inside the
-    query (streaming/heavy.py::streaming_heavy_hitters, the sharded
-    Misra-Gries path): every 5th event replays through TestStream in
+    query (streaming/heavy.py::streaming_heavy_hitters, Misra-Gries
+    summaries in key-group state): every 5th event replays through TestStream in
     one data wave plus a watermark tail that closes all
     6-hour windows.  With ``capacity`` (64) >= the stream's distinct
     item count (~5 event types) the MG summary degenerates to EXACT
@@ -409,7 +409,7 @@ def _stream_heavy_hitters_exact(spark, sf_dir):
             FROM p WHERE purchase_ts IS NOT NULL""")
 def _stream_funnel_exact(spark, sf_dir):
     """Streaming funnel run END-TO-END inside the query
-    (streaming/sequences.py::streaming_funnel, the sharded path):
+    (streaming/sequences.py::streaming_funnel, key-group state):
     step-typed events replay through TestStream in one data wave (the
     watermark is 0 during it, so nothing is late) plus a tail that
     seals every buffered chain.  Matching is event-time-ordered with
@@ -638,9 +638,9 @@ def _stream_session_exact(spark, sf_dir):
             FROM sessions GROUP BY u, sid""")
 def _stream_session_strict_exact(spark, sf_dir):
     """STRICT-GAP streaming sessions run END-TO-END inside the query —
-    streaming_sessions_strict (streaming/stateful.py: per-key open-
-    session state via applyInPandasWithState + EventTimeTimeout, the
-    r11 Beam-parity operator) over a TestStream replay of the real
+    streaming_sessions_strict (streaming/stateful.py: each user's open
+    sessions in key-group state via applyInPandasWithState +
+    EventTimeTimeout, the r11 Beam-parity operator) over a TestStream replay of the real
     event stream (user_id < 200), one data wave plus a watermark tail
     that closes every session.  Under STRICT semantics
     (IntervalWindow.isDisjoint: end == start stays disjoint) a session
@@ -1223,7 +1223,7 @@ def _stream_window_late_exact(spark, sf_dir):
             FROM r WHERE seq <= 2""")
 def _stream_rate_limit_exact(spark, sf_dir):
     """Streaming per-key rate limiting run END-TO-END inside the query
-    (streaming/stateful.py::streaming_rate_limit, the sharded
+    (streaming/stateful.py::streaming_rate_limit, the key-group
     applyInPandasWithState token bucket): the real event stream
     (user_id < 300) replays through TestStream in one data wave;
     admission within a batch is (event-time, event_id)-ordered per

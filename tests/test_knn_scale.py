@@ -299,8 +299,6 @@ def test_pair_cosine_bitwise_matches_hof(spark):
         a = rng.standard_normal(64).astype(np.float32).tolist()
         b = rng.standard_normal(64).astype(np.float32).tolist()
         rows.append((i, a, b))
-    # (no zero-vector row: under ANSI the HOF errors on 0/0 — see the
-    # pair_cosine docstring; no query computes cosine of a zero vector)
     df = spark.createDataFrame(
         rows, "pid long, va array<float>, vb array<float>")
 
@@ -321,12 +319,14 @@ def test_pair_cosine_bitwise_matches_hof(spark):
 
 def test_pair_cosine_corner_rows(spark):
     """The fallback/masking contract, pinned row by row (see the
-    pair_cosine docstring): null array -> null, ragged -> null, and a
+    pair_cosine docstring): null array -> null, ragged -> null, a
     NaN or null ELEMENT -> null sim (ADVICE r13: Arrow delivers null
     elements as NaN; unmasked they became NaN sims that sort ABOVE
     every real double under sim.desc(), promoting corrupt vectors
-    into top-k).  The HOF masks NaN quotients the same way, so both
-    element rows MATCH it."""
+    into top-k), and a zero vector -> null.  The HOF masks NaN
+    quotients and divides with try_divide, so the element rows and
+    the zero-vector row MATCH it (under ANSI a plain divide raised
+    DIVIDE_BY_ZERO on the zero vector)."""
     from apache_beam_spark.functions.vectors import cosine
     from apache_beam_spark.similarity.knn import pair_cosine
 
@@ -336,6 +336,7 @@ def test_pair_cosine_corner_rows(spark):
         (903, [float("nan"), 1.0], [1.0, 1.0]),      # NaN element
         (904, [None, 1.0], [1.0, 1.0]),              # null element
         (905, [1.0, 2.0], [2.0, 4.0]),               # clean control
+        (906, [0.0, 0.0], [1.0, 2.0]),               # zero vector
     ]
     df = spark.createDataFrame(
         rows, "pid long, va array<double>, vb array<double>")
@@ -344,11 +345,14 @@ def test_pair_cosine_corner_rows(spark):
     assert vec[901] is None and vec[902] is None
     assert vec[903] is None and vec[904] is None
     assert vec[905] is not None and abs(vec[905] - 1.0) < 1e-12
-    # the HOF agrees on both element rows: null, never NaN
-    hof = {r["pid"]: r["sim"] for r in df.filter("pid in (903, 904, 905)")
+    assert vec[906] is None
+    # the HOF agrees on both element rows and the zero vector: null,
+    # never NaN or an error
+    hof = {r["pid"]: r["sim"] for r in
+           df.filter("pid in (903, 904, 905, 906)")
            .select("pid", cosine(F.col("va"), F.col("vb")).alias("sim"))
            .collect()}
-    assert hof[903] is None and hof[904] is None
+    assert hof[903] is None and hof[904] is None and hof[906] is None
     assert hof[905] == vec[905]
     # a NaN-ELEMENT row must also mask when it rides the per-row
     # fallback (batched with a ragged row) — same mask, both paths

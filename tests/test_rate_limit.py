@@ -84,21 +84,27 @@ def test_streaming_quota_spans_micro_batches(spark, tmp_path):
 
 
 def test_sharded_matches_unsharded(spark, tmp_path):
-    """n_shards (key-group multiplexing) must not change results."""
-    ts = TestStream(str(tmp_path / "rls"))
+    """The key-group count changes no admitted row: one group (every
+    key in one state blob), three, and the default agree with each
+    other and with the batch twin, across a micro-batch boundary."""
     rows = _rows()
-    ts.add_elements(rows[:4])
-    ts.add_elements(rows[4:])
 
-    def run(shards, d):
-        t = TestStream(str(tmp_path / d))
+    def run(shards):
+        t = TestStream(str(tmp_path / f"rls_{shards}"))
         t.add_elements(rows[:4])
         t.add_elements(rows[4:])
+        kw = {} if shards is None else {"n_shards": shards}
         sdf = streaming_rate_limit(t.stream(spark, SCHEMA), key="user",
                                    event_time="ts", id_col="event_id",
                                    window_ms=60_000, max_per_window=3,
-                                   n_shards=shards)
+                                   **kw)
         return sorted((r["user"], r["event_id"], r["win_start_ms"],
                        r["seq"]) for r in run_to_memory(sdf).collect())
 
-    assert run(4, "a") == run(0, "b")
+    batch = sorted(
+        (r["user"], r["event_id"], r["win_start_ms"], r["seq"])
+        for r in rate_limit_batch(
+            _batch_df(spark), key="user", event_time="ts",
+            id_col="event_id", window_ms=60_000,
+            max_per_window=3).collect())
+    assert run(1) == run(3) == run(None) == batch

@@ -142,6 +142,13 @@ def test_sharded_matches_unsharded(spark):
             _ev(8, 3, 0, "view"), _ev(9, 3, 10, "view"),
             _ev(10, 3, 15, "click"), _ev(11, 3, 20, "purchase"),
             _ev(12, 4, 0, "view"), _ev(13, 4, 29, "purchase")]
-    plain = _stream_rows(spark, [rows])
-    shard = _stream_rows(spark, [rows], n_shards=2)
-    assert plain == shard and len(plain) > 0
+    # across micro-batches (a day of lateness keeps batch 2's earlier
+    # rows on time) plus watermark-advancing tails; one group (every
+    # user in one state blob), three, and the default agree
+    batches = [rows[:6], rows[6:], [_ev(98, 9, 3000, "view")],
+               [_ev(99, 9, 3001, "view")]]
+    day = 24 * 60 * 60_000
+    one = _stream_rows(spark, batches, lateness_ms=day, n_shards=1)
+    three = _stream_rows(spark, batches, lateness_ms=day, n_shards=3)
+    default = _stream_rows(spark, batches, lateness_ms=day)
+    assert one == three == default and len(one) > 0

@@ -65,6 +65,8 @@ def test_sharded_matches_unsharded(spark):
             + [_ev(11, "a")] * 2 + [_ev(12, "d")] * 4
             + [_ev(21, "e")] * 6)
     batches = [rows[:6], rows[6:], [_ev(600, "zz")], [_ev(601, "zz")]]
-    plain = _run(spark, batches, capacity=50, min_count=2)
-    shard = _run(spark, batches, capacity=50, min_count=2, n_shards=2)
-    assert plain == shard and len(plain) > 0
+    # one group (every window in one state blob), three, the default
+    one = _run(spark, batches, capacity=50, min_count=2, n_shards=1)
+    three = _run(spark, batches, capacity=50, min_count=2, n_shards=3)
+    default = _run(spark, batches, capacity=50, min_count=2)
+    assert one == three == default and len(one) == 5

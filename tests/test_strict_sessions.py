@@ -120,24 +120,25 @@ def test_streaming_matches_batch_strict(spark):
     assert [(u, n) for u, _, n in batch] == [
         ("a", 1), ("a", 1), ("b", 2), ("c", 1), ("c", 2)]
 
-    # key-group sharding (the bench-gate configuration) is results-
-    # identical: per-user session lists live independently inside the
-    # shard blob
-    ts2 = TestStream(tempfile.mkdtemp(prefix="t_strictsess_sh_"))
-    ts2.add_elements(rows)
-    ts2.add_elements(tail)
-    src2 = (ts2.stream(spark, "user_id string, tus bigint")
-            .select("user_id", F.timestamp_micros("tus").alias("ts")))
-    sdf2 = streaming_sessions_strict(src2, "user_id", "ts",
-                                     gap_ms=GAP_US // 1000, n_shards=2)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        out2 = run_to_memory(sdf2)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    got2 = sorted((r["user_id"], r["session_start_ms"], r["n_events"])
-                  for r in out2.collect())
-    assert got2 == expect
+    # the key-group count changes no session: one group (every user in
+    # one state blob) and three agree with the default run above
+    for shards in (1, 3):
+        ts2 = TestStream(tempfile.mkdtemp(prefix=f"t_strictsess_{shards}_"))
+        ts2.add_elements(rows)
+        ts2.add_elements(tail)
+        src2 = (ts2.stream(spark, "user_id string, tus bigint")
+                .select("user_id", F.timestamp_micros("tus").alias("ts")))
+        sdf2 = streaming_sessions_strict(src2, "user_id", "ts",
+                                         gap_ms=GAP_US // 1000,
+                                         n_shards=shards)
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        try:
+            out2 = run_to_memory(sdf2)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        got2 = sorted((r["user_id"], r["session_start_ms"], r["n_events"])
+                      for r in out2.collect())
+        assert got2 == expect, shards
 
 
 def test_sub_second_gap_keeps_watermark_delay(spark):

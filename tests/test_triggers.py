@@ -37,9 +37,9 @@ def test_early_firings_update_mode(spark, tmp_path):
 
 
 def test_count_trigger_sharded_equals_unsharded(spark, tmp_path):
-    """n_shards key-grouping (the bench throughput shape) must emit
-    byte-identical panes to the per-key state layout, across keys,
-    batch boundaries, and both accumulation modes."""
+    """The key-group count changes no pane: one group (every key in
+    one state blob), three, and the default emit identical panes
+    across keys, batch boundaries, and both accumulation modes."""
     batches = [
         _rows(("a", "2024-01-01 00:00:01", 1.0), ("b", "2024-01-01 00:00:01", 10.0),
               ("a", "2024-01-01 00:00:02", 2.0)),
@@ -49,17 +49,19 @@ def test_count_trigger_sharded_equals_unsharded(spark, tmp_path):
     ]
     for accumulating in (True, False):
         results = []
-        for shards in (0, 4):
+        for shards in (1, 3, None):
             spool = str(tmp_path / f"sp_{accumulating}_{shards}")
             ts = TestStream(spool)
             for b in batches:
                 ts.add_elements(b)
+            kw = {} if shards is None else {"n_shards": shards}
             out = count_trigger_aggregate(
                 ts.stream(spark, SCHEMA), key="user", value_col="amount",
-                fire_every=2, accumulating=accumulating, n_shards=shards)
+                fire_every=2, accumulating=accumulating, **kw)
             got = run_to_memory(out, "append").toPandas()
             results.append(sorted(map(tuple, got.itertuples(index=False))))
-        assert results[0] == results[1] and len(results[0]) == 3
+        assert results[0] == results[1] == results[2]
+        assert len(results[0]) == 3
 
 
 def test_count_trigger_discarding_vs_accumulating(spark, tmp_path):
