@@ -47,18 +47,18 @@ def _source(spark):
     return ts.stream(spark, SCHEMA)
 
 
-@pytest.mark.parametrize("op", sorted(OPERATORS))
-def test_one_grouped_state_operator_by_key_group(spark, op):
-    sdf = OPERATORS[op](_source(spark))
-    nodes = [n for n in _subtrees(sdf._jdf.queryExecution().analyzed())
-             if n.nodeName() == "FlatMapGroupsInPandasWithState"]
-    assert len(nodes) == 1
-    grouping = nodes[0].groupingAttributes()
-    assert grouping.size() == 1
-    assert grouping.apply(0).name() == _KEY_GROUP_COL
+def test_one_grouped_state_operator_by_key_group(spark):
+    for op, build in OPERATORS.items():
+        sdf = build(_source(spark))
+        nodes = [n for n in _subtrees(sdf._jdf.queryExecution().analyzed())
+                 if n.nodeName() == "FlatMapGroupsInPandasWithState"]
+        assert len(nodes) == 1, op
+        grouping = nodes[0].groupingAttributes()
+        assert grouping.size() == 1, op
+        assert grouping.apply(0).name() == _KEY_GROUP_COL, op
 
 
-@pytest.mark.parametrize("op", sorted(OPERATORS))
-def test_zero_key_groups_rejected(spark, op):
-    with pytest.raises(ValueError, match="n_shards"):
-        OPERATORS[op](_source(spark), n_shards=0)
+def test_zero_key_groups_rejected(spark):
+    for op, build in OPERATORS.items():
+        with pytest.raises(ValueError, match="n_shards"):
+            build(_source(spark), n_shards=0)
