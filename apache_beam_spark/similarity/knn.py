@@ -198,6 +198,49 @@ def _choose_broadcast_side(corpus: DataFrame, max_broadcast_bytes: int) -> str:
             else "queries")
 
 
+def _unit_rows(vecs):
+    """float64 matrix of ``vecs`` scaled to unit rows.  A null vector
+    becomes a NaN row, as does a zero vector (0 / 0), so every sim it
+    takes part in is NaN (null once Arrow carries it).  A side whose
+    vectors are all null has width 0."""
+    import numpy as np
+
+    vecs = list(vecs)
+    dim = next((len(v) for v in vecs if v is not None), 0)
+    mat = np.array([[np.nan] * dim if v is None else v for v in vecs],
+                   dtype=np.float64).reshape(len(vecs), dim)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return mat / np.linalg.norm(mat, axis=1, keepdims=True)
+
+
+def _cosines(a, b):
+    """Cosine matrix of two ``_unit_rows`` matrices; all NaN when either
+    side is all null."""
+    import numpy as np
+
+    if not a.shape[1] or not b.shape[1]:
+        return np.full((len(a), len(b)), np.nan)
+    return a @ b.T
+
+
+def _top_idx(s, ids, cand, k: int):
+    """Indices of the ``k`` best candidates ``cand`` by sim ``s``: the
+    highest real sims, then — if fewer than ``k`` are real — the NaN
+    ones with the smallest ids, the reference's ``sim desc nulls last,
+    neighbor_id`` order."""
+    import numpy as np
+
+    nan = np.isnan(s[cand])
+    real = cand[~nan]
+    take = min(k, len(real))
+    top = real[np.argpartition(-s[real], take - 1)[:take]] if take else real
+    if take < k:
+        rest = cand[nan]
+        rest = rest[np.argsort(ids[rest], kind="stable")[:k - take]]
+        top = np.concatenate([top, rest])
+    return top
+
+
 def brute_force_topk_blas(queries: DataFrame, corpus: DataFrame, k: int = 5,
                           query_id: str = "vec_id", corpus_id: str = "vec_id",
                           vec_col: str = "embedding",
@@ -226,6 +269,9 @@ def brute_force_topk_blas(queries: DataFrame, corpus: DataFrame, k: int = 5,
       (any global top-k member is in its own partition's top-k, so the
       merge is lossless).  The corpus is never collected anywhere: this
       is the 100 TB path, where only the query side must be small.
+
+    A null, NaN or zero vector gets null sims, ranked after every real
+    sim by neighbor id, as in ``brute_force_topk``.
     """
     import numpy as np
 
@@ -234,8 +280,7 @@ def brute_force_topk_blas(queries: DataFrame, corpus: DataFrame, k: int = 5,
     def _densify(df: DataFrame, idc: str):
         rows = df.select(F.col(idc).alias("id"), F.col(vec_col).alias("v")).collect()
         ids = np.array([r["id"] for r in rows], dtype=np.int64)
-        mat = np.array([r["v"] for r in rows], dtype=np.float64)
-        return ids, mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        return ids, _unit_rows(r["v"] for r in rows)
 
     out_schema = "query_id bigint, neighbor_id bigint, sim double, rank int"
 
@@ -250,17 +295,14 @@ def brute_force_topk_blas(queries: DataFrame, corpus: DataFrame, k: int = 5,
             for pdf in batches:
                 if not len(pdf):
                     continue
-                q = np.array(list(pdf["__qv__"]), dtype=np.float64)
-                qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-                sims = qn @ mat_n.T                  # one gemm per batch
+                # one gemm per batch
+                sims = _cosines(_unit_rows(pdf["__qv__"]), mat_n)
                 out_q, out_n, out_s, out_r = [], [], [], []
                 for qi, qid in enumerate(pdf["query_id"]):
                     s = sims[qi]
                     mask = ids != qid if self_exclude else np.ones(len(ids), bool)
-                    cand = np.nonzero(mask)[0]
                     # bounded selection, then exact (sim desc, id asc) order
-                    take = min(k, len(cand))
-                    top = cand[np.argpartition(-s[cand], take - 1)[:take]]
+                    top = _top_idx(s, ids, np.nonzero(mask)[0], k)
                     order = np.lexsort((ids[top], -s[top]))
                     for r, j in enumerate(top[order], start=1):
                         out_q.append(qid); out_n.append(ids[j])
@@ -285,18 +327,12 @@ def brute_force_topk_blas(queries: DataFrame, corpus: DataFrame, k: int = 5,
             if not len(pdf):
                 continue
             cids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            c = np.array(list(pdf["__cv__"]), dtype=np.float64)
-            cn = c / np.linalg.norm(c, axis=1, keepdims=True)
-            sims = qn @ cn.T                          # Q x C_batch
+            sims = _cosines(qn, _unit_rows(pdf["__cv__"]))   # Q x C_batch
             out_q, out_n, out_s = [], [], []
             for qi, qid in enumerate(qids):
                 s = sims[qi]
                 mask = cids != qid if self_exclude else np.ones(len(cids), bool)
-                cand = np.nonzero(mask)[0]
-                if not len(cand):
-                    continue
-                take = min(k, len(cand))
-                top = cand[np.argpartition(-s[cand], take - 1)[:take]]
+                top = _top_idx(s, cids, np.nonzero(mask)[0], k)
                 out_q.extend([qid] * len(top))
                 out_n.extend(cids[top]); out_s.extend(s[top])
             yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n,

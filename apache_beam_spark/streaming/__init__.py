@@ -8,17 +8,17 @@ executed by runner watermark machinery
 is Spark Structured Streaming: ``readStream`` sources, ``withWatermark``
 for allowed lateness, ``window()``/``session_window()`` aggregation in
 append/update mode, ``applyInPandasWithState`` for user state + timers.
+A bounded run (a ``TestStream`` replay, a capped source) drains through
+``read_bounded``: a memory sink under the availableNow trigger.
 """
 
 from apache_beam_spark.streaming.sources import (
     TestStream,
     file_stream,
     rate_stream,
+    read_bounded,
 )
-from apache_beam_spark.streaming.windowed import (
-    run_to_memory,
-    windowed_aggregate,
-)
+from apache_beam_spark.streaming.windowed import windowed_aggregate
 from apache_beam_spark.streaming.heavy import streaming_heavy_hitters
 from apache_beam_spark.streaming.sequences import streaming_funnel
 from apache_beam_spark.streaming.stateful import (
@@ -55,8 +55,8 @@ from apache_beam_spark.streaming.triggers import (
 )
 
 __all__ = [
-    "TestStream", "file_stream", "rate_stream",
-    "windowed_aggregate", "run_to_memory",
+    "TestStream", "file_stream", "rate_stream", "read_bounded",
+    "windowed_aggregate",
     "stateful_per_key", "group_into_batches_stream", "streaming_distinct",
     "streaming_minhash_dedup",
     "streaming_funnel", "streaming_heavy_hitters",

@@ -150,14 +150,19 @@ def decode_kafka(df: DataFrame, value_schema=None,
     return out
 
 
-def read_bounded(sdf: "DataFrame", output_mode: str = "append",
-                 max_files_per_batch: Optional[int] = None) -> "DataFrame":
+def read_bounded(sdf: "DataFrame", output_mode: str = "append") -> "DataFrame":
     """BoundedReadFromUnboundedSource (reference
     ``io/BoundedReadFromUnboundedSource.java`` — cap an unbounded source
-    and treat it as bounded): run the stream with
+    and treat it as bounded): run the stream into a memory sink with
     ``trigger(availableNow=True)`` — process everything currently
-    available (rate-limited by ``max_files_per_batch``), then stop — and
-    return the materialized result."""
+    available, then stop — and return the materialized result.
+
+    The one bounded drain, and the test-harness twin of the reference's
+    ``TestPipeline.run().waitUntilFinish()``.  availableNow honours the
+    source's rate limit, so a ``TestStream`` spool (``maxFilesPerTrigger=1``)
+    still runs one micro-batch per spooled file and the watermark
+    advances between them.  The memory sink keeps the rows in the
+    driver, so the result outlives the source files."""
     import uuid as _uuid
 
     name = f"bounded_{_uuid.uuid4().hex[:12]}"

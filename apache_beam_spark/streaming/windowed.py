@@ -19,7 +19,6 @@ Reference semantics being reproduced:
 
 from __future__ import annotations
 
-import uuid
 from typing import Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
@@ -71,26 +70,6 @@ def windowed_aggregate(
 
         out = out.withColumn(OUTPUT_TS_COL, F.col("window.end"))
     return out
-
-
-def run_to_memory(sdf: DataFrame, output_mode: str = "append",
-                  name: Optional[str] = None) -> DataFrame:
-    """Execute a streaming DataFrame to completion against currently
-    available data and return the materialized result.
-
-    The test-harness twin of the reference's
-    ``TestPipeline.run().waitUntilFinish()``: memory sink, process every
-    spooled micro-batch (honoring maxFilesPerTrigger sequencing), stop.
-    """
-    name = name or f"mem_{uuid.uuid4().hex[:12]}"
-    q = (sdf.writeStream.format("memory").queryName(name)
-         .outputMode(output_mode).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    return sdf.sparkSession.table(name)
 
 
 def with_late_data_counter(df: DataFrame, name: str = "input_rows") -> DataFrame:

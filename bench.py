@@ -472,11 +472,15 @@ def _run_stream(sdf, output_mode: str = "append") -> tuple:
     """Start -> processAllAvailable -> stop; returns (wall seconds,
     {rows, bytes} of the state stores at the FINAL micro-batch — the
     post-watermark-eviction steady state, since processAllAvailable
-    runs the extra no-data batch a watermark advance triggers)."""
+    runs the extra no-data batch a watermark advance triggers).  The
+    checkpoint directory is removed after the stop, outside the timed
+    region."""
+    import shutil
     import tempfile
 
+    ckpt = tempfile.mkdtemp(prefix="bench_ckpt_")
     q = (sdf.writeStream.format("noop")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="bench_ckpt_"))
+         .option("checkpointLocation", ckpt)
          .outputMode(output_mode).start())
     t0 = time.time()
     q.processAllAvailable()
@@ -487,6 +491,7 @@ def _run_stream(sdf, output_mode: str = "append") -> tuple:
              "bytes": sum(so.get("memoryUsedBytes", 0)
                           for so in prog.get("stateOperators", []))}
     q.stop()
+    shutil.rmtree(ckpt, ignore_errors=True)
     return wall, state
 
 
@@ -496,6 +501,7 @@ def _streaming_benchmarks(spark) -> dict:
     stream through (1) a watermarked fixed-window count, (2) a
     stream-stream time-range join, (3) a stateful
     applyInPandasWithState count-trigger operator."""
+    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
@@ -755,6 +761,8 @@ def _streaming_benchmarks(spark) -> dict:
                   f"{os.getloadavg()[0]:.1f}", file=sys.stderr)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", "32")
+        for spool in (replay_spool, docs_spool):
+            shutil.rmtree(spool, ignore_errors=True)
 
     # ---- bounded-state evidence (VERDICT r9 item 4).  The nine gates
     # prove throughput; these rows prove the watermark-eviction

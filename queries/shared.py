@@ -1,15 +1,21 @@
 """Helpers shared by the query families: the bucket telemetry of the
 banded miners, the exact-DECIMAL sum/avg helpers and their SQL twins,
-the corpus-prep stages, the planted-embeddings corpus, and the SQL
-fragments the oracles share.
+the corpus-prep stages, the planted-embeddings corpus, the TestStream
+replay of the streaming exact queries, and the SQL fragments the
+oracles share.
 """
 
 from __future__ import annotations
+
+import shutil
+import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from apache_beam_spark.sources.tables import load_table
+from apache_beam_spark.streaming.sources import TestStream, read_bounded
 from apache_beam_spark.functions import text as T
 from apache_beam_spark.dedup.ngram import ngram_jaccard_pairs
 
@@ -136,6 +142,41 @@ def _planted_embeddings(spark, sf_dir):
 
     return cache_scoped(emb.unionByName(planted)
                         .filter(F.col("vec_id") % 2 == 0))
+
+
+#: state partitions of every TestStream replay.  A stateful query fixes
+#: its partition count at its first run; under the session default (200)
+#: each micro-batch of a ~10k-row replay would pay 200 state-store commits.
+REPLAY_PARTITIONS = 8
+
+
+@contextmanager
+def replay_stream(spark, waves, schema: str):
+    """Spool ``waves`` (lists of row dicts, one micro-batch each, in
+    order) into a temporary TestStream and yield its stream, with
+    state partitions set to ``REPLAY_PARTITIONS``.  On exit the old
+    setting comes back and the spool is removed."""
+    spool = tempfile.mkdtemp(prefix="entry_replay_")
+    ts = TestStream(spool)
+    for rows in waves:
+        ts.add_elements(rows)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(REPLAY_PARTITIONS))
+    try:
+        yield ts.stream(spark, schema)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(spool, ignore_errors=True)
+
+
+def replay(spark, waves, schema: str, build):
+    """The streaming exact queries' TestStream harness: replay
+    ``waves`` through the operator ``build(stream)`` returns and drain
+    it with ``read_bounded`` (one micro-batch per wave).  The memory
+    sink holds the rows in the driver, so the returned frame does not
+    need the removed spool."""
+    with replay_stream(spark, waves, schema) as sdf:
+        return read_bounded(build(sdf))
 
 
 # apostrophe doubled for embedding in SQL single-quoted literals

@@ -15,7 +15,8 @@ from apache_beam_spark.windowing import (
 )
 
 from queries import query
-from queries.shared import _dsum, shingle_expr, _sql_dsum, toks
+from queries.shared import (_dsum, replay, replay_stream, shingle_expr,
+                            _sql_dsum, toks)
 
 
 @query(headline=True, oracle=f"""
@@ -269,12 +270,8 @@ def _stream_minhash_dedup(spark, sf_dir):
     near-dups lose the buckets they still share — both the Spark
     stream and the oracle compute which, with no probabilistic
     assumptions."""
-    import tempfile
-
     from apache_beam_spark.dedup.minhash import (_band_rows_md5,
                                                  minhash_signature_md5)
-    from apache_beam_spark.streaming.sources import (TestStream,
-                                                     read_bounded)
     from apache_beam_spark.streaming.stateful import streaming_minhash_dedup
 
     d40 = (load_table(spark, "documents", sf_dir)
@@ -294,30 +291,20 @@ def _stream_minhash_dedup(spark, sf_dir):
             .select("doc_id", "text").orderBy("doc_id").collect()]
     m = 60_000_000  # one minute in µs (TestStream ts convention)
     t0 = 24 * 60 * m
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_sminhash_"))
-    ts.add_elements([{"doc_id": i, "ts": t0, "text": t}
-                     for i, t in base])
-    ts.add_elements([{"doc_id": i + 10000, "ts": t0 + m,
-                      "text": t + " zzz"} for i, t in base])
-    ts.add_elements([{"doc_id": i + 20000, "ts": t0 + 2 * m, "text": t}
-                     for i, t in base])
-    ts.add_elements([{"doc_id": 90000, "ts": t0 + 60 * m,
-                      "text": "watermark tail alpha"}])
-    ts.add_elements([{"doc_id": 90001, "ts": t0 + 120 * m,
-                      "text": "watermark tail omega"}])
-    sdf = streaming_minhash_dedup(
-        ts.stream(spark, "doc_id bigint, ts bigint, text string"),
-        within="10 minutes", num_hashes=64, num_bands=16, shingle_k=3,
-        hash_fn="md5")
-    # state partitions are fixed at the query's FIRST run; under the
-    # driver's default 200 the five micro-batches pay 200 state-store
-    # commits each for ~120 docs — scope it down for the replay
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = read_bounded(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    waves = [
+        [{"doc_id": i, "ts": t0, "text": t} for i, t in base],
+        [{"doc_id": i + 10000, "ts": t0 + m, "text": t + " zzz"}
+         for i, t in base],
+        [{"doc_id": i + 20000, "ts": t0 + 2 * m, "text": t}
+         for i, t in base],
+        [{"doc_id": 90000, "ts": t0 + 60 * m,
+          "text": "watermark tail alpha"}],
+        [{"doc_id": 90001, "ts": t0 + 120 * m,
+          "text": "watermark tail omega"}]]
+    out = replay(spark, waves, "doc_id bigint, ts bigint, text string",
+                 lambda src: streaming_minhash_dedup(
+                     src, within="10 minutes", num_hashes=64, num_bands=16,
+                     shingle_k=3, hash_fn="md5"))
     return out.filter(F.col("doc_id") < 90000).select("doc_id")
 
 
@@ -346,11 +333,7 @@ def _stream_heavy_hitters_exact(spark, sf_dir):
     deterministic regardless of partition order — the second REAL
     streaming query under the value-oracle gate (after
     stream_minhash_dedup)."""
-    import tempfile
-
     from apache_beam_spark.streaming.heavy import streaming_heavy_hitters
-    from apache_beam_spark.streaming.sources import (TestStream,
-                                                     read_bounded)
 
     # ts arrives as TIMESTAMP_NTZ (load_table's nanos handling):
     # unix_micros matches the oracle's epoch_us(ts::TIMESTAMP)
@@ -358,21 +341,15 @@ def _stream_heavy_hitters_exact(spark, sf_dir):
           .filter(F.col("event_id") % 5 == 0)
           .select(F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("tus"), "event_type"))
-    rows = [(int(r["tus"]), r["event_type"]) for r in ev.collect()]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_sheavy_"))
-    ts.add_elements([{"ts": t, "event_type": et} for t, et in rows])
-    tail = max(t for t, _ in rows) + 7 * 24 * 3600 * 1_000_000
-    ts.add_elements([{"ts": tail, "event_type": "zz_watermark_tail"}])
-    sdf = streaming_heavy_hitters(
-        ts.stream(spark, "ts bigint, event_type string"),
-        "event_type", window_ms=6 * 60 * 60_000, capacity=64,
-        min_count=5, n_shards=4)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = read_bounded(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    rows = [{"ts": r["tus"], "event_type": r["event_type"]}
+            for r in ev.collect()]
+    tail = max(r["ts"] for r in rows) + 7 * 24 * 3600 * 1_000_000
+    out = replay(spark, [rows, [{"ts": tail,
+                                 "event_type": "zz_watermark_tail"}]],
+                 "ts bigint, event_type string",
+                 lambda src: streaming_heavy_hitters(
+                     src, "event_type", window_ms=6 * 60 * 60_000,
+                     capacity=64, min_count=5, n_shards=4))
     return out.select("window_start", "item", "approx_count")
 
 
@@ -418,11 +395,7 @@ def _stream_funnel_exact(spark, sf_dir):
     so the completed chains answer to the same SQL as the batch
     funnel (view -> earliest click within 1 day -> earliest purchase
     within 1 day), value-oracled with epoch-microsecond outputs."""
-    import tempfile
-
     from apache_beam_spark.streaming import streaming_funnel
-    from apache_beam_spark.streaming.sources import (TestStream,
-                                                     read_bounded)
 
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("event_type").isin("view", "click", "purchase")
@@ -431,22 +404,14 @@ def _stream_funnel_exact(spark, sf_dir):
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("ts"), "event_type"))
     rows = [r.asDict() for r in ev.collect()]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_sfunnel_"))
-    ts.add_elements(rows)
     tail = max(r["ts"] for r in rows) + 30 * 24 * 3600 * 1_000_000
-    ts.add_elements([{"event_id": 900000001, "user_id": 999999,
-                      "ts": tail, "event_type": "view"}])
-    sdf = streaming_funnel(
-        ts.stream(spark, "event_id bigint, user_id bigint, ts bigint,"
-                         " event_type string"),
-        ["view", "click", "purchase"], within_ms=24 * 60 * 60_000,
-        n_shards=8)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = read_bounded(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = replay(spark, [rows, [{"event_id": 900000001, "user_id": 999999,
+                                 "ts": tail, "event_type": "view"}]],
+                 "event_id bigint, user_id bigint, ts bigint,"
+                 " event_type string",
+                 lambda src: streaming_funnel(
+                     src, ["view", "click", "purchase"],
+                     within_ms=24 * 60 * 60_000, n_shards=8))
     return (out.filter(F.col("user_id") < 200)
             .select("user_id", "view_ts", "click_ts", "purchase_ts"))
 
@@ -494,38 +459,26 @@ def _stream_session_dynamic_exact(spark, sf_dir):
     value-oracle entry, proving the dynamic-gap capability holds on
     unbounded input (the reference's Sessions is constant-gap —
     capability upgrade, not parity debt)."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import (TestStream,
-                                                     read_bounded)
-
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 200)
           .select("user_id", "event_type",
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("tus")))
     rows = [r.asDict() for r in ev.collect()]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_ssessdyn_"))
-    ts.add_elements(rows)
     tail = max(r["tus"] for r in rows) + 30 * 24 * 3600 * 1_000_000
-    ts.add_elements([{"user_id": 999999, "event_type": "zz_tail",
-                      "tus": tail}])
     gap = (F.when(F.col("event_type") == "purchase", F.lit("30 minutes"))
            .when(F.col("event_type") == "view", F.lit("5 minutes"))
            .otherwise(F.lit("10 minutes")))
-    sdf = (ts.stream(spark, "user_id bigint, event_type string, tus bigint")
-           .select("user_id", "event_type",
-                   F.timestamp_micros("tus").alias("ts"))
-           .withWatermark("ts", "10 minutes")
-           .groupBy("user_id",
-                    F.session_window("ts", gap).alias("session_window"))
-           .agg(F.count(F.lit(1)).alias("n_events")))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = read_bounded(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = replay(spark, [rows, [{"user_id": 999999, "event_type": "zz_tail",
+                                 "tus": tail}]],
+                 "user_id bigint, event_type string, tus bigint",
+                 lambda src: src
+                 .select("user_id", "event_type",
+                         F.timestamp_micros("tus").alias("ts"))
+                 .withWatermark("ts", "10 minutes")
+                 .groupBy("user_id", F.session_window("ts", gap)
+                          .alias("session_window"))
+                 .agg(F.count(F.lit(1)).alias("n_events")))
     return (out.filter(F.col("user_id") != 999999)
             .select("user_id",
                     F.col("session_window.start").alias("session_start"),
@@ -579,37 +532,36 @@ def _stream_session_exact(spark, sf_dir):
     IntervalWindow.isDisjoint keeps them separate — this query, its
     batch twin, and the oracle's strict '>' all follow the Spark
     convention."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import (TestStream,
-                                                     read_bounded)
-
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 200)
           .select("user_id",
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("tus")))
     rows = [r.asDict() for r in ev.collect()]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_ssession_"))
-    ts.add_elements(rows)
     tail = max(r["tus"] for r in rows) + 30 * 24 * 3600 * 1_000_000
-    ts.add_elements([{"user_id": 999999, "tus": tail}])
-    sdf = (ts.stream(spark, "user_id bigint, tus bigint")
-           .select("user_id", F.timestamp_micros("tus").alias("ts"))
-           .withWatermark("ts", "10 minutes")
-           .groupBy("user_id", F.session_window("ts", "10 minutes"))
-           .agg(F.count(F.lit(1)).alias("n_events")))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = read_bounded(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = replay(spark, [rows, [{"user_id": 999999, "tus": tail}]],
+                 "user_id bigint, tus bigint",
+                 lambda src: src
+                 .select("user_id", F.timestamp_micros("tus").alias("ts"))
+                 .withWatermark("ts", "10 minutes")
+                 .groupBy("user_id", F.session_window("ts", "10 minutes"))
+                 .agg(F.count(F.lit(1)).alias("n_events")))
     return (out.filter(F.col("user_id") < 200)
             .select("user_id",
                     F.col("session_window.start").alias("session_start"),
                     F.col("session_window.end").alias("session_end"),
                     "n_events"))
+
+
+def _strict_sessions_10min(src):
+    """10-minute strict-gap sessions per user over a (user_id, tus)
+    replay stream."""
+    from apache_beam_spark.streaming.stateful import (
+        streaming_sessions_strict)
+
+    return streaming_sessions_strict(
+        src.select("user_id", F.timestamp_micros("tus").alias("ts")),
+        "user_id", "ts", gap_ms=10 * 60_000)
 
 
 @query(oracle="""
@@ -652,33 +604,15 @@ def _stream_session_strict_exact(spark, sf_dir):
     batch/stream parity pinned in tests/test_strict_sessions.py).
     The tail user's own session never closes (nothing advances the
     watermark past it) and is additionally filtered out."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import TestStream
-    from apache_beam_spark.streaming.stateful import (
-        streaming_sessions_strict)
-    from apache_beam_spark.streaming.windowed import run_to_memory
-
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 200)
           .select("user_id",
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("tus")))
     rows = [r.asDict() for r in ev.collect()]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_sstrictsess_"))
-    ts.add_elements(rows)
     tail = max(r["tus"] for r in rows) + 30 * 24 * 3600 * 1_000_000
-    ts.add_elements([{"user_id": 999999, "tus": tail}])
-    sdf = streaming_sessions_strict(
-        ts.stream(spark, "user_id bigint, tus bigint")
-        .select("user_id", F.timestamp_micros("tus").alias("ts")),
-        "user_id", "ts", gap_ms=10 * 60_000)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_to_memory(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = replay(spark, [rows, [{"user_id": 999999, "tus": tail}]],
+                 "user_id bigint, tus bigint", _strict_sessions_10min)
     return (out.filter(F.col("user_id") != "999999")
             .select("user_id", "session_start_ms", "session_end_ms",
                     "n_events"))
@@ -727,15 +661,8 @@ def _stream_session_late_exact(spark, sf_dir):
     past its end, so the EventTimeTimeout fires on the next no-data
     batch) adds rows the count check catches.  The emitted set is
     therefore exactly the strict-gap gaps-and-islands sessions of the
-    wave-1 rows.  Run sequenced (run_to_memory, one spooled file per
-    micro-batch) so the watermark genuinely advances BETWEEN waves."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import TestStream
-    from apache_beam_spark.streaming.stateful import (
-        streaming_sessions_strict)
-    from apache_beam_spark.streaming.windowed import run_to_memory
-
+    wave-1 rows.  The replay runs one spooled file per micro-batch, so
+    the watermark genuinely advances BETWEEN waves."""
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 200)
           .select("user_id",
@@ -744,24 +671,54 @@ def _stream_session_late_exact(spark, sf_dir):
     rows = [r.asDict() for r in ev.collect()]
     ontime = [r for r in rows if r["user_id"] % 5 != 0]
     late_only = [r for r in rows if r["user_id"] % 5 == 0]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_ssesslate_"))
-    ts.add_elements(ontime)
     tail = max(r["tus"] for r in rows) + 30 * 24 * 3600 * 1_000_000
-    ts.add_elements([{"user_id": 999999, "tus": tail}])
-    ts.add_elements(late_only + ontime)   # ALL late by now
-    sdf = streaming_sessions_strict(
-        ts.stream(spark, "user_id bigint, tus bigint")
-        .select("user_id", F.timestamp_micros("tus").alias("ts")),
-        "user_id", "ts", gap_ms=10 * 60_000)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_to_memory(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = replay(spark, [ontime, [{"user_id": 999999, "tus": tail}],
+                         late_only + ontime],   # ALL late by now
+                 "user_id bigint, tus bigint", _strict_sessions_10min)
     return (out.filter(F.col("user_id") != "999999")
             .select("user_id", "session_start_ms", "session_end_ms",
                     "n_events"))
+
+
+def _join_tail(tus, j):
+    """One watermark-tail wave of the join replays: a view and a
+    purchase of tail user 999999, which join only each other."""
+    return [{"event_id": 900000001 + 10 * j, "user_id": 999999,
+             "tus": tus, "event_type": "view"},
+            {"event_id": 900000002 + 10 * j, "user_id": 999999,
+             "tus": tus, "event_type": "purchase"}]
+
+
+def _view_purchase_join(spark, waves):
+    """Replay ``waves`` of (event_id, user_id, tus, event_type) rows
+    through the watermarked view -> purchase-within-a-day interval join
+    and return the pairs of the real users (user_id < 150)."""
+    def build(src):
+        src = src.select("event_id", "user_id",
+                         F.timestamp_micros("tus").alias("ts"), "event_type")
+        v = (src.filter(F.col("event_type") == "view")
+             .select(F.col("user_id").alias("v_user"),
+                     F.col("event_id").alias("view_id"),
+                     F.col("ts").alias("vts"))
+             .withWatermark("vts", "10 minutes"))
+        p = (src.filter(F.col("event_type") == "purchase")
+             .select(F.col("user_id").alias("p_user"),
+                     F.col("event_id").alias("purchase_id"),
+                     F.col("ts").alias("pts"))
+             .withWatermark("pts", "10 minutes"))
+        return v.join(
+            p, (F.col("v_user") == F.col("p_user"))
+            & (F.col("pts") >= F.col("vts"))
+            & (F.col("pts") <= F.col("vts") + F.expr("interval 1 day")),
+            "inner")
+
+    out = replay(spark, waves, "event_id bigint, user_id bigint,"
+                               " tus bigint, event_type string", build)
+    return (out.filter(F.col("v_user") < 150)
+            .select(F.col("v_user").alias("user_id"), "view_id",
+                    "purchase_id",
+                    F.unix_micros("vts").alias("view_us"),
+                    F.unix_micros("pts").alias("purchase_us")))
 
 
 @query(oracle="""
@@ -799,11 +756,6 @@ def _stream_join_exact(spark, sf_dir):
     and are filtered out by user_id.  Reference parity: the join-
     library CoGBK-based inner join (`sdks/java/extensions/join-library
     /.../Join.java`) on windowed unbounded inputs."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import (TestStream,
-                                                     read_bounded)
-
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 150)
           .filter(F.col("event_type").isin("view", "purchase"))
@@ -811,44 +763,8 @@ def _stream_join_exact(spark, sf_dir):
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("tus"), "event_type"))
     rows = [r.asDict() for r in ev.collect()]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_sjoin_"))
-    ts.add_elements(rows)
     tail = max(r["tus"] for r in rows) + 30 * 24 * 3600 * 1_000_000
-    ts.add_elements([
-        {"event_id": 900000001, "user_id": 999999, "tus": tail,
-         "event_type": "view"},
-        {"event_id": 900000002, "user_id": 999999, "tus": tail,
-         "event_type": "purchase"}])
-    src = (ts.stream(spark, "event_id bigint, user_id bigint,"
-                            " tus bigint, event_type string")
-           .select("event_id", "user_id",
-                   F.timestamp_micros("tus").alias("ts"), "event_type"))
-    v = (src.filter(F.col("event_type") == "view")
-         .select(F.col("user_id").alias("v_user"),
-                 F.col("event_id").alias("view_id"),
-                 F.col("ts").alias("vts"))
-         .withWatermark("vts", "10 minutes"))
-    p = (src.filter(F.col("event_type") == "purchase")
-         .select(F.col("user_id").alias("p_user"),
-                 F.col("event_id").alias("purchase_id"),
-                 F.col("ts").alias("pts"))
-         .withWatermark("pts", "10 minutes"))
-    j = v.join(
-        p, (F.col("v_user") == F.col("p_user"))
-        & (F.col("pts") >= F.col("vts"))
-        & (F.col("pts") <= F.col("vts") + F.expr("interval 1 day")),
-        "inner")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = read_bounded(j)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (out.filter(F.col("v_user") < 150)
-            .select(F.col("v_user").alias("user_id"), "view_id",
-                    "purchase_id",
-                    F.unix_micros("vts").alias("view_us"),
-                    F.unix_micros("pts").alias("purchase_us")))
+    return _view_purchase_join(spark, [rows, _join_tail(tail, 0)])
 
 
 # late-wave twin: only the on-time wave's pairs exist — one
@@ -887,14 +803,9 @@ def _stream_join_late_exact(spark, sf_dir):
     involving a wave-3 row — late view x buffered purchase, or the
     late x late pairs the re-sent wave would form with itself — would
     add rows the hash check catches.  The emitted pair set is exactly
-    the SQL range join over the on-time subset.  Run sequenced
-    (run_to_memory) so the watermark genuinely advances between
-    waves."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import TestStream
-    from apache_beam_spark.streaming.windowed import run_to_memory
-
+    the SQL range join over the on-time subset.  The replay runs one
+    spooled file per micro-batch, so the watermark genuinely advances
+    between waves."""
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 150)
           .filter(F.col("event_type").isin("view", "purchase"))
@@ -904,47 +815,25 @@ def _stream_join_late_exact(spark, sf_dir):
     rows = [r.asDict() for r in ev.collect()]
     ontime = [r for r in rows if r["user_id"] % 5 != 0]
     late_only = [r for r in rows if r["user_id"] % 5 == 0]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_sjoinlate_"))
-    ts.add_elements(ontime)
     day_us = 24 * 3600 * 1_000_000
     tail = max(r["tus"] for r in rows) + 30 * day_us
-    for j, t in enumerate((tail, tail + day_us)):
-        ts.add_elements([
-            {"event_id": 900000001 + 10 * j, "user_id": 999999,
-             "tus": t, "event_type": "view"},
-            {"event_id": 900000002 + 10 * j, "user_id": 999999,
-             "tus": t, "event_type": "purchase"}])
-    ts.add_elements(late_only + ontime)   # ALL late by now
-    src = (ts.stream(spark, "event_id bigint, user_id bigint,"
-                            " tus bigint, event_type string")
-           .select("event_id", "user_id",
-                   F.timestamp_micros("tus").alias("ts"), "event_type"))
-    v = (src.filter(F.col("event_type") == "view")
-         .select(F.col("user_id").alias("v_user"),
-                 F.col("event_id").alias("view_id"),
-                 F.col("ts").alias("vts"))
-         .withWatermark("vts", "10 minutes"))
-    p = (src.filter(F.col("event_type") == "purchase")
-         .select(F.col("user_id").alias("p_user"),
-                 F.col("event_id").alias("purchase_id"),
-                 F.col("ts").alias("pts"))
-         .withWatermark("pts", "10 minutes"))
-    j = v.join(
-        p, (F.col("v_user") == F.col("p_user"))
-        & (F.col("pts") >= F.col("vts"))
-        & (F.col("pts") <= F.col("vts") + F.expr("interval 1 day")),
-        "inner")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_to_memory(j)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (out.filter(F.col("v_user") < 150)
-            .select(F.col("v_user").alias("user_id"), "view_id",
-                    "purchase_id",
-                    F.unix_micros("vts").alias("view_us"),
-                    F.unix_micros("pts").alias("purchase_us")))
+    return _view_purchase_join(
+        spark, [ontime, _join_tail(tail, 0), _join_tail(tail + day_us, 1),
+                late_only + ontime])   # ALL late by now
+
+
+def _distinct_event_ids(spark, waves):
+    """Replay ``waves`` of (event_id, tus) rows through
+    ``streaming_distinct`` (10-minute watermark) and return the emitted
+    real event ids (the tail ids start at 900000000)."""
+    from apache_beam_spark.streaming.stateful import streaming_distinct
+
+    out = replay(spark, waves, "event_id bigint, tus bigint",
+                 lambda src: streaming_distinct(
+                     src.select("event_id",
+                                F.timestamp_micros("tus").alias("ts")),
+                     ["event_id"], "ts", within="10 minutes"))
+    return out.filter(F.col("event_id") < 900000000).select("event_id")
 
 
 @query(oracle="""
@@ -964,34 +853,16 @@ def _stream_dedup_exact(spark, sf_dir):
     `stream_dedup_events_per_sec` measures the same operator's
     throughput; reference parity: ``transforms/Distinct.java`` on an
     unbounded input)."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import (TestStream,
-                                                     read_bounded)
-    from apache_beam_spark.streaming.stateful import streaming_distinct
-
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 400)
           .select("event_id",
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("tus")))
     rows = [r.asDict() for r in ev.collect()]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_sdedup_"))
-    ts.add_elements(rows + rows)      # every id arrives twice
     tail = max(r["tus"] for r in rows) + 30 * 24 * 3600 * 1_000_000
-    ts.add_elements([{"event_id": 900000001, "tus": tail}])
-    sdf = streaming_distinct(
-        ts.stream(spark, "event_id bigint, tus bigint")
-        .select("event_id", F.timestamp_micros("tus").alias("ts")),
-        ["event_id"], "ts", within="10 minutes")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = read_bounded(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (out.filter(F.col("event_id") < 900000000)
-            .select("event_id"))
+    return _distinct_event_ids(spark, [
+        rows + rows,      # every id arrives twice
+        [{"event_id": 900000001, "tus": tail}]])
 
 
 @query(oracle="""
@@ -1008,19 +879,13 @@ def _stream_dedup_late_exact(spark, sf_dir):
     DISJOINT set of never-seen events (user_id % 5 == 0 — a modulo
     split so both waves are non-empty at EVERY scale factor) — by
     then the watermark sits 30 days past every real event time, so
-    Spark's pre-state late filter drops the ENTIRE second wave.  Run
-    with the default trigger (one spooled file per micro-batch, the
-    TestStream contract) so the watermark genuinely advances BETWEEN
-    waves — availableNow would coalesce them (the documented
-    read_bounded caveat).  The emitted set is therefore exactly
-    SELECT DISTINCT event_id over the wave-1 rows; any wave-2-only
-    id (user_id % 5 == 0) appearing in the output would be a
-    late-drop violation the hash check catches."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import TestStream
-    from apache_beam_spark.streaming.stateful import streaming_distinct
-    from apache_beam_spark.streaming.windowed import run_to_memory
+    Spark's pre-state late filter drops the ENTIRE second wave.  The
+    replay runs one spooled file per micro-batch (the TestStream
+    contract, which read_bounded's availableNow trigger keeps), so the
+    watermark genuinely advances BETWEEN waves.  The emitted set is
+    therefore exactly SELECT DISTINCT event_id over the wave-1 rows;
+    any wave-2-only id (user_id % 5 == 0) appearing in the output
+    would be a late-drop violation the hash check catches."""
 
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 500)
@@ -1032,23 +897,26 @@ def _stream_dedup_late_exact(spark, sf_dir):
               for r in rows if r["user_id"] % 5 != 0]
     late_only = [{"event_id": r["event_id"], "tus": r["tus"]}
                  for r in rows if r["user_id"] % 5 == 0]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_sdeduplate_"))
-    ts.add_elements(ontime + ontime)
     tail = max(r["tus"] for r in rows) + 30 * 24 * 3600 * 1_000_000
-    ts.add_elements([{"event_id": 900000001, "tus": tail}])
-    ts.add_elements(late_only + ontime)   # ALL late by now
-    sdf = streaming_distinct(
-        ts.stream(spark, "event_id bigint, tus bigint")
-        .select("event_id", F.timestamp_micros("tus").alias("ts")),
-        ["event_id"], "ts", within="10 minutes")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_to_memory(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (out.filter(F.col("event_id") < 900000000)
-            .select("event_id"))
+    return _distinct_event_ids(spark, [
+        ontime + ontime, [{"event_id": 900000001, "tus": tail}],
+        late_only + ontime])   # ALL late by now
+
+
+def _windowed_counts(spark, waves, schema, size, lateness):
+    """Replay ``waves`` through ``windowed_aggregate``: per-event_type
+    counts in fixed windows of ``size`` with ``lateness`` allowed,
+    minus the watermark-tail rows."""
+    from apache_beam_spark.streaming.windowed import windowed_aggregate
+    from apache_beam_spark.windowing import FixedWindows
+
+    out = replay(spark, waves, schema, lambda src: windowed_aggregate(
+        src.select(F.timestamp_micros("tus").alias("ts"), "event_type"),
+        FixedWindows(size), "ts", aggs=[F.count(F.lit(1)).alias("n")],
+        keys=["event_type"], allowed_lateness=lateness))
+    return (out.filter(F.col("event_type") != "zz_watermark_tail")
+            .select(F.col("window.start").alias("window_start"),
+                    "event_type", "n"))
 
 
 @query(oracle="""
@@ -1067,13 +935,6 @@ def _stream_window_count_exact(spark, sf_dir):
     rows answer to a plain GROUP BY — the EIGHTH real streaming query
     under the value-oracle gate, closing the last bench gate family
     (windowed count) that had no oracled exact twin."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import (TestStream,
-                                                     read_bounded)
-    from apache_beam_spark.streaming.windowed import windowed_aggregate
-    from apache_beam_spark.windowing import FixedWindows
-
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 1000)   # deterministic subset so
           # the TestStream spool (a driver-side collect by design)
@@ -1082,25 +943,10 @@ def _stream_window_count_exact(spark, sf_dir):
           .select(F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("tus"), "event_type"))
     rows = [r.asDict() for r in ev.collect()]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_swindow_"))
-    ts.add_elements(rows)
     tail = max(r["tus"] for r in rows) + 30 * 24 * 3600 * 1_000_000
-    ts.add_elements([{"tus": tail, "event_type": "zz_watermark_tail"}])
-    sdf = windowed_aggregate(
-        ts.stream(spark, "tus bigint, event_type string")
-        .select(F.timestamp_micros("tus").alias("ts"), "event_type"),
-        FixedWindows("1 hour"), "ts",
-        aggs=[F.count(F.lit(1)).alias("n")], keys=["event_type"],
-        allowed_lateness="10 minutes")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = read_bounded(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (out.filter(F.col("event_type") != "zz_watermark_tail")
-            .select(F.col("window.start").alias("window_start"),
-                    "event_type", "n"))
+    return _windowed_counts(
+        spark, [rows, [{"tus": tail, "event_type": "zz_watermark_tail"}]],
+        "tus bigint, event_type string", "1 hour", "10 minutes")
 
 
 # three-wave lateness contract: the count keeps on-time rows
@@ -1148,13 +994,6 @@ def _stream_window_late_exact(spark, sf_dir):
     a duplicate (window, key) row; one dropped wave-2 row breaks a
     count.  The EIGHTEENTH streaming value-oracle entry and the first
     THREE-WAVE lateness contract."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import TestStream
-    from apache_beam_spark.streaming.windowed import (run_to_memory,
-                                                      windowed_aggregate)
-    from apache_beam_spark.windowing import FixedWindows
-
     DAY_US = 86_400_000_000
     LATENESS_DAYS = 32   # > the events span: the delayed watermark
     # still sits before wave 2's oldest element when it arrives, so
@@ -1179,30 +1018,14 @@ def _stream_window_late_exact(spark, sf_dir):
     wave3 = [r for r in late if wend(r) <= m_us]   # beyond lateness
     t1 = m_us + 2 * lateness_us   # watermark after tail = M + lateness
     t2 = t1 + 2 * lateness_us     # past every open window's expiry
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_swinlate_"))
-    ts.add_elements(wave1)
-    ts.add_elements([{"tus": t1, "event_type": "zz_watermark_tail",
-                      "event_id": 0}])
-    ts.add_elements(wave2)
-    ts.add_elements(wave3)
-    ts.add_elements([{"tus": t2, "event_type": "zz_watermark_tail",
-                      "event_id": 0}])
-    sdf = windowed_aggregate(
-        ts.stream(spark, "tus bigint, event_type string, event_id bigint")
-        .select(F.timestamp_micros("tus").alias("ts"), "event_type"),
-        FixedWindows("1 day"), "ts",
-        aggs=[F.count(F.lit(1)).alias("n")], keys=["event_type"],
-        allowed_lateness=f"{LATENESS_DAYS} days")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_to_memory(sdf)   # sequenced: the watermark must
-        # genuinely advance BETWEEN waves (availableNow coalesces)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (out.filter(F.col("event_type") != "zz_watermark_tail")
-            .select(F.col("window.start").alias("window_start"),
-                    "event_type", "n"))
+    return _windowed_counts(
+        spark, [wave1, [{"tus": t1, "event_type": "zz_watermark_tail",
+                         "event_id": 0}],
+                wave2, wave3,
+                [{"tus": t2, "event_type": "zz_watermark_tail",
+                  "event_id": 0}]],
+        "tus bigint, event_type string, event_id bigint", "1 day",
+        f"{LATENESS_DAYS} days")
 
 
 @query(oracle="""
@@ -1237,10 +1060,6 @@ def _stream_rate_limit_exact(spark, sf_dir):
     `stream_rate_limit_events_per_sec` measures this operator's
     throughput).  Batch twin: rate_limit_batch (parity-tested in
     tests/test_rate_limit.py)."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import (TestStream,
-                                                     read_bounded)
     from apache_beam_spark.streaming.stateful import streaming_rate_limit
 
     ev = (load_table(spark, "events", sf_dir)
@@ -1249,22 +1068,39 @@ def _stream_rate_limit_exact(spark, sf_dir):
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("tus")))
     rows = [r.asDict() for r in ev.collect()]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_sratelimit_"))
-    ts.add_elements(rows)
-    sdf = streaming_rate_limit(
-        ts.stream(spark, "event_id bigint, user_id bigint, tus bigint")
-        .select("event_id", "user_id",
-                F.timestamp_micros("tus").alias("ts")),
-        key="user_id", event_time="ts", id_col="event_id",
-        window_ms=86_400_000, max_per_window=2, n_shards=8)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = read_bounded(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = replay(spark, [rows], "event_id bigint, user_id bigint, tus bigint",
+                 lambda src: streaming_rate_limit(
+                     src.select("event_id", "user_id",
+                                F.timestamp_micros("tus").alias("ts")),
+                     key="user_id", event_time="ts", id_col="event_id",
+                     window_ms=86_400_000, max_per_window=2, n_shards=8))
     return out.select("user_id", "event_id", "ts_ms",
                       "win_start_ms", "seq")
+
+
+def _trigger_tail(tus):
+    """One watermark-tail wave of the trigger replays."""
+    return [{"event_type": "zz_watermark_tail", "event_id": 0, "tus": tus}]
+
+
+def _triggered_panes(spark, waves, trigger, **tws_kwargs):
+    """Replay ``waves`` of (event_type, event_id, tus) rows through
+    ``triggered_windowed_sum`` — per-(event_type, 1-day-window) sums of
+    event_id, elements ordered by (ts, event_id) — and return every
+    pane of the real keys."""
+    from apache_beam_spark.streaming.triggers import triggered_windowed_sum
+
+    out = replay(spark, waves, "event_type string, event_id bigint, tus bigint",
+                 lambda src: triggered_windowed_sum(
+                     src.select("event_type", "event_id",
+                                F.timestamp_micros("tus").alias("ts")),
+                     key="event_type", value_col="event_id",
+                     window_size="1 day", trigger=trigger, event_time="ts",
+                     order_by=["ts", "event_id"], **tws_kwargs))
+    return (out.filter(F.col("key") != "zz_watermark_tail")
+            .select("key", "window_end_ms", "pane_index", "timing",
+                    "is_first", "is_last", "on_time_index",
+                    "n_in_pane", "pane_ts_ms", "total"))
 
 
 # trigger panes are a pure prefix function of the (ts, event_id)-
@@ -1342,13 +1178,8 @@ def _stream_trigger_exact(spark, sf_dir, accumulating=True,
     timing label, or running total breaks the hash: the ELEVENTH
     streaming query under the value-oracle gate and the first for the
     trigger state-machine family."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import TestStream
     from apache_beam_spark.streaming.trigger_machine import (AfterPane,
                                                              AfterWatermark)
-    from apache_beam_spark.streaming.triggers import triggered_windowed_sum
-    from apache_beam_spark.streaming.windowed import run_to_memory
 
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 150)   # deterministic subset so
@@ -1365,30 +1196,11 @@ def _stream_trigger_exact(spark, sf_dir, accumulating=True,
         f"trigger-entry replay spool grew to {len(rows)} rows — the "
         f"user_id < 150 cohort is expected ~10k at any SF; revisit "
         f"the bound before spooling this through the driver")
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_strigger_"))
-    ts.add_elements(rows)
     tail = max(r["tus"] for r in rows) + 30 * 24 * 3600 * 1_000_000
-    ts.add_elements([{"event_type": "zz_watermark_tail",
-                      "event_id": 0, "tus": tail}])
     trigger = (trigger_fn() if trigger_fn is not None
                else AfterWatermark().with_early_firings(AfterPane(10)))
-    sdf = triggered_windowed_sum(
-        ts.stream(spark, "event_type string, event_id bigint, tus bigint")
-        .select("event_type", "event_id",
-                F.timestamp_micros("tus").alias("ts")),
-        key="event_type", value_col="event_id", window_size="1 day",
-        trigger=trigger, event_time="ts", accumulating=accumulating,
-        order_by=["ts", "event_id"], **tws_kwargs)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_to_memory(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (out.filter(F.col("key") != "zz_watermark_tail")
-            .select("key", "window_end_ms", "pane_index", "timing",
-                    "is_first", "is_last", "on_time_index",
-                    "n_in_pane", "pane_ts_ms", "total"))
+    return _triggered_panes(spark, [rows, _trigger_tail(tail)], trigger,
+                            accumulating=accumulating, **tws_kwargs)
 
 
 # orFinally(Repeatedly(AfterPane(7))): same prefix-sum shape at
@@ -1691,13 +1503,8 @@ def _stream_trigger_late_exact(spark, sf_dir):
     the two sorted waves, answering to a per-wave ROW_NUMBER /
     prefix-SUM oracle: the SEVENTEENTH streaming value-oracle entry
     and the first to pin LATE panes and allowed-lateness > 0."""
-    import tempfile
-
-    from apache_beam_spark.streaming.sources import TestStream
     from apache_beam_spark.streaming.trigger_machine import (AfterPane,
                                                              AfterWatermark)
-    from apache_beam_spark.streaming.triggers import triggered_windowed_sum
-    from apache_beam_spark.streaming.windowed import run_to_memory
 
     DAY_US = 86_400_000_000
     LATENESS_DAYS = 32   # > the events table's ~30-day span, so the
@@ -1726,33 +1533,11 @@ def _stream_trigger_late_exact(spark, sf_dir):
     lateness_us = LATENESS_DAYS * DAY_US
     t1 = m_us + 2 * lateness_us   # watermark after tail 1 = M + lateness
     t2 = t1 + 2 * lateness_us     # past every open window's expiry
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_striglate_"))
-    ts.add_elements(wave1)
-    ts.add_elements([{"event_type": "zz_watermark_tail",
-                      "event_id": 0, "tus": t1}])
-    ts.add_elements(wave2)
-    ts.add_elements([{"event_type": "zz_watermark_tail",
-                      "event_id": 0, "tus": t2}])
     trigger = (AfterWatermark().with_early_firings(AfterPane(10))
                .with_late_firings(AfterPane(4)))
-    sdf = triggered_windowed_sum(
-        ts.stream(spark, "event_type string, event_id bigint, tus bigint")
-        .select("event_type", "event_id",
-                F.timestamp_micros("tus").alias("ts")),
-        key="event_type", value_col="event_id", window_size="1 day",
-        trigger=trigger, event_time="ts",
-        allowed_lateness=f"{LATENESS_DAYS} days",
-        order_by=["ts", "event_id"])
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_to_memory(sdf)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (out.filter(F.col("key") != "zz_watermark_tail")
-            .select("key", "window_end_ms", "pane_index", "timing",
-                    "is_first", "is_last", "on_time_index",
-                    "n_in_pane", "pane_ts_ms", "total"))
+    return _triggered_panes(
+        spark, [wave1, _trigger_tail(t1), wave2, _trigger_tail(t2)],
+        trigger, allowed_lateness=f"{LATENESS_DAYS} days")
 
 
 # AfterFirst(AfterPane(12), AfterWatermark): exactly one pane
@@ -2259,34 +2044,32 @@ def _windowed_file_write_stream(spark, sf_dir):
     twin `windowed_file_write`: every line AND its exact pane-stamped
     filename rebuilt in SQL.  An unfinalized write, wrong pane stamp,
     wrong shard math, or a lost/duplicated line all break the hash."""
+    import shutil
     import tempfile
 
     from apache_beam_spark.sources.io import windowed_sharded_write_stream
-    from apache_beam_spark.streaming.sources import TestStream
 
+    # the output directory must outlive the lazy read-back below
     out = tempfile.mkdtemp(prefix="entry_wfws_")
+    ckpt = tempfile.mkdtemp(prefix="entry_wfws_ckpt_")
     ev = (load_table(spark, "events", sf_dir)
           .filter(F.col("user_id") < 300)
           .select("event_id",
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("tus")))
     rows = [r.asDict() for r in ev.collect()]
-    ts = TestStream(tempfile.mkdtemp(prefix="entry_wfws_spool_"))
-    ts.add_elements(rows)     # ONE wave -> every file is -pane0
-    src = (ts.stream(spark, "event_id bigint, tus bigint")
-           .select("event_id", F.timestamp_micros("tus").alias("ts")))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = windowed_sharded_write_stream(
-        src, out, "events", "1 day", "ts", text_col="event_id",
-        num_shards=4, shard_col="event_id",
-        checkpoint=tempfile.mkdtemp(prefix="entry_wfws_ckpt_")).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # ONE wave -> every file is -pane0
+    with replay_stream(spark, [rows], "event_id bigint, tus bigint") as src:
+        q = windowed_sharded_write_stream(
+            src.select("event_id", F.timestamp_micros("tus").alias("ts")),
+            out, "events", "1 day", "ts", text_col="event_id",
+            num_shards=4, shard_col="event_id", checkpoint=ckpt).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination(30)
+            shutil.rmtree(ckpt, ignore_errors=True)
     pat = r"events-(\d+)-(\d+)-(\d+)-of-(\d+)-pane0\.txt"
     rb = (spark.read.text(out + "/events-*-pane0.txt")
           .withColumn("filename",

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from apache_beam_spark.streaming import TestStream, run_to_memory, windowed_aggregate
+from apache_beam_spark.streaming import TestStream, read_bounded, windowed_aggregate
 from apache_beam_spark.windowing import CalendarWindows, FixedWindows
 
 
@@ -50,7 +50,7 @@ def test_leaderboard_stream(spark, tmp_path):
         aggs=[F.sum("score").alias("points")], keys=["team"],
         allowed_lateness="2 hours",   # generous: late red event is allowed
     )
-    got = run_to_memory(sdf, "update")
+    got = read_bounded(sdf, "update")
     first_window = got.filter(F.col("window.start") == "2024-01-01 00:00:00")
     per_team_final = (first_window.groupBy("team")
                       .agg(F.max("points").alias("final")).collect())

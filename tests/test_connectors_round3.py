@@ -46,7 +46,7 @@ from apache_beam_spark.streaming.pubsub import (
     to_pubsub_messages,
     with_event_timestamps,
 )
-from apache_beam_spark.streaming.windowed import run_to_memory
+from apache_beam_spark.streaming.sources import read_bounded
 
 # ------------------------------------------------------------------- pubsub
 
@@ -155,7 +155,7 @@ def test_pubsub_id_attribute_dedup_streaming(spark, tmp_path):
                       subscription="projects/my-project/subscriptions/sub",
                       timestamp_attribute="ets", id_attribute="dedup",
                       emulation_spool=spool)
-    got = run_to_memory(sdf)
+    got = read_bounded(sdf)
     ids = {r["attributes"]["dedup"] for r in got.collect()}
     assert got.count() == 2 and ids == {"a", "b"}
 

@@ -280,6 +280,36 @@ def test_blas_auto_picks_mode_by_size(spark, emb_df):
     assert sorted(map(tuple, forced_stream.collect())) == ref
 
 
+def test_blas_null_nan_zero_vectors_match_reference(spark):
+    """NaN-element, zero and null embeddings on both sides: each takes
+    null sims, ranked after every real sim by neighbor id, and both
+    blas modes equal ``brute_force_topk``.  k = 9 over 7 clean
+    neighbors makes every top-k reach into the null-sim ranks and pick
+    the two smallest of the three bad ids."""
+    from apache_beam_spark.similarity.knn import (
+        _choose_broadcast_side, _cosines, _unit_rows)
+
+    rng = np.random.RandomState(23)
+    rows = [(i, rng.standard_normal(6).tolist()) for i in range(8)]
+    nan_vec = rng.standard_normal(6)
+    nan_vec[2] = float("nan")
+    rows += [(100, nan_vec.tolist()), (101, [0.0] * 6), (102, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    huge = 1 << 64
+    assert _choose_broadcast_side(df, huge) == "corpus"
+    assert _choose_broadcast_side(df, 1) == "queries"
+    ref = sorted(map(tuple, brute_force_topk(df, df, k=9).collect()))
+    assert len(ref) == 11 * 9
+    assert sum(r[2] is None for r in ref) == 8 * 2 + 3 * 9
+    for cap in (huge, 1):
+        got = sorted(map(tuple, brute_force_topk_blas(
+            df, df, k=9, max_broadcast_bytes=cap).collect()))
+        assert got == ref, cap
+    # a batch whose vectors are all null has no width: all-null sims
+    assert np.isnan(_cosines(_unit_rows([[1.0, 0.0]]),
+                             _unit_rows([None, None]))).all()
+
+
 def test_pair_cosine_bitwise_matches_hof(spark):
     """pair_cosine (the vectorized rerank path) must be BIT-IDENTICAL
     to the interpreted functions.vectors.cosine HOF it replaced —

@@ -8,7 +8,7 @@ from apache_beam_spark.streaming.stateful import (
     streaming_rate_limit,
 )
 from apache_beam_spark.streaming.sources import TestStream
-from apache_beam_spark.streaming.windowed import run_to_memory
+from apache_beam_spark.streaming.sources import read_bounded
 
 SCHEMA = "user string, ts timestamp, event_id long"
 
@@ -58,7 +58,7 @@ def test_streaming_matches_batch(spark, tmp_path):
                                window_ms=60_000, max_per_window=3)
     got = sorted(
         (r["user"], r["event_id"], r["win_start_ms"], r["seq"])
-        for r in run_to_memory(sdf).collect())
+        for r in read_bounded(sdf).collect())
     exp = sorted(
         (r["user"], r["event_id"], r["win_start_ms"], r["seq"])
         for r in rate_limit_batch(
@@ -79,7 +79,7 @@ def test_streaming_quota_spans_micro_batches(spark, tmp_path):
     sdf = streaming_rate_limit(ts.stream(spark, SCHEMA), key="user",
                                event_time="ts", id_col="event_id",
                                window_ms=60_000, max_per_window=3)
-    admitted = sorted(r["event_id"] for r in run_to_memory(sdf).collect())
+    admitted = sorted(r["event_id"] for r in read_bounded(sdf).collect())
     assert admitted == [1, 2, 3]
 
 
@@ -99,7 +99,7 @@ def test_sharded_matches_unsharded(spark, tmp_path):
                                    window_ms=60_000, max_per_window=3,
                                    **kw)
         return sorted((r["user"], r["event_id"], r["win_start_ms"],
-                       r["seq"]) for r in run_to_memory(sdf).collect())
+                       r["seq"]) for r in read_bounded(sdf).collect())
 
     batch = sorted(
         (r["user"], r["event_id"], r["win_start_ms"], r["seq"])

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from apache_beam_spark.streaming import TestStream, run_to_memory
+from apache_beam_spark.streaming import TestStream, read_bounded
 
 
 def test_stream_stream_time_range_join(spark, tmp_path):
@@ -35,7 +35,7 @@ def test_stream_stream_time_range_join(spark, tmp_path):
     ).select(c["user"], "page", "bts", "amount")
 
     got = sorted((r["user"], r["page"], r["amount"])
-                 for r in run_to_memory(joined, "append").collect())
+                 for r in read_bounded(joined, "append").collect())
     # only click x (00:00) is within 10 min of the 00:05 purchase;
     # click w (02:00) is within 10 min of the 02:10 purchase
     assert got == [("a", "w", 1.0), ("a", "x", 9.0)]
@@ -57,7 +57,7 @@ def test_interval_join_operator(spark, tmp_path):
                         lower="0 seconds", upper="10 minutes",
                         watermark_delay="1 hour")
     got = [(r["user"], r["page"], r["amount"])
-           for r in run_to_memory(out, "append").collect()]
+           for r in read_bounded(out, "append").collect()]
     assert got == [("a", "x", 9.0)]
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from apache_beam_spark.streaming import (
     TestStream,
     group_into_batches_stream,
-    run_to_memory,
+    read_bounded,
     streaming_distinct,
     windowed_aggregate,
 )
@@ -49,7 +49,7 @@ def test_fixed_window_stream_matches_batch(spark, spool):
         aggs=[F.sum("amount").alias("total")], keys=["user"],
         allowed_lateness="0 seconds",
     )
-    got = flat(run_to_memory(sdf, "append")).toPandas()
+    got = flat(read_bounded(sdf, "append")).toPandas()
 
     batch = flat(windowed_aggregate(
         spark.read.schema(SCHEMA).json(spool), FixedWindows("1 minute"), "ts",
@@ -83,7 +83,7 @@ def test_late_data_dropped_past_watermark(spark, spool):
         aggs=[F.sum("amount").alias("total")], keys=["user"],
         allowed_lateness="10 minutes",
     )
-    got = run_to_memory(sdf, "append") \
+    got = read_bounded(sdf, "append") \
         .select(F.col("window.start").alias("wstart"), "total").toPandas()
     first = got[got.wstart == pd.Timestamp("2024-01-01 00:00:00")]
     # the late 100.0 was dropped (reference LateDataDroppingDoFnRunner):
@@ -101,7 +101,7 @@ def test_session_window_stream(spark, spool):
         aggs=[F.sum("amount").alias("total"), F.count(F.lit(1)).alias("n")],
         keys=["user"], allowed_lateness="0 seconds",
     )
-    got = run_to_memory(sdf, "append").toPandas().sort_values("total")
+    got = read_bounded(sdf, "append").toPandas().sort_values("total")
     assert got.n.tolist() == [2, 1]
     assert got.total.tolist() == [2.0, 5.0]
 
@@ -115,7 +115,7 @@ def test_group_into_batches_stream(spark, spool):
     out = group_into_batches_stream(
         ts.stream(spark, SCHEMA), key="user", batch_size=2, value_cols=["amount"],
     )
-    got = run_to_memory(out, "append").toPandas()
+    got = read_bounded(out, "append").toPandas()
     # a: 5 values -> two full batches (one remainder stays buffered);
     # b: 2 values -> one full batch
     a = got[got.user == "a"]
@@ -129,7 +129,7 @@ def test_streaming_distinct(spark, spool):
                           ("a", "2024-01-01 00:00:00", 1.0)))
     ts.add_elements(_rows(("a", "2024-01-01 00:00:05", 1.0)))  # dup again, in-watermark
     out = streaming_distinct(ts.stream(spark, SCHEMA), ["user"], "ts", "1 hour")
-    got = run_to_memory(out, "append").toPandas()
+    got = read_bounded(out, "append").toPandas()
     assert len(got) == 1
 
 
@@ -144,8 +144,6 @@ def test_rate_stream_smoke(spark):
 def test_read_bounded_available_now(spark, spool):
     """BoundedReadFromUnboundedSource: availableNow processes the
     currently-spooled data then terminates."""
-    from apache_beam_spark.streaming.sources import read_bounded
-
     ts = TestStream(spool)
     ts.add_elements(_rows(("a", "2024-01-01 00:00:10", 1.0)))
     ts.add_elements(_rows(("b", "2024-01-01 00:00:20", 2.0)))

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from apache_beam_spark.streaming import windowed_aggregate
 from apache_beam_spark.streaming.joins import interval_join
 from apache_beam_spark.streaming.sources import TestStream
-from apache_beam_spark.streaming.windowed import run_to_memory
+from apache_beam_spark.streaming.sources import read_bounded
 from apache_beam_spark.windowing import Sessions
 
 
@@ -35,7 +35,7 @@ def test_streaming_session_windows_match_batch(spark, tmp_path):
             allowed_lateness="0 seconds")
 
     got = {(r["key"], r["window"].start.minute): r["total"]
-           for r in run_to_memory(agg(ts.stream(spark, schema))).collect()
+           for r in read_bounded(agg(ts.stream(spark, schema))).collect()
            if r["key"] != "z"}
     assert got == {("a", 0): 3.0, ("a", 30): 4.0, ("b", 2): 8.0}
 
@@ -70,7 +70,7 @@ def test_interval_join_left_outer_streaming(spark, tmp_path):
         lower="0 seconds", upper="10 minutes",
         watermark_delay="0 seconds", how="left")
     rows = {(r["user"], r["amount"]): r["tag"]
-            for r in run_to_memory(joined, output_mode="append").collect()
+            for r in read_bounded(joined, output_mode="append").collect()
             if r["user"] != 9}
     assert rows[(1, 10.0)] == "hit"       # matched inside the interval
     assert rows[(2, 20.0)] is None        # null-extended after watermark
@@ -91,7 +91,7 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path):
            .join(F.broadcast(dim), on="etype", how="left")
            .select("etype", (F.col("v") * F.coalesce("weight", F.lit(0.0)))
                    .alias("weighted")))
-    got = {r["etype"]: r["weighted"] for r in run_to_memory(sdf).collect()}
+    got = {r["etype"]: r["weighted"] for r in read_bounded(sdf).collect()}
     assert got == {"view": 10.0, "click": 10.0, "other": 0.0}
 
 
@@ -116,7 +116,7 @@ def test_streaming_rollup_cascade_matches_batch(spark, tmp_path):
     sout = rollup_windows(sdf, "ts", ["k"], aggs,
                           ["1 hour", "1 day"])["1 day"]
     got = {(r["window"].start.day, r["k"]): (r["s"], r["n"], r["m"])
-           for r in run_to_memory(sout).collect() if r["k"] != "z"}
+           for r in read_bounded(sout).collect() if r["k"] != "z"}
 
     batch = spark.createDataFrame(
         [(k, dt.datetime.fromisoformat(t.replace("Z", "+00:00"))
@@ -154,7 +154,7 @@ def test_streaming_windowed_percentile_and_latest(spark, tmp_path):
             "ts", aggs=aggs, keys=["k"], allowed_lateness="0 seconds")
 
     got = {r["k"]: (r["p50"], r["latest"], r["n"])
-           for r in run_to_memory(agg(ts.stream(
+           for r in read_bounded(agg(ts.stream(
                spark, "k string, ts timestamp, v double"))).collect()
            if r["k"] != "z"}
     batch = spark.createDataFrame(

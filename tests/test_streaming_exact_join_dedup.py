@@ -25,19 +25,15 @@ def _spool(rows_per_batch):
     return ts
 
 
-def _run(spark, sdf, parts="4", sequenced=False):
-    """sequenced=True replays one spool file per micro-batch (default
-    trigger, the TestStream contract — watermark advances between
-    waves); sequenced=False is the entries' read_bounded/availableNow
-    path, which may coalesce waves into one batch (fine for their
-    single-wave replays)."""
+def _run(spark, sdf, parts="4"):
+    """Drain with read_bounded: one spool file per micro-batch (the
+    TestStream contract), so the watermark advances between waves."""
     from apache_beam_spark.streaming.sources import read_bounded
-    from apache_beam_spark.streaming.windowed import run_to_memory
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", parts)
     try:
-        return run_to_memory(sdf) if sequenced else read_bounded(sdf)
+        return read_bounded(sdf)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -120,8 +116,7 @@ def test_stream_interval_join_drops_late_side_input(spark):
     tail = [{"event_id": 9001, "user_id": 999, "tus": 10**15,
              "event_type": "view"}]
     out = _run(spark,
-               _join_streams(spark, _spool([wave1, spacer, late, tail])),
-               sequenced=True)
+               _join_streams(spark, _spool([wave1, spacer, late, tail])))
     got = sorted((r["view_id"], r["purchase_id"])
                  for r in out.filter(F.col("v_user") < 999).collect())
     assert got == [(2, 3)]  # the late view's (4, 1) pair never forms
@@ -163,7 +158,21 @@ def test_stream_dedup_reemits_after_watermark_eviction(spark):
         ts.stream(spark, "event_id bigint, tus bigint")
         .select("event_id", F.timestamp_micros("tus").alias("ts")),
         ["event_id"], "ts", within="30 minutes")
-    out = _run(spark, sdf, sequenced=True)
+    out = _run(spark, sdf)
     got = sorted(r["event_id"]
                  for r in out.filter(F.col("event_id") < 9001).collect())
     assert got == [7, 7, 8, 9]
+
+
+def test_stream_dedup_exact_removes_its_spool(spark, duck, tmp_path,
+                                              monkeypatch):
+    """The replay harness spools into the temp dir and removes the
+    spool after the drain: the entry still answers with the oracle's
+    row count and leaves nothing behind."""
+    import __spark_entry__ as e
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    got = e.queries()["stream_dedup_exact"](spark, "/root/testdata/sf0.001")
+    want = len(duck.execute(e.oracle_sql()["stream_dedup_exact"]).fetchdf())
+    assert got.count() == want > 0
+    assert list(tmp_path.iterdir()) == []

@@ -82,7 +82,7 @@ def test_streaming_matches_batch_strict(spark):
     from apache_beam_spark.streaming.sources import TestStream
     from apache_beam_spark.streaming.stateful import (
         streaming_sessions_strict)
-    from apache_beam_spark.streaming.windowed import run_to_memory
+    from apache_beam_spark.streaming.sources import read_bounded
 
     rows = []
     # user a: exact-gap pair (two sessions), user b: in-gap pair (one),
@@ -103,7 +103,7 @@ def test_streaming_matches_batch_strict(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        out = run_to_memory(sdf)  # sequenced: wm advances between waves
+        out = read_bounded(sdf)  # sequenced: wm advances between waves
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     got = sorted((r["user_id"], r["session_start_ms"], r["n_events"])
@@ -133,7 +133,7 @@ def test_streaming_matches_batch_strict(spark):
                                          n_shards=shards)
         spark.conf.set("spark.sql.shuffle.partitions", "4")
         try:
-            out2 = run_to_memory(sdf2)
+            out2 = read_bounded(sdf2)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         got2 = sorted((r["user_id"], r["session_start_ms"], r["n_events"])
@@ -152,7 +152,7 @@ def test_sub_second_gap_keeps_watermark_delay(spark):
     from apache_beam_spark.streaming.sources import TestStream
     from apache_beam_spark.streaming.stateful import (
         streaming_sessions_strict)
-    from apache_beam_spark.streaming.windowed import run_to_memory
+    from apache_beam_spark.streaming.sources import read_bounded
 
     t0_us = T0                       # µs; gap is 500 ms
     gap_ms = 500
@@ -173,7 +173,7 @@ def test_sub_second_gap_keeps_watermark_delay(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        out = run_to_memory(sdf)
+        out = read_bounded(sdf)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     got = sorted((r["user_id"], r["session_start_ms"], r["n_events"])

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from apache_beam_spark.streaming import TestStream, run_to_memory
+from apache_beam_spark.streaming import TestStream, read_bounded
 from apache_beam_spark.streaming.timers import stateful_do_fn
 
 SCHEMA = "k string, ts timestamp, v double"
@@ -42,7 +42,7 @@ def test_two_named_timers_fire_in_order(spark, tmp_path):
         output_schema="k string, which string, total double",
         time_domain="event",
     )
-    got = run_to_memory(out, "append").toPandas()
+    got = read_bounded(out, "append").toPandas()
     fired = got.sort_values("total").to_dict("records")
     assert [f["which"] for f in fired] == ["flush_early", "flush_late"] or \
            {f["which"] for f in fired} == {"flush_early", "flush_late"}
@@ -72,5 +72,5 @@ def test_timer_overwrite_and_clear(spark, tmp_path):
         ts.stream(spark, SCHEMA), ["k"], process, on_timer,
         output_schema="k string, which string", time_domain="event",
     )
-    got = run_to_memory(out, "append").toPandas()
+    got = read_bounded(out, "append").toPandas()
     assert got.which.tolist() == ["t"]

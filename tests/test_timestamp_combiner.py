@@ -116,7 +116,7 @@ def test_streaming_watermark_hold_output_timestamps(spark, tmp_path):
     min/max aggregate itself, computed inside the streaming agg)."""
     from apache_beam_spark.streaming import windowed_aggregate
     from apache_beam_spark.streaming.sources import TestStream
-    from apache_beam_spark.streaming.windowed import run_to_memory
+    from apache_beam_spark.streaming.sources import read_bounded
     from apache_beam_spark.windowing import OUTPUT_TS_COL
 
     schema = "key string, ts timestamp, value double"
@@ -140,7 +140,7 @@ def test_streaming_watermark_hold_output_timestamps(spark, tmp_path):
             allowed_lateness="0 seconds", timestamp_combiner=mode)
         assert OUTPUT_TS_COL in sdf.columns
         got = {r["key"]: r[OUTPUT_TS_COL]
-               for r in run_to_memory(sdf).collect()
+               for r in read_bounded(sdf).collect()
                if r["window"].start.hour == 0}
         assert got == expect, mode
 

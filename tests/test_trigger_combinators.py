@@ -154,7 +154,7 @@ def test_triggered_windowed_sum_end_to_end(spark, tmp_path):
     real stateful operator: early pane per 2 elements, on-time pane
     when the watermark passes the window end (fired by the window-end
     timer, not by new data for that window)."""
-    from apache_beam_spark.streaming import TestStream, run_to_memory
+    from apache_beam_spark.streaming import TestStream, read_bounded
     from apache_beam_spark.streaming.triggers import triggered_windowed_sum
 
     rows1 = [{"user": "a", "ts": "2024-01-01 00:00:10", "amount": 1.0},
@@ -169,7 +169,7 @@ def test_triggered_windowed_sum_end_to_end(spark, tmp_path):
     out = triggered_windowed_sum(
         ts.stream(spark, "user string, ts timestamp, amount double"),
         key="user", value_col="amount", window_size="1 minute", trigger=trig)
-    got = run_to_memory(out, "append").toPandas()
+    got = read_bounded(out, "append").toPandas()
     a = got[got.key == "a"].sort_values("pane_index")
     assert a.timing.tolist() == ["EARLY", "ON_TIME"]
     assert a.total.tolist() == [3.0, 6.0]
@@ -186,7 +186,7 @@ def test_triggered_windowed_sum_event_time_types(spark, tmp_path, ts_type):
     """Both event-time types give the same panes: a TIMESTAMP_NTZ
     column (the documents/events fixtures' type) is read as UTC wall
     clock, like the engine's UTC session reads TIMESTAMP."""
-    from apache_beam_spark.streaming import TestStream, run_to_memory
+    from apache_beam_spark.streaming import TestStream, read_bounded
     from apache_beam_spark.streaming.triggers import triggered_windowed_sum
 
     ts = TestStream(str(tmp_path / f"spool_{ts_type}"))
@@ -199,7 +199,7 @@ def test_triggered_windowed_sum_event_time_types(spark, tmp_path, ts_type):
         key="user", value_col="amount", window_size="1 minute",
         trigger=Repeatedly(AfterPane(2)).or_finally(AfterWatermark()),
         order_by=["ts", "amount"])
-    got = run_to_memory(out, "append").toPandas()
+    got = read_bounded(out, "append").toPandas()
     a = got[got.key == "a"].sort_values("pane_index")
     base = 1704067200000  # 2024-01-01 00:00:00 UTC in ms
     assert a.window_end_ms.tolist() == [base + 60_000] * 2
@@ -221,7 +221,7 @@ def test_window_expiry_fires_pending_pane(spark, tmp_path):
       * key d, exactly 2 elements: pane 0 fires, the pending pane is
         EMPTY at expiry -> nothing further (FIRE_IF_NON_EMPTY).
     """
-    from apache_beam_spark.streaming import TestStream, run_to_memory
+    from apache_beam_spark.streaming import TestStream, read_bounded
     from apache_beam_spark.streaming.triggers import triggered_windowed_sum
 
     rows1 = ([{"user": "a", "ts": f"2024-01-01 00:00:{s:02d}",
@@ -239,7 +239,7 @@ def test_window_expiry_fires_pending_pane(spark, tmp_path):
         ts.stream(spark, "user string, ts timestamp, amount double"),
         key="user", value_col="amount", window_size="1 minute",
         trigger=trig, order_by=["ts", "amount"])
-    got = run_to_memory(out, "append").toPandas()
+    got = read_bounded(out, "append").toPandas()
     a = got[got.key == "a"].sort_values("pane_index")
     assert a.timing.tolist() == ["EARLY", "ON_TIME"]
     assert a.total.tolist() == [3.0, 15.0]
@@ -259,7 +259,7 @@ def test_closing_and_ontime_behaviors(spark, tmp_path):
     even when EMPTY (n_in_pane=0, accumulated total);
     Window.withOnTimeBehavior(FIRE_IF_NON_EMPTY) suppresses an empty
     watermark-crossing pane while the trigger still finishes."""
-    from apache_beam_spark.streaming import TestStream, run_to_memory
+    from apache_beam_spark.streaming import TestStream, read_bounded
     from apache_beam_spark.streaming.triggers import triggered_windowed_sum
 
     rows1 = [{"user": "a", "ts": "2024-01-01 00:00:10", "amount": 1.0},
@@ -274,7 +274,7 @@ def test_closing_and_ontime_behaviors(spark, tmp_path):
             ts.stream(spark, "user string, ts timestamp, amount double"),
             key="user", value_col="amount", window_size="1 minute",
             trigger=trig, order_by=["ts", "amount"], **kw)
-        got = run_to_memory(out, "append").toPandas()
+        got = read_bounded(out, "append").toPandas()
         return got[got.key == "a"].sort_values("pane_index")
 
     # FIRE_ALWAYS: count-2 pane empties the pending pane, yet expiry
@@ -298,7 +298,7 @@ def test_pane_output_timestamp_holds(spark, tmp_path):
     timestamp_combiner='earliest' each pane carries the min event time
     of its own elements (the hold the reference keeps in WatermarkHold
     state), not the window end."""
-    from apache_beam_spark.streaming import TestStream, run_to_memory
+    from apache_beam_spark.streaming import TestStream, read_bounded
     from apache_beam_spark.streaming.triggers import triggered_windowed_sum
 
     rows1 = [{"user": "a", "ts": "2024-01-01 00:00:10", "amount": 1.0},
@@ -314,7 +314,7 @@ def test_pane_output_timestamp_holds(spark, tmp_path):
         ts.stream(spark, "user string, ts timestamp, amount double"),
         key="user", value_col="amount", window_size="1 minute",
         trigger=trig, timestamp_combiner="earliest")
-    got = run_to_memory(out, "append").toPandas()
+    got = read_bounded(out, "append").toPandas()
     a = got[got.key == "a"].sort_values("pane_index")
     base = 1704067200000  # 2024-01-01 00:00:00 UTC in ms
     # pane 0 holds min ts of elements 1-2 (00:00:10); pane 1 of 3-4
@@ -330,7 +330,7 @@ def test_triggered_sum_order_by_pins_pane_composition(spark, tmp_path):
     (n_in_pane=0) but still fires with the full accumulated total
     (AfterWatermark fires the on-time pane unconditionally,
     AfterWatermark.java:109)."""
-    from apache_beam_spark.streaming import TestStream, run_to_memory
+    from apache_beam_spark.streaming import TestStream, read_bounded
     from apache_beam_spark.streaming.triggers import triggered_windowed_sum
 
     # 4 elements, spooled in reverse arrival order; fire_every=2
@@ -346,7 +346,7 @@ def test_triggered_sum_order_by_pins_pane_composition(spark, tmp_path):
         ts.stream(spark, "user string, ts timestamp, amount double"),
         key="user", value_col="amount", window_size="1 minute",
         trigger=trig, order_by=["ts", "amount"])
-    got = run_to_memory(out, "append").toPandas()
+    got = read_bounded(out, "append").toPandas()
     a = got[got.key == "a"].sort_values("pane_index")
     assert a.timing.tolist() == ["EARLY", "EARLY", "ON_TIME"]
     # sorted by ts: 1,2,4,8 -> prefix sums 3 and 15; on-time repeats 15

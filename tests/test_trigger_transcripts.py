@@ -21,7 +21,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from apache_beam_spark.streaming import TestStream, run_to_memory, windowed_aggregate
+from apache_beam_spark.streaming import TestStream, read_bounded, windowed_aggregate
 from apache_beam_spark.windowing import (
     EARLIEST,
     END_OF_WINDOW,
@@ -173,7 +173,7 @@ def _run_transcript(case, spark, spool_dir):
         keys=["k"],
         allowed_lateness=case.get("allowed_lateness", "0 seconds"),
     )
-    out = run_to_memory(sdf, "append")
+    out = read_bounded(sdf, "append")
     rows = (out.filter(F.col("k") != SENTINEL)
             .select(F.unix_timestamp("window.start").alias("wstart"),
                     F.unix_timestamp("window.end").alias("wend"),

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from apache_beam_spark.streaming import TestStream, run_to_memory, windowed_aggregate
+from apache_beam_spark.streaming import TestStream, read_bounded, windowed_aggregate
 from apache_beam_spark.streaming.triggers import count_trigger_aggregate
 from apache_beam_spark.windowing import FixedWindows
 
@@ -30,7 +30,7 @@ def test_early_firings_update_mode(spark, tmp_path):
         aggs=[F.sum("amount").alias("total")], keys=["user"],
         allowed_lateness="0 seconds",
     )
-    got = run_to_memory(sdf, "update").toPandas()
+    got = read_bounded(sdf, "update").toPandas()
     # two panes for the same window: early (1.0) then refined (3.0)
     totals = sorted(got.total.tolist())
     assert totals == [1.0, 3.0]
@@ -58,7 +58,7 @@ def test_count_trigger_sharded_equals_unsharded(spark, tmp_path):
             out = count_trigger_aggregate(
                 ts.stream(spark, SCHEMA), key="user", value_col="amount",
                 fire_every=2, accumulating=accumulating, **kw)
-            got = run_to_memory(out, "append").toPandas()
+            got = read_bounded(out, "append").toPandas()
             results.append(sorted(map(tuple, got.itertuples(index=False))))
         assert results[0] == results[1] == results[2]
         assert len(results[0]) == 3
@@ -79,7 +79,7 @@ def test_count_trigger_discarding_vs_accumulating(spark, tmp_path):
         out = count_trigger_aggregate(
             ts.stream(spark, SCHEMA), key="user", value_col="amount",
             fire_every=2, accumulating=accumulating)
-        got = run_to_memory(out, "append").toPandas().sort_values("pane_index")
+        got = read_bounded(out, "append").toPandas().sort_values("pane_index")
         assert got.pane_index.tolist() == [0, 1]
         assert got.n_in_pane.tolist() == [2, 2]
         assert got.total.tolist() == expected_totals

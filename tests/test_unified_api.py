@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from apache_beam_spark.operators.combine import Combine
 from apache_beam_spark.pipeline import Pipeline
-from apache_beam_spark.streaming import TestStream, run_to_memory
+from apache_beam_spark.streaming import TestStream, read_bounded
 from apache_beam_spark.windowing import FixedWindows
 
 SCHEMA = "user string, ts timestamp, amount double"
@@ -44,7 +44,7 @@ def test_same_pipeline_bounded_and_unbounded(spark, tmp_path):
     flat = lambda df: {(r["user"], str(r["window"]["start"])): r["total"]
                        for r in df.collect() if r["user"] != "z"}
     got_b = flat(bounded.df)
-    got_s = flat(run_to_memory(unbounded.df, "append"))
+    got_s = flat(read_bounded(unbounded.df, "append"))
     assert got_b == got_s  # closed windows agree exactly
     assert len(got_b) == 4
 
